@@ -12,6 +12,11 @@ top-k queries — /root/reference/src/main.py) in three calls:
 prebuilt {terms, conjunctive} dict. Loaded indexes serve shuffle-free:
 postings are re-arranged bucket-co-located once and cached, so each
 query is a term-pruned scan + per-bucket WAND kernel + k-row merge.
+The arranged relation has one partition per core
+(query/bm25.py bucket_arranged), so a query's Python kernel tasks run
+in one wave. load() also takes the term lexicon (term -> df) once, so
+building a query plan launches no Spark job: search() is lazy and
+.collect() runs the query's only jobs.
 """
 
 from __future__ import annotations
@@ -21,7 +26,12 @@ from pyspark.sql import functions as F
 
 from pisa_spark.corpus import parse_query
 from pisa_spark.index.lineage import build_index_resumable, load_index
-from pisa_spark.query.bm25 import bm25_topk_wand
+from pisa_spark.query.bm25 import bm25_topk_wand, bucket_arranged
+
+# load() holds the whole term lexicon (term -> df) in the driver when
+# the vocabulary has at most this many terms; a bigger one keeps the
+# per-query term-pruned df lookup (SearchEngine._term_dfs)
+LEXICON_MAX_TERMS = 500_000
 
 _BYTE_SUFFIX = {
     "b": 1, "k": 1024, "kb": 1024, "m": 1024**2, "mb": 1024**2,
@@ -66,9 +76,14 @@ class SearchEngine:
         # dense ranks; the persisted mapping resolves both directions
         self._reordered = False
         self._reorder_map_df: DataFrame | None = None
-        # term -> global df, filled lazily per query (0 = term absent).
-        # Valid for the lifetime of this loaded snapshot: the engine
-        # serves an immutable generation, so dfs cannot drift under it.
+        # term -> global df for the WHOLE vocabulary, taken once by
+        # load() (_load_lexicon); None = no lexicon (an engine built
+        # from a relation, or a vocabulary above LEXICON_MAX_TERMS),
+        # and then _df_cache is filled lazily per query instead (0 =
+        # term absent). Both are valid for the lifetime of this loaded
+        # snapshot: the engine serves an immutable generation, so dfs
+        # cannot drift under it.
+        self._lexicon: dict[str, int] | None = None
         self._df_cache: dict[str, int] = {}
         # term -> (df, cf) for the alternative-scorer kernel (QLD/PL2/
         # DPH need collection frequency); same snapshot-lifetime rule
@@ -130,15 +145,17 @@ class SearchEngine:
         The invariant is VERIFIED against the manifest here (file
         counts + sizes through that formula); a layout that violates it
         falls back to a per-query bucket repartition (correct, one
-        extra shuffle)."""
+        extra shuffle).
+
+        Every load also takes the term lexicon (_load_lexicon, one
+        aggregate job), so query planning needs no Spark job."""
         from pisa_spark.index.deletes import DELETES_TABLE
         from pisa_spark.index.lineage import POSTINGS_TABLE
         from pisa_spark.sources import catalog
 
         postings, stats = load_index(spark, index_root, as_of_ts=as_of_ts)
         if cache:
-            n_part = max(spark.sparkContext.defaultParallelism, 8)
-            arranged = postings.repartition(n_part, "bucket").cache()
+            arranged = bucket_arranged(postings).cache()
             eng = cls(spark, arranged, stats, pre_arranged=True)
         elif as_of_ts is not None:
             # the one-file-per-bucket layout check below reads the
@@ -178,7 +195,27 @@ class SearchEngine:
             eng._apply_tombstones(
                 catalog.read_table(spark, index_root, DELETES_TABLE)
             )
+        # from the BASE (as-of) postings: tombstones keep stale stats
+        eng._load_lexicon(postings)
         return eng
+
+    def _load_lexicon(self, postings: DataFrame) -> None:
+        """Take the term lexicon (term -> df = sum of n over the term's
+        blocks) in one aggregate over the column-pruned catalog scan,
+        collected through Arrow. The scan is the uncached relation on
+        purpose: aggregating the cached one would fill the cache here.
+        At most LEXICON_MAX_TERMS + 1 rows come back; a bigger
+        vocabulary keeps no lexicon and _term_dfs stays lazy."""
+        pdf = (
+            postings.groupBy("term")
+            .agg(F.sum("n").alias("df"))
+            .limit(LEXICON_MAX_TERMS + 1)
+            .toPandas()
+        )
+        if len(pdf) <= LEXICON_MAX_TERMS:
+            self._lexicon = dict(
+                zip(pdf["term"].tolist(), pdf["df"].tolist())
+            )
 
     @staticmethod
     def _effective_split_bytes(
@@ -324,12 +361,9 @@ class SearchEngine:
             span,
             with_positions="poss" in self._base_postings.columns,
         )
-        n_part = max(self.spark.sparkContext.defaultParallelism, 8)
-        self.postings = (
+        self.postings = bucket_arranged(
             with_tombstones(self._base_postings, tomb)
-            .repartition(n_part, "bucket")
-            .cache()
-        )
+        ).cache()
         self._pre_arranged = True
         # the quantized twin was derived from the base relation; drop
         # it so the next search_quantized re-derives WITH the
@@ -729,12 +763,15 @@ class SearchEngine:
         )
 
     def _term_dfs(self, terms) -> dict[str, int]:
-        """Global df per query term, from the driver-side cache; only
-        terms not seen before touch Spark (one term-pruned aggregate
-        over block metadata — PushedFilters keeps it to the queried
-        terms' blocks). Repeat vocabulary then serves with one fewer
-        Spark job per query, which at interactive latency is the
-        dominant per-query cost."""
+        """Global df per query term (0 = absent). A load()ed index
+        answers from the lexicon taken at load, with no Spark job. An
+        engine without one (built from a relation, or a vocabulary
+        above LEXICON_MAX_TERMS) looks up only terms not seen before:
+        one term-pruned aggregate over block metadata (PushedFilters
+        keeps it to the queried terms' blocks), cached in _df_cache for
+        the snapshot's lifetime."""
+        if self._lexicon is not None:
+            return {t: self._lexicon.get(t, 0) for t in terms}
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
             rows = (
@@ -2112,16 +2149,13 @@ class SearchEngine:
         if tiers is None:
             tiers = self._pruned_tiers = {}
         if keep_per_term not in tiers:
-            n_part = max(self.spark.sparkContext.defaultParallelism, 8)
-            tiers[keep_per_term] = (
+            tiers[keep_per_term] = bucket_arranged(
                 prune_postings(
                     self.postings, keep_per_term,
                     float(self.stats["avgdl"]),
                     n_docs=int(self.stats["n_docs"]),
                 )
-                .repartition(n_part, "bucket")
-                .cache()
-            )
+            ).cache()
         q = self._normalize([query])
         return bm25_topk_wand(
             tiers[keep_per_term],
@@ -2461,9 +2495,9 @@ class SearchEngine:
         return dict(self.stats)
 
     def term_stats(self, terms: list[str]) -> DataFrame:
-        """(term, df) for the given terms, through the same driver-side
-        cache the query path fills — terms already served cost no Spark
-        job, and the df definition cannot drift between the two."""
+        """(term, df) for the given terms, through the same lexicon /
+        driver-side cache the query path reads, so the df definition
+        cannot drift between the two."""
         dfs = self._term_dfs(set(terms))
         return self.spark.createDataFrame(
             [(t, d) for t, d in dfs.items() if d > 0],

@@ -75,6 +75,7 @@ from pisa_spark.index.quantized import (
     _decode_quant_blocks,
     idf_quantized,
 )
+from pisa_spark.query.bm25 import bucket_arranged
 
 SEG_SCHEMA = "bucket int, term string, imp int, n int, docs binary"
 
@@ -96,13 +97,9 @@ def impact_ordered_segments(
     the cached requantized twin of one); otherwise one bucket
     repartition arranges it — the same prologue every kernel uses.
     """
-    if pre_arranged:
-        arranged = quant_postings
-    else:
-        n_part = max(
-            quant_postings.sparkSession.sparkContext.defaultParallelism, 8
-        )
-        arranged = quant_postings.repartition(n_part, "bucket")
+    arranged = (
+        quant_postings if pre_arranged else bucket_arranged(quant_postings)
+    )
 
     def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         chunks = [pdf for pdf in pdf_iter if not pdf.empty]
@@ -292,13 +289,7 @@ def saat_topk(
         )
         for q in queries
     }
-    if pre_arranged:
-        arranged = pruned
-    else:
-        n_part = max(
-            segments.sparkSession.sparkContext.defaultParallelism, 8
-        )
-        arranged = pruned.repartition(n_part, "bucket")
+    arranged = pruned if pre_arranged else bucket_arranged(pruned)
     local = arranged.mapInPandas(
         _saat_kernel(queries, idf_q, selections, k), schema=_TOPK_SCHEMA
     )

@@ -14,6 +14,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Driver heap default: half the machine's physical memory (local
+    mode runs the executors inside the driver JVM, and the Python
+    workers and page cache need the other half)."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{phys // 2 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "pisa_spark",
     cores: int | None = None,
@@ -24,6 +32,7 @@ def get_spark(
     cores: parallelism for local mode; defaults to $SPARK_GRAFT_CPUS or '*'.
     shuffle_partitions: defaults to max(cores, 32) — on a real cluster this
     would be ~2-3x total executor cores; AQE coalesces small partitions.
+    The driver heap is $PISA_SPARK_DRIVER_MEM, else default_driver_memory().
     """
     env_cores = os.environ.get("SPARK_GRAFT_CPUS")
     if cores is None:
@@ -46,7 +55,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("PISA_SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("PISA_SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )

@@ -13,7 +13,9 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="pisa_spark_tests", cores=8)
+    # local[$SPARK_GRAFT_CPUS] (e.g. nproc) when set, local[8] otherwise
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or 8)
+    s = get_spark(app_name="pisa_spark_tests", cores=cores)
     yield s
     s.stop()
 

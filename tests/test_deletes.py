@@ -83,6 +83,29 @@ def test_persisted_deletes_survive_reload(spark, sf_dir, tmp_path):
     assert not set(victims) & got2
 
 
+def test_reload_with_deletes_keeps_stale_lexicon(spark, sf_dir, tmp_path):
+    """A load() that re-applies persisted tombstones takes its lexicon
+    from the BASE postings (stale stats), so surviving docs score
+    exactly as before the delete and the pseudo-term is no real term."""
+    root = str(tmp_path / "idx")
+    eng = SearchEngine.build(spark, sf_dir, root, n_buckets=8, wave_size=8)
+    before = {
+        r["doc_id"]: round(r["score"], 9)
+        for r in eng.search("data join", k=20).collect()
+    }
+    victims = sorted(before)[:3]
+    eng.delete_docs(victims)
+    fresh = SearchEngine.load(spark, root)
+    assert fresh._lexicon == eng._lexicon
+    assert DELETED_TERM not in fresh._lexicon
+    after = {
+        r["doc_id"]: round(r["score"], 9)
+        for r in fresh.search("data join", k=20).collect()
+    }
+    assert not set(victims) & set(after)
+    assert all(before[d] == s for d, s in after.items() if d in before)
+
+
 def test_deletes_compose_with_lifted_facades(eng):
     """search_scored / search_quantized / search_wildcard now exclude
     tombstoned docs (the __deleted__ pseudo-term rides their kernels'

@@ -145,17 +145,105 @@ def test_search_batch_reroutes_large_maxscore_batch(eng):
 
 
 def test_term_df_cache_populates_and_serves(eng, oracle):
+    """A load()ed engine serves dfs from the lexicon taken at load: the
+    lazy per-query cache stays empty, repeat searches stay oracle-
+    identical, and an absent term is 0 without breaking the query.
+    The lazy fill itself is covered by the fallback-path test below."""
+    assert eng._lexicon is not None
     eng._df_cache.clear()
     first = eng.search("data join", k=5).collect()
-    assert eng._df_cache.get("data", 0) > 0 and eng._df_cache.get("join", 0) > 0
-    # second search hits the cache (no state change) and stays correct
     again = eng.search("data join", k=5).collect()
     assert sorted((r["rank"], r["doc_id"]) for r in first) \
         == sorted((r["rank"], r["doc_id"]) for r in again) \
         == [(r, d) for r, d, _ in oracle.topk(["data", "join"], k=5)]
-    # absent terms cache as 0 and don't break the query
     rows = eng.search("zzzabsent", k=5).collect()
-    assert rows == [] and eng._df_cache["zzzabsent"] == 0
+    assert rows == [] and eng._term_dfs({"zzzabsent"}) == {"zzzabsent": 0}
+    assert eng._df_cache == {}
+
+
+def _job_ids(spark, group, fn):
+    """Run fn under its own job group; (result, ids of the Spark jobs
+    it launched) once the listener bus has caught up."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_loaded_search_launches_no_job_before_collect(spark, eng, oracle):
+    """Planning a query on a load()ed index needs no Spark job, even
+    for terms never queried before; .collect() runs the query."""
+    df, jobs = _job_ids(
+        spark, "plan-single", lambda: eng.search("merge scan zzzfresh", k=5)
+    )
+    assert jobs == []
+    _, jobs = _job_ids(
+        spark, "plan-batch",
+        lambda: eng.search_batch(["window data", "+data join"], k=5),
+    )
+    assert jobs == []
+    rows, jobs = _job_ids(spark, "exec-single", df.collect)
+    assert jobs, "the job-group count must see the query's own jobs"
+    assert sorted((r["rank"], r["doc_id"]) for r in rows) == [
+        (r, d) for r, d, _ in oracle.topk(["merge", "scan", "zzzfresh"], k=5)
+    ]
+
+
+def test_serving_relation_has_one_partition_per_core(spark, eng):
+    """The cached serving relation, and the one delete_docs re-arranges,
+    have defaultParallelism partitions: one wave of kernel tasks."""
+    cores = spark.sparkContext.defaultParallelism
+    assert eng.postings.rdd.getNumPartitions() == cores
+    fresh = SearchEngine.load(spark, eng._index_root)
+    victim = eng.search("data", k=1).collect()[0]["doc_id"]
+    fresh.delete_docs([victim], persist=False)
+    assert fresh.postings.rdd.getNumPartitions() == cores
+    assert victim not in {
+        r["doc_id"] for r in fresh.search("data", k=10).collect()
+    }
+    fresh.postings.unpersist()
+    fresh._base_postings.unpersist()
+
+
+def test_lexicon_matches_oracle_dfs(eng, oracle):
+    """The load-time lexicon holds exactly the oracle's dfs — head,
+    mid-frequency and absent terms included."""
+    ranked = sorted(oracle.df, key=lambda t: (-oracle.df[t], t))
+    head, mid = ranked[0], ranked[len(ranked) // 2]
+    assert eng._term_dfs({head, mid, "zzzabsent"}) == {
+        head: oracle.df[head], mid: oracle.df[mid], "zzzabsent": 0,
+    }
+    assert eng._lexicon == dict(oracle.df)
+
+
+def test_lazy_df_path_without_lexicon(spark, eng, oracle, monkeypatch):
+    """A vocabulary above the lexicon cap, and an engine built straight
+    from a relation, keep the lazy per-query df lookup: unseen terms
+    fill _df_cache (absent ones as 0) and answers stay oracle-
+    identical."""
+    import pisa_spark.engine as engine_mod
+
+    monkeypatch.setattr(
+        engine_mod, "LEXICON_MAX_TERMS", len(oracle.df) - 1
+    )
+    capped = SearchEngine.load(spark, eng._index_root, cache=False)
+    direct = SearchEngine(spark, eng.postings, eng.stats, pre_arranged=True)
+    for e in (capped, direct):
+        assert e._lexicon is None and e._df_cache == {}
+        for q, conj in (("data join", False), ("+window merge scan", True)):
+            terms = [t.lstrip("+") for t in q.split()]
+            rows = e.search(q, k=10).collect()
+            assert sorted((r["rank"], r["doc_id"]) for r in rows) == [
+                (r, d) for r, d, _ in oracle.topk(terms, k=10, conjunctive=conj)
+            ]
+        assert e._df_cache["data"] == oracle.df["data"] > 0
+        assert e._df_cache["join"] == oracle.df["join"] > 0
+        assert e.search("zzzabsent", k=5).collect() == []
+        assert e._df_cache["zzzabsent"] == 0
 
 
 def test_search_scored_off_loaded_index(eng, oracle, spark, sf_dir):

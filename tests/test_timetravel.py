@@ -98,6 +98,34 @@ def test_engine_time_travel_serves_old_index(spark, sf_dir, tmp_path):
     )
 
 
+def test_engine_time_travel_lexicon_is_as_of(spark, sf_dir, tmp_path):
+    """A time-travel load takes its lexicon from the same as-of
+    postings it serves: dfs count only the docs indexed back then."""
+    from tests.oracle import load_corpus
+
+    root = str(tmp_path / "idx_lex")
+    d_all = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    build_index_resumable(
+        spark, sf_dir, root,
+        docs_df=d_all.filter(F.col("doc_id") < 50),
+        docs_per_bucket=64, wave_size=8,
+    )
+    ts1 = time.time()
+    time.sleep(0.05)
+    build_index_resumable(
+        spark, sf_dir, root, docs_df=d_all, docs_per_bucket=64, wave_size=8
+    )
+    old_df: dict[str, int] = {}
+    for d, toks in load_corpus(sf_dir).items():
+        if d < 50:
+            for t in set(toks):
+                old_df[t] = old_df.get(t, 0) + 1
+    eng_old = SearchEngine.load(spark, root, cache=False, as_of_ts=ts1)
+    assert eng_old._lexicon == old_df
+    eng_now = SearchEngine.load(spark, root, cache=False)
+    assert eng_now._lexicon["data"] > eng_old._lexicon["data"]
+
+
 def test_partitioned_schema_evolution_add_column(spark, tmp_path):
     """Add-column evolution (Iceberg-compatible): a partition rewritten
     with an extra column unions with older generations, which read
