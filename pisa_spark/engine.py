@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pisa_spark.corpus import parse_query
 from pisa_spark.index.lineage import build_index_resumable, load_index
 from pisa_spark.query.bm25 import bm25_topk_wand, bucket_arranged
+from pisa_spark.session import local_frame
 
 # load() holds the whole term lexicon (term -> df) in the driver when
 # the vocabulary has at most this many terms; a bigger one keeps the
@@ -263,8 +264,8 @@ class SearchEngine:
         if isinstance(doc_ids, DataFrame):
             ids = doc_ids.select(F.col("doc_id").cast("long"))
         else:
-            ids = self.spark.createDataFrame(
-                [(int(i),) for i in doc_ids], "doc_id long"
+            ids = local_frame(
+                self.spark, [(int(i),) for i in doc_ids], "doc_id long"
             )
         if persist:
             if self._index_root is None:
@@ -2521,10 +2522,18 @@ class FederatedEngine:
     def __init__(
         self, spark: SparkSession, members: list, pre_arranged: bool = False,
         names: list[str] | None = None,
+        lexicons: list[dict[str, int] | None] | None = None,
     ):
         self.spark = spark
         self.members = members  # [(postings, stats)]
         self._pre_arranged = pre_arranged
+        # per-member term -> df lexicons (load() passes the members'
+        # own); None for a member = per-query df lookup for it
+        self._lexicons = (
+            list(lexicons) if lexicons is not None else [None] * len(members)
+        )
+        if len(self._lexicons) != len(members):
+            raise ValueError("lexicons must match members 1:1")
         # shard names for selective search; default to member ordinals
         self.names = (
             list(names)
@@ -2538,14 +2547,18 @@ class FederatedEngine:
     def load(
         cls, spark: SparkSession, roots: list[str], cache: bool = True
     ) -> "FederatedEngine":
-        members, arranged = [], []
+        members, arranged, lexicons = [], [], []
         for root in roots:
             eng = SearchEngine.load(spark, root, cache=cache)
             members.append((eng.postings, eng.stats))
             arranged.append(eng._pre_arranged)
+            lexicons.append(eng._lexicon)
         # the bucket-co-location invariant must hold for EVERY member
         # before the per-query repartition can be skipped
-        return cls(spark, members, pre_arranged=all(arranged), names=roots)
+        return cls(
+            spark, members, pre_arranged=all(arranged), names=roots,
+            lexicons=lexicons,
+        )
 
     def search(self, query, k: int = 10, two_phase: bool = False):
         return self.search_batch([query], k=k, two_phase=two_phase)
@@ -2580,7 +2593,7 @@ class FederatedEngine:
             )
         return bm25_topk_federated(
             self.members, norm, k=k, two_phase=two_phase,
-            pre_arranged=self._pre_arranged,
+            pre_arranged=self._pre_arranged, lexicons=self._lexicons,
         )
 
     def search_selective(

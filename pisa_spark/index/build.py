@@ -37,6 +37,16 @@ so scoring is self-contained — no 10^12-row doc_len side join at query
 time; term document frequency is recoverable as sum(n) over a term's
 blocks, so no df side table is needed either.
 
+Encoding is one segmented NumPy pass per Arrow batch (_encode_blocks),
+not a loop over groups and blocks: group starts come from (bucket,
+term) changes in the partition-sorted batch, block starts fall every
+block_size postings within a group, and each payload stream (doc-id
+deltas, tf-1, doc_len, positions) is varint-encoded once for the whole
+batch and sliced per block. The bytes equal the per-block codec spec,
+so the stored format does not depend on how a build batched its rows.
+The encode stage runs one partition per core (session.
+task_wave_partitions): a single wave of Python tasks.
+
 Reference semantics carried over: posting-list construction is the
 Spark-native analog of the reference's per-user neighbor lists
 (groupby collect, /root/reference/src/models/Dataloader.py:44-46);
@@ -56,6 +66,7 @@ from pyspark.sql import functions as F
 
 from pisa_spark.corpus import tokens_col
 from pisa_spark.index import codec
+from pisa_spark.session import task_wave_partitions
 
 BLOCK_SIZE = 128
 BM25_K1 = 0.9
@@ -120,6 +131,17 @@ def corpus_stats(tokens_df: DataFrame) -> DataFrame:
     )
 
 
+def build_stats(tokens_df: DataFrame):
+    """Every global stat a build needs in ONE aggregate, collected: a
+    Row (n_docs, avgdl, total_terms, max_doc)."""
+    return tokens_df.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.avg("doc_len").alias("avgdl"),
+        F.sum("doc_len").alias("total_terms"),
+        F.max("doc_id").alias("max_doc"),
+    ).collect()[0]
+
+
 def term_document_frequency(tf_df: DataFrame) -> DataFrame:
     """(term, df) — document frequency per term."""
     return tf_df.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -164,56 +186,90 @@ def bm25_tf_factor(tf, dl, avgdl: float):
     )
 
 
-def _encode_positions(pos_lists: list) -> bytes:
-    """Per-posting position arrays -> one varint byte string: each
-    posting's first position absolute, later ones diff-1 (strictly
-    increasing). Segment lengths = tfs, so decode needs no counts."""
-    deltas = []
-    for p in pos_lists:
-        a = np.asarray(p, dtype=np.int64)
-        d = a.copy()
-        d[1:] = np.diff(a) - 1
-        deltas.append(d)
-    return codec.varint_encode(
-        np.concatenate(deltas).astype(np.uint64) if deltas else
-        np.empty(0, np.uint64)
-    )
+_IN_COLS = ["bucket", "term", "doc_id", "tf", "doc_len"]
 
 
-def _encode_one_group(
-    out: dict[str, list],
-    g: pd.DataFrame,
-    block_size: int,
-    with_positions: bool = False,
-) -> None:
-    bucket = int(g["bucket"].iloc[0])
-    term = g["term"].iloc[0]
-    g = g.sort_values("doc_id")
-    doc_ids = g["doc_id"].to_numpy(np.int64)
-    tfs = g["tf"].to_numpy(np.int64)
-    dls = g["doc_len"].to_numpy(np.int64)
-    for bi in range(0, len(doc_ids), block_size):
-        sl = slice(bi, bi + block_size)
-        d = doc_ids[sl]
-        out["bucket"].append(bucket)
-        out["term"].append(term)
-        out["block_idx"].append(bi // block_size)
-        out["first_doc"].append(int(d[0]))
-        out["max_doc"].append(int(d[-1]))
-        out["n"].append(int(d.size))
+def _block_payloads(
+    values: np.ndarray, starts: np.ndarray, ends: np.ndarray
+) -> list[bytes]:
+    """Varint-encode one value stream for a whole batch in one call, then
+    cut it into per-block byte strings: a block's bytes are the summed
+    varint sizes of its values [starts[i], ends[i])."""
+    buf, sizes = codec.varint_encode_sized(values.astype(np.uint64))
+    off = np.concatenate(([0], np.cumsum(sizes)))
+    data = buf.tobytes()
+    return [
+        data[a:b] for a, b in zip(off[starts].tolist(), off[ends].tolist())
+    ]
+
+
+def _encode_blocks(
+    cols: dict[str, np.ndarray], block_size: int, with_positions: bool
+) -> pd.DataFrame:
+    """Segmented block encoder: postings sorted by (bucket, term,
+    doc_id), whole groups only -> one row per <=block_size block, in a
+    single vectorised pass over the batch (no per-group or per-block
+    Python beyond slicing the encoded byte streams).
+
+    Group starts are the (bucket, term) changes; block starts fall every
+    block_size postings within a group. Three value streams cover the
+    batch — doc-id deltas (absolute at each block start, diff-1 after),
+    tf-1 and doc_len — each varint-encoded once and sliced per block.
+    The bytes equal the per-block codec spec (codec.delta_encode_docids,
+    codec.encode_payload, codec.encode_positions), because varints
+    concatenate losslessly."""
+    bucket, term = cols["bucket"], cols["term"]
+    doc = cols["doc_id"].astype(np.int64)
+    tf = cols["tf"].astype(np.int64)
+    dl = cols["doc_len"].astype(np.int64)
+    n = doc.size
+    new_group = np.ones(n, dtype=bool)
+    new_group[1:] = (bucket[1:] != bucket[:-1]) | (term[1:] != term[:-1])
+    g_start = np.flatnonzero(new_group)
+    rank = np.arange(n) - np.repeat(g_start, np.diff(np.append(g_start, n)))
+    b_start = np.flatnonzero(rank % block_size == 0)
+    b_end = np.append(b_start[1:], n)
+
+    delta = np.empty(n, dtype=np.int64)
+    delta[1:] = np.diff(doc) - 1
+    inner = np.ones(n, dtype=bool)
+    inner[b_start] = False
+    if (delta[inner] < 0).any():
+        raise ValueError("doc_ids must be strictly increasing")
+    delta[b_start] = doc[b_start]
+    if (tf < 1).any() or (dl < 0).any():
+        raise ValueError("payload values must be non-negative after bias")
+
+    out = {
+        "bucket": bucket[b_start],
+        "term": term[b_start],
+        "block_idx": rank[b_start] // block_size,
+        "first_doc": doc[b_start],
+        "max_doc": doc[b_end - 1],
+        "n": b_end - b_start,
         # corner stats: exact ints, bounds derived query-time under the
         # CURRENT avgdl/df (see bm25_tf_factor doc)
-        out["tf_max"].append(int(tfs[sl].max()))
-        out["tf_min"].append(int(tfs[sl].min()))
-        out["dl_min"].append(int(dls[sl].min()))
-        out["dl_max"].append(int(dls[sl].max()))
-        out["docs"].append(codec.delta_encode_docids(d))
-        out["tfs"].append(codec.encode_payload(tfs[sl], minus_one=True))
-        out["dls"].append(codec.encode_payload(dls[sl]))
-        if with_positions:
-            out["poss"].append(
-                _encode_positions(list(g["positions"].iloc[sl]))
-            )
+        "tf_max": np.maximum.reduceat(tf, b_start),
+        "tf_min": np.minimum.reduceat(tf, b_start),
+        "dl_min": np.minimum.reduceat(dl, b_start),
+        "dl_max": np.maximum.reduceat(dl, b_start),
+        "docs": _block_payloads(delta, b_start, b_end),
+        "tfs": _block_payloads(tf - 1, b_start, b_end),
+        "dls": _block_payloads(dl, b_start, b_end),
+    }
+    if with_positions:
+        # one flat position stream; posting i owns values
+        # [p_off[i], p_off[i+1]) — first absolute, later ones diff-1
+        pos = cols["positions"]
+        p_len = np.fromiter((len(p) for p in pos), dtype=np.int64, count=n)
+        p_off = np.concatenate(([0], np.cumsum(p_len)))
+        flat = np.concatenate(list(pos)).astype(np.int64)
+        p_delta = np.empty(flat.size, dtype=np.int64)
+        p_delta[1:] = np.diff(flat) - 1
+        firsts = p_off[:-1][p_len > 0]
+        p_delta[firsts] = flat[firsts]
+        out["poss"] = _block_payloads(p_delta, p_off[b_start], p_off[b_end])
+    return pd.DataFrame(out)
 
 
 def _encode_groups(
@@ -224,38 +280,35 @@ def _encode_groups(
     """mapInPandas kernel: rows (bucket, term, doc_id, tf, doc_len)
     sorted by (bucket, term, doc_id) within the partition -> one row per
     <=block_size posting block, payloads delta+varint compressed, with
-    exact (tf, dl) corner stats for query-time WAND bounds.
+    exact (tf, dl) corner stats for query-time WAND bounds. Each Arrow
+    batch is encoded in one segmented pass (_encode_blocks).
 
     Arrow may split one (bucket, term) group across input batches, so
     the tail group of every batch is carried over and prepended to the
     next batch (partition-sorted input makes groups contiguous). Memory
-    stays O(one group) = O(docs in one bucket), which the bucket span
-    bounds by construction.
+    stays O(batch + one group) = O(docs in one bucket), which the bucket
+    span bounds by construction.
     """
-    cols = _OUT_COLS + ["poss"] if with_positions else _OUT_COLS
-    leftover: pd.DataFrame | None = None
+    names = _IN_COLS + ["positions"] if with_positions else _IN_COLS
+    carry: dict[str, np.ndarray] | None = None
     for pdf in pdf_iter:
         if pdf.empty:
             continue
-        if leftover is not None:
-            pdf = pd.concat([leftover, pdf], ignore_index=True)
-            leftover = None
+        cols = {c: pdf[c].to_numpy() for c in names}
+        if carry is not None:
+            cols = {c: np.concatenate((carry[c], cols[c])) for c in names}
         # hold back the final group — it may continue in the next batch
-        last_b = pdf["bucket"].iloc[-1]
-        last_t = pdf["term"].iloc[-1]
-        tail_mask = (pdf["bucket"] == last_b) & (pdf["term"] == last_t)
-        leftover = pdf[tail_mask]
-        head = pdf[~tail_mask]
-        if head.empty:
-            continue
-        out: dict[str, list] = {c: [] for c in cols}
-        for _, g in head.groupby(["bucket", "term"], sort=False):
-            _encode_one_group(out, g, block_size, with_positions)
-        yield pd.DataFrame(out)
-    if leftover is not None and not leftover.empty:
-        out = {c: [] for c in cols}
-        _encode_one_group(out, leftover, block_size, with_positions)
-        yield pd.DataFrame(out)
+        b, t = cols["bucket"], cols["term"]
+        other = np.flatnonzero((b != b[-1]) | (t != t[-1]))
+        tail = int(other[-1]) + 1 if other.size else 0
+        carry = {c: v[tail:] for c, v in cols.items()}
+        if tail:
+            yield _encode_blocks(
+                {c: v[:tail] for c, v in cols.items()}, block_size,
+                with_positions,
+            )
+    if carry is not None:
+        yield _encode_blocks(carry, block_size, with_positions)
 
 
 def build_postings(
@@ -324,9 +377,9 @@ def _postings_from_tf(
     tf_b = tf.withColumn("bucket", (F.col("doc_id") / F.lit(span)).cast("int"))
     # explicit partition count: the encode stage is the Python-side hot
     # path — AQE must not coalesce it below the core count (it would,
-    # for small shuffle volumes, and serialize the Arrow kernels)
-    spark = tf.sparkSession
-    n_part = max(2 * spark.sparkContext.defaultParallelism, 8)
+    # for small shuffle volumes, and serialize the Arrow kernels), and
+    # more than one partition per core adds a second wave of tasks
+    n_part = task_wave_partitions(tf.sparkSession)
     arranged = tf_b.repartition(n_part, "bucket", "term").sortWithinPartitions(
         "bucket", "term", "doc_id"
     )
@@ -394,13 +447,7 @@ def build_index_dataframes(
             "tokens", F.concat("tokens", *extra)
         ).select("doc_id", "tokens", "doc_len")
     toks = toks.cache()
-    # one pass collects every global stat the build needs
-    stats_row = toks.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg("doc_len").alias("avgdl"),
-        F.sum("doc_len").alias("total_terms"),
-        F.max("doc_id").alias("max_doc"),
-    ).collect()[0]
+    stats_row = build_stats(toks)
     stats = {
         "n_docs": stats_row["n_docs"],
         "avgdl": float(stats_row["avgdl"]),

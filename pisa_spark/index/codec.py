@@ -25,32 +25,38 @@ import numpy as np
 _MAX_VARINT_BYTES = 10  # enough for uint64
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-encode a uint64 array. Vectorized over the array; the only
-    Python loop is over byte positions (<=10 iterations total)."""
+def varint_encode_sized(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128-encode a uint64 array -> (uint8 byte stream, per-value
+    byte counts). The counts let a caller slice one stream encoded for
+    many segments (build.py's segmented block encoder) at segment
+    boundaries: segment bytes = sum of its values' counts."""
     v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    # bytes needed per value: ceil(bitlen/7), min 1
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    # bit length via shifting loop over 10 positions max
-    for shift in range(0, 64, 7):
-        nbits = np.where(tmp > 0, (shift // 7) + 1, nbits)
+    # bytes per value: one per started 7-bit group, min 1
+    nbytes = np.ones(v.shape, dtype=np.int64)
+    tmp = v >> np.uint64(7)
+    for k in range(2, _MAX_VARINT_BYTES + 1):
+        more = tmp > 0
+        if not more.any():
+            break
+        nbytes[more] = k
         tmp >>= np.uint64(7)
-    nbytes = np.maximum(nbits, 1)
-    total = int(nbytes.sum())
-    out = np.zeros(total, dtype=np.uint8)
+    out = np.zeros(int(nbytes.sum()), dtype=np.uint8)
+    if v.size == 0:
+        return out, nbytes
     # output offset of each value's first byte
     starts = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
     for k in range(int(nbytes.max())):
         mask = nbytes > k
-        if not mask.any():
-            break
         chunk = ((v[mask] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
         cont = (nbytes[mask] > k + 1).astype(np.uint8) << 7
         out[starts[mask] + k] = chunk | cont
-    return out.tobytes()
+    return out, nbytes
+
+
+def varint_encode(values: np.ndarray) -> bytes:
+    """LEB128-encode a uint64 array. Vectorized over the array; the only
+    Python loop is over byte positions (<=10 iterations total)."""
+    return varint_encode_sized(values)[0].tobytes()
 
 
 def varint_decode(data: bytes) -> np.ndarray:
@@ -548,6 +554,23 @@ def encode_payload(values: np.ndarray, minus_one: bool = False) -> bytes:
     if (v < 0).any():
         raise ValueError("payload values must be non-negative after bias")
     return varint_encode(v.astype(np.uint64))
+
+
+def encode_positions(pos_lists) -> bytes:
+    """The ``poss`` payload of one block: each posting's within-doc
+    token positions (strictly increasing) with the first absolute and
+    later ones diff-1, concatenated in posting order. Segment lengths
+    are the block's decoded tfs, so decoding needs no counts."""
+    deltas = []
+    for p in pos_lists:
+        a = np.asarray(p, dtype=np.int64)
+        d = a.copy()
+        d[1:] = np.diff(a) - 1
+        deltas.append(d)
+    return varint_encode(
+        np.concatenate(deltas).astype(np.uint64) if deltas else
+        np.empty(0, np.uint64)
+    )
 
 
 def decode_payload(data: bytes, minus_one: bool = False) -> np.ndarray:

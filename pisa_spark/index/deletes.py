@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pisa_spark.index.build import BLOCK_SIZE, build_postings
+from pisa_spark.session import local_frame
 
 DELETED_TERM = "__deleted__"
 DELETES_TABLE = "deletes"
@@ -55,9 +56,7 @@ def tombstone_postings(
     else:
         if spark is None:
             raise ValueError("pass spark= when deletes is a plain iterable")
-        ids = spark.createDataFrame(
-            [(int(i),) for i in deletes], "doc_id long"
-        )
+        ids = local_frame(spark, [(int(i),) for i in deletes], "doc_id long")
     toks = ids.distinct().select(
         "doc_id",
         F.array(F.lit(DELETED_TERM)).alias("tokens"),

@@ -13,8 +13,17 @@ materialization (/root/reference/src/helpers/Reader.py:148-178):
 * After a wave's data commit, one lineage row per bucket is appended to
   the ``lineage`` table: (bucket, status, docs, postings, blocks,
   bytes_out, wall_s, wave). A killed build leaves earlier waves
-  committed + recorded; rerun left-anti-joins pending buckets against
-  committed lineage and processes only those.
+  committed + recorded; rerun processes only the buckets still pending.
+* Change detection is ONE pass: the current per-bucket (docs,
+  fingerprint) state full-outer-joins the latest lineage into rows
+  (bucket, pending|stale, docs, fp), streamed to the driver in sorted,
+  bounded pages. Stale buckets are pruned page by page; pending ones
+  are chunked into waves, and each wave's lineage rows take docs and
+  fp from its own change rows — no per-wave re-aggregation.
+* Global stats come from one aggregate; driver-made rows (lineage,
+  pruned, corpus_stats) are one-partition Arrow frames
+  (session.local_frame), so each commit writes one file and runs no
+  Python task.
 * ``docs_per_s`` / ``postings_per_s`` derive from the same rows — the
   lineage table doubles as the metrics table (SURVEY T19).
 
@@ -33,13 +42,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pisa_spark.corpus import stem_s, tokens_col
-from pisa_spark.index.build import BLOCK_SIZE, build_postings, corpus_stats
+from pisa_spark.index.build import BLOCK_SIZE, build_postings, build_stats
+from pisa_spark.session import local_frame
 from pisa_spark.sources import catalog
 
 LINEAGE_SCHEMA = (
     "bucket int, status string, docs long, postings long, blocks long, "
     "bytes_out long, wall_s double, wave int, ts double, fp long"
 )
+STATS_SCHEMA = "n_docs long, avgdl double, total_terms long, span long"
 
 POSTINGS_TABLE = "postings"
 LINEAGE_TABLE = "lineage"
@@ -66,30 +77,76 @@ def latest_lineage_df(spark: SparkSession, index_root: str) -> DataFrame | None:
 
 def latest_lineage(spark: SparkSession, index_root: str) -> dict[int, dict]:
     """Collected form of latest_lineage_df — small-scale/test helper;
-    the build itself only collects pending/stale bucket IDS."""
+    the build itself only streams the changed buckets' rows
+    (_bucket_changes) in bounded pages."""
     df = latest_lineage_df(spark, index_root)
     if df is None:
         return {}
     return {r["bucket"]: r.asDict() for r in df.collect()}
 
 
-# Driver-side paging bound for bucket-id streams. At the 10^12-doc
-# design point (10^7 buckets at 100k docs/bucket) collecting every
-# pending id at once would put ~10^7 rows on the driver; streaming
-# sorted pages through toLocalIterator caps resident ids at
+# Driver-side paging bound for the bucket-change stream. At the
+# 10^12-doc design point (10^7 buckets at 100k docs/bucket) collecting
+# every pending bucket at once would put ~10^7 rows on the driver;
+# streaming sorted pages through toLocalIterator caps resident rows at
 # max(page_rows, one sort partition) regardless of bucket count.
 DRIVER_PAGE_ROWS = 1_000_000
 
 
-def _bucket_id_pages(df: DataFrame, page_rows: int = DRIVER_PAGE_ROWS):
-    """Yield the ``bucket`` column of ``df`` as sorted, bounded pages.
+def _bucket_changes(
+    toks: DataFrame, span: int, latest: DataFrame | None
+) -> DataFrame:
+    """Classify buckets in ONE pass: (bucket, kind, cur_docs, cur_fp)
+    for every bucket that needs work, computed IN SPARK as a full outer
+    join of the current per-bucket state against the latest lineage.
+
+    kind = 'pending': the bucket holds docs now and has no committed
+    lineage row, or its content FINGERPRINT (xor of the docs' doc_fp)
+    differs from the committed row's — growth, repair and in-place
+    edits alike. kind = 'stale': a committed bucket that held docs and
+    now holds none. cur_docs / cur_fp are what a rebuilt bucket's
+    lineage row records, so the waves need no second aggregate."""
+    cur = toks.groupBy(
+        ((F.col("doc_id") / span).cast("int")).alias("bucket")
+    ).agg(
+        F.count(F.lit(1)).alias("cur_docs"),
+        F.bit_xor("doc_fp").alias("cur_fp"),
+    )
+    if latest is None:
+        return cur.select(
+            "bucket", F.lit("pending").alias("kind"), "cur_docs", "cur_fp"
+        )
+    lat = latest.select("bucket", "status", F.col("fp").alias("old_fp"), "docs")
+    committed = F.col("status") == "committed"
+    kind = F.when(
+        F.col("cur_docs").isNotNull()
+        & (
+            F.col("status").isNull()
+            | ~committed
+            | (F.col("old_fp") != F.col("cur_fp"))
+        ),
+        F.lit("pending"),
+    ).when(
+        F.col("cur_docs").isNull() & committed & (F.col("docs") > 0),
+        F.lit("stale"),
+    )
+    return (
+        cur.join(lat, "bucket", "full_outer")
+        .select("bucket", kind.alias("kind"), "cur_docs", "cur_fp")
+        .filter(F.col("kind").isNotNull())
+    )
+
+
+def _change_pages(df: DataFrame, page_rows: int = DRIVER_PAGE_ROWS):
+    """Yield the (bucket, kind, cur_docs, cur_fp) rows of
+    _bucket_changes as bucket-sorted, bounded pages of tuples.
 
     The range-partitioned sort keeps global order across pages, so
     consumers chunking pages into waves reproduce exactly the waves a
     full sorted collect would have produced."""
-    page: list[int] = []
-    for r in df.select("bucket").orderBy("bucket").toLocalIterator():
-        page.append(r["bucket"])
+    page: list[tuple] = []
+    for r in df.orderBy("bucket").toLocalIterator():
+        page.append(tuple(r))
         if len(page) >= page_rows:
             yield page
             page = []
@@ -98,9 +155,10 @@ def _bucket_id_pages(df: DataFrame, page_rows: int = DRIVER_PAGE_ROWS):
 
 
 def _waves_from_pages(pages, wave_size: int):
-    """Chunk a stream of sorted id pages into wave_size waves, carrying
-    remainders across page boundaries — wave composition is identical
-    to slicing the fully-collected sorted list."""
+    """Chunk a stream of bucket-sorted pages (ids or per-bucket rows)
+    into wave_size waves, carrying remainders across page boundaries —
+    wave composition is identical to slicing the fully-collected sorted
+    list."""
     buf: list[int] = []
     for page in pages:
         buf.extend(page)
@@ -266,83 +324,60 @@ def build_index_resumable(
         ).select("doc_id", "tokens", "doc_len", "doc_fp")
     toks = toks.cache()
     try:
-        stats_row = corpus_stats(toks).collect()[0]
+        stats_row = build_stats(toks)
         n_docs = int(stats_row["n_docs"])
         avgdl = float(stats_row["avgdl"])
-        max_doc = toks.agg(F.max("doc_id")).collect()[0][0]
+        max_doc = stats_row["max_doc"]
         if docs_per_bucket is not None:
             span = int(docs_per_bucket)
             n_buckets = math.ceil((max_doc + 1) / span)
         else:
             span = max(1, math.ceil((max_doc + 1) / n_buckets))
 
-        # pending = never committed OR content fingerprint changed
-        # (growth/repair/in-place edits). The comparison happens IN
-        # SPARK (join of per-bucket state against latest lineage);
-        # only the pending/stale bucket IDS reach the driver, and only
-        # in bounded sorted pages (driver_page_rows at a time) — the
-        # driver's resident-id budget is page-sized at any bucket count.
-        cur = toks.groupBy(
-            ((F.col("doc_id") / span).cast("int")).alias("bucket")
-        ).agg(
-            F.count(F.lit(1)).alias("cur_docs"),
-            F.bit_xor("doc_fp").alias("cur_fp"),
+        changes = _bucket_changes(
+            toks, span, latest_lineage_df(spark, index_root)
         )
-        latest = latest_lineage_df(spark, index_root)
-        if latest is None:
-            pending_df = cur.select("bucket")
-            stale_df = None
-        else:
-            lat = latest.select(
-                "bucket", "status", F.col("fp").alias("old_fp"), "docs"
-            )
-            joined = cur.join(lat, "bucket", "left")
-            pending_df = joined.filter(
-                F.col("status").isNull()
-                | (F.col("status") != "committed")
-                | (F.col("old_fp") != F.col("cur_fp"))
-            ).select("bucket")
-            # buckets that previously held docs but now hold none
-            # (corpus shrank or ids vanished): dynamic overwrite writes
-            # no rows for them, so their stale partitions are pruned
-            # explicitly and a 'pruned' lineage row records it (Iceberg
-            # analog: delete-files commit for the partition)
-            stale_df = (
-                lat.filter(
-                    (F.col("status") == "committed") & (F.col("docs") > 0)
-                )
-                .join(cur, "bucket", "left_anti")
-                .select("bucket")
-            )
-        if stale_df is not None:
-            # atomic manifest commit without the dropped partitions —
-            # no physical delete on the commit path (Iceberg
-            # delete-files semantics; orphans are GC'd out-of-band).
-            # Paged: each page is its own atomic commit; a crash
-            # mid-stream leaves the rest still detected as stale next
-            # run (same idempotent rule as bucket rebuild).
-            for stale_page in _bucket_id_pages(stale_df, driver_page_rows):
-                catalog.delete_partitions(
-                    index_root, POSTINGS_TABLE, stale_page
-                )
-                catalog.write_table(
-                    spark.createDataFrame(
-                        [
-                            (b, "pruned", 0, 0, 0, 0, 0.0, -1, time.time(), 0)
-                            for b in stale_page
-                        ],
-                        LINEAGE_SCHEMA,
-                    ),
-                    index_root,
-                    LINEAGE_TABLE,
-                    mode="append",
-                )
-        waves = _waves_from_pages(
-            _bucket_id_pages(pending_df, driver_page_rows), wave_size
-        )
+
+        def pending_pages():
+            # stale buckets (previously held docs, now hold none:
+            # corpus shrank or ids vanished): dynamic overwrite writes
+            # no rows for them, so their partitions are pruned
+            # explicitly and a 'pruned' lineage row records it — an
+            # atomic manifest commit without the dropped partitions, no
+            # physical delete on the commit path (Iceberg delete-files
+            # semantics; orphans are GC'd out-of-band). Each page is its
+            # own commit; a crash mid-stream leaves the rest still
+            # detected as stale next run.
+            for page in _change_pages(changes, driver_page_rows):
+                stale = [r[0] for r in page if r[1] == "stale"]
+                if stale:
+                    catalog.delete_partitions(
+                        index_root, POSTINGS_TABLE, stale
+                    )
+                    now = time.time()
+                    catalog.write_table(
+                        local_frame(
+                            spark,
+                            [
+                                (b, "pruned", 0, 0, 0, 0, 0.0, -1, now, 0)
+                                for b in stale
+                            ],
+                            LINEAGE_SCHEMA,
+                        ),
+                        index_root,
+                        LINEAGE_TABLE,
+                        mode="append",
+                    )
+                yield [
+                    (r[0], r[2], r[3]) for r in page if r[1] == "pending"
+                ]
+
         waves_run = 0
-        for wave_no, wave in enumerate(waves):
+        for wave_no, wave_rows in enumerate(
+            _waves_from_pages(pending_pages(), wave_size)
+        ):
             t0 = time.perf_counter()
+            wave = [r[0] for r in wave_rows]
             lo = min(wave) * span
             hi = (max(wave) + 1) * span
             # bucket ranges are contiguous per wave only if buckets are;
@@ -385,44 +420,36 @@ def build_index_resumable(
                 # (one varint per token occurrence) — bytes_out must
                 # include it or positional index sizes underreport
                 payload = payload + F.sum(F.octet_length("poss"))
-            per_bucket = (
-                written.groupBy("bucket")
+            stats_by_bucket = {
+                r["bucket"]: r
+                for r in written.groupBy("bucket")
                 .agg(
                     F.sum("n").alias("postings"),
                     F.count(F.lit(1)).alias("blocks"),
                     payload.alias("bytes_out"),
                 )
                 .collect()
-            )
-            wave_state = {
-                r["bucket"]: (r["cnt"], r["fp"])
-                for r in wave_toks.groupBy(
-                    ((F.col("doc_id") / span).cast("int")).alias("bucket")
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    F.bit_xor("doc_fp").alias("fp"),
-                )
-                .collect()
             }
-            stats_by_bucket = {r["bucket"]: r for r in per_bucket}
-            lineage_rows = [
-                (
+            # docs and fp come from the wave's own change rows: the
+            # detection pass already aggregated them per bucket
+            now = time.time()
+            lineage_rows = []
+            for b, docs, fp in wave_rows:
+                st = stats_by_bucket.get(b)
+                lineage_rows.append((
                     b,
                     "committed",
-                    int(wave_state.get(b, (0, 0))[0]),
-                    int(stats_by_bucket[b]["postings"]) if b in stats_by_bucket else 0,
-                    int(stats_by_bucket[b]["blocks"]) if b in stats_by_bucket else 0,
-                    int(stats_by_bucket[b]["bytes_out"]) if b in stats_by_bucket else 0,
+                    int(docs),
+                    int(st["postings"]) if st else 0,
+                    int(st["blocks"]) if st else 0,
+                    int(st["bytes_out"]) if st else 0,
                     wall / len(wave),
                     wave_no,
-                    time.time(),
-                    int(wave_state.get(b, (0, 0))[1]),
-                )
-                for b in wave
-            ]
+                    now,
+                    int(fp),
+                ))
             catalog.write_table(
-                spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA),
+                local_frame(spark, lineage_rows, LINEAGE_SCHEMA),
                 index_root,
                 LINEAGE_TABLE,
                 mode="append",
@@ -459,9 +486,10 @@ def build_index_resumable(
         # stats commit LAST: readers never see new global stats paired
         # with buckets an interrupted run did not finish
         catalog.write_table(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(n_docs, avgdl, int(stats_row["total_terms"]), int(span))],
-                "n_docs long, avgdl double, total_terms long, span long",
+                STATS_SCHEMA,
             ),
             index_root,
             STATS_TABLE,

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pisa_spark.index.build import BLOCK_SIZE, BM25_B, BM25_K1, _encode_groups
+from pisa_spark.session import task_wave_partitions
 
 ROWS_SCHEMA = "bucket int, term string, doc_id long, tf int, doc_len int"
 
@@ -162,8 +163,7 @@ def prune_postings(
         .unionByName(keep_gt.select(cols))
         .unionByName(keep_tie.select(cols))
     )
-    spark = postings.sparkSession
-    n_part = max(2 * spark.sparkContext.defaultParallelism, 8)
+    n_part = task_wave_partitions(postings.sparkSession)
     arranged = survivors.repartition(
         n_part, "bucket", "term"
     ).sortWithinPartitions("bucket", "term", "doc_id")

@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 from pisa_spark.corpus import tokens_col
 from pisa_spark.index import codec
 from pisa_spark.index.build import BLOCK_SIZE, term_frequencies
+from pisa_spark.session import task_wave_partitions
 
 IMPACT_SCALE = 255      # 8-bit impacts: floor(255*x) with x in [0, 1)
 IDF_SCALE = 65536       # 2^16 fixed-point idf
@@ -183,8 +184,7 @@ def build_quantized_postings(
         impact_expr(avgdl).alias("imp"),
         (F.col("doc_id") / F.lit(span)).cast("int").alias("bucket"),
     )
-    spark = tokens_df.sparkSession
-    n_part = max(2 * spark.sparkContext.defaultParallelism, 8)
+    n_part = task_wave_partitions(tokens_df.sparkSession)
     arranged = rows.repartition(n_part, "bucket", "term").sortWithinPartitions(
         "bucket", "term", "doc_id"
     )

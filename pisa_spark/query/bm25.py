@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from pisa_spark.index import codec
 from pisa_spark.index.build import BM25_B, BM25_K1
+from pisa_spark.session import task_wave_partitions
 
 TOPK_RESULT_SCHEMA = "query_id int, doc_id long, score double"
 
@@ -298,14 +299,11 @@ def _accumulate_topk(
 
 def bucket_arranged(df: DataFrame) -> DataFrame:
     """Bucket-co-locate a serving relation: every bucket's rows in one
-    partition, with ONE partition per core (defaultParallelism). The
-    Python kernel tasks that run over it then fit in a single wave of
-    task slots. Python tasks carry fixed worker/Arrow overhead whether
-    or not they get rows, and each wave beyond the first adds ~0.2 s to
-    every query on 4 cores. Every serving-side bucket repartition goes
-    through here."""
-    n_part = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n_part, "bucket")
+    partition, with one partition per core (session.
+    task_wave_partitions), so the Python kernel tasks that run over it
+    fit in a single wave of task slots. Every serving-side bucket
+    repartition goes through here."""
+    return df.repartition(task_wave_partitions(df.sparkSession), "bucket")
 
 
 def _arrange_pruned(
@@ -1415,6 +1413,7 @@ def bm25_topk_federated(
     k: int = 10,
     two_phase: bool = False,
     pre_arranged: bool = False,
+    lexicons: list[dict[str, int] | None] | None = None,
 ) -> DataFrame:
     """Top-k over a FEDERATION of indexes served as one logical corpus
     — the base+delta freshness pattern: a large periodically-rebuilt
@@ -1428,6 +1427,10 @@ def bm25_topk_federated(
     total_terms (load_index provides both). Doc-id spaces must be
     disjoint across members (the incremental builder's contract — new
     docs extend the id space).
+
+    lexicons: per member, its term -> df lexicon (SearchEngine.load
+    takes one) or None. A member with a lexicon adds its dfs in the
+    driver; only members without one pay a df aggregate per query.
 
     How rank-identity falls out: BM25's only global inputs are df and
     avgdl. df(term) = sum of the members' dfs (block metadata, one
@@ -1455,16 +1458,22 @@ def bm25_topk_federated(
         | {t for q in queries for t in q.get("negated", [])}
         | {t for q in queries for t in _flat_filters(q)}
     )
+    if lexicons is None:
+        lexicons = [None] * len(indexes)
     term_dfs: dict[str, int] = {}
-    for postings, _ in indexes:
-        rows = (
-            postings.filter(F.col("term").isin(all_terms))
-            .groupBy("term")
-            .agg(F.sum("n").alias("df"))
-            .collect()
-        )
-        for r in rows:
-            term_dfs[r["term"]] = term_dfs.get(r["term"], 0) + int(r["df"])
+    for (postings, _), lex in zip(indexes, lexicons):
+        if lex is not None:
+            found = {t: lex[t] for t in all_terms if t in lex}
+        else:
+            found = {
+                r["term"]: int(r["df"])
+                for r in postings.filter(F.col("term").isin(all_terms))
+                .groupBy("term")
+                .agg(F.sum("n").alias("df"))
+                .collect()
+            }
+        for t, df in found.items():
+            term_dfs[t] = term_dfs.get(t, 0) + int(df)
     parts = [
         bm25_topk_wand(
             postings, queries, n_docs, avgdl, k=k, two_phase=two_phase,

@@ -62,6 +62,7 @@ from pisa_spark.index.quantized import (
     idf_quantized,
 )
 from pisa_spark.query.bm25f import BM25F_K1, FIELD_PARAMS, TITLE_LEN, fielded_tf
+from pisa_spark.session import task_wave_partitions
 
 PTF_SCALE = 64            # 2^6 fixed-point pseudo-tf units
 SAT_SCALE = 65536         # 2^16 saturation fixed point
@@ -144,8 +145,7 @@ def build_bm25f_quantized(
         "imp",
         (F.col("doc_id") / F.lit(span)).cast("int").alias("bucket"),
     )
-    spark = toks.sparkSession
-    n_part = max(2 * spark.sparkContext.defaultParallelism, 8)
+    n_part = task_wave_partitions(toks.sparkSession)
     arranged = rows.repartition(n_part, "bucket", "term").sortWithinPartitions(
         "bucket", "term", "doc_id"
     )

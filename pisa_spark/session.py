@@ -22,6 +22,34 @@ def default_driver_memory() -> str:
     return f"{phys // 2 // 2**20}m"
 
 
+def task_wave_partitions(spark: SparkSession) -> int:
+    """Partition count for a stage of Python (Arrow/pandas) tasks: one
+    partition per core (defaultParallelism), so the stage runs in ONE
+    wave of task slots. A Python task carries fixed worker and Arrow
+    overhead whether or not it gets rows, and on 4 cores each wave
+    beyond the first adds ~0.2 s. Every serving-side bucket repartition
+    (query/bm25.py bucket_arranged) and every block-encode stage (index
+    build, static pruning, quantized and BM25F-quantized builds) sizes
+    its shuffle here."""
+    return spark.sparkContext.defaultParallelism
+
+
+def local_frame(spark: SparkSession, rows, schema: str):
+    """A small driver-made DataFrame (lineage rows, the corpus_stats
+    row, an id list) built from pandas through Arrow with ONE partition.
+    spark.createDataFrame(list_of_tuples) instead ships the rows through
+    Python worker tasks, and a write of it leaves one file per core;
+    this one runs no Python task and a write leaves one file.
+
+    rows: a list of tuples in ``schema`` order (a DDL string)."""
+    import pandas as pd
+    from pyspark.sql.types import _parse_datatype_string
+
+    names = [f.name for f in _parse_datatype_string(schema).fields]
+    pdf = pd.DataFrame.from_records(list(rows), columns=names)
+    return spark.createDataFrame(pdf, schema).coalesce(1)
+
+
 def get_spark(
     app_name: str = "pisa_spark",
     cores: int | None = None,

@@ -147,3 +147,42 @@ def test_federated_engine_streaming_delta(spark, sf_dir, tmp_path_factory):
         assert got == want and len(got) > 0, query
     with pytest.raises(ValueError, match="phrase"):
         fed.search('"data join"')
+
+
+def test_federated_search_on_loaded_members_plans_without_jobs(
+    spark, sf_dir, tmp_path
+):
+    """Loaded members bring their lexicons: the federation sums them
+    in the driver, so planning a query launches no Spark job. An engine
+    made from the same members without lexicons (per-member df lookup)
+    answers identically, and so does a mix of the two."""
+    from pisa_spark.engine import FederatedEngine, SearchEngine
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    roots = [str(tmp_path / "lo"), str(tmp_path / "hi")]
+    SearchEngine.build(spark, None, roots[0],
+                       docs_df=docs.filter(F.col("doc_id") < 250))
+    SearchEngine.build(spark, None, roots[1],
+                       docs_df=docs.filter(F.col("doc_id") >= 250))
+    fed = FederatedEngine.load(spark, roots)
+    assert all(lex is not None for lex in fed._lexicons)
+
+    sc = spark.sparkContext
+    group = "pisa-federated-plan"
+    sc.setJobGroup(group, group)
+    try:
+        planned = fed.search("data join -the zzzabsent", k=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    got = _rows(planned)
+    assert got
+    lazy = FederatedEngine(spark, fed.members, pre_arranged=True)
+    assert _rows(lazy.search("data join -the zzzabsent", k=10)) == got
+    mixed = FederatedEngine(spark, fed.members, pre_arranged=True,
+                            lexicons=[fed._lexicons[0], None])
+    assert _rows(mixed.search("data join -the zzzabsent", k=10)) == got

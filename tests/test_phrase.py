@@ -167,7 +167,6 @@ def _blocks_with_positions(docs_tokens, n_buckets=2, block=3):
     import pandas as pd
 
     from pisa_spark.index import codec
-    from pisa_spark.index.build import _encode_positions
 
     n_docs = len(docs_tokens)
     span = -(-n_docs // n_buckets)
@@ -196,7 +195,7 @@ def _blocks_with_positions(docs_tokens, n_buckets=2, block=3):
                         "docs": codec.delta_encode_docids(d),
                         "tfs": codec.encode_payload(tfs, minus_one=True),
                         "dls": codec.encode_payload(dls),
-                        "poss": _encode_positions([e[3] for e in ch]),
+                        "poss": codec.encode_positions([e[3] for e in ch]),
                     }
                 )
     import pandas as pd

@@ -479,3 +479,60 @@ def test_waves_from_pages_matches_flat_slicing():
         got = list(_waves_from_pages(iter(pages), wave_size=wave))
         flat = [ids[i:i + wave] for i in range(0, n, wave)]
         assert got == flat, (n, page_rows, wave)
+
+
+def _build_jobs(spark, group, **kw):
+    """Run build_index_resumable under its own job group; (summary,
+    number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = build_index_resumable(spark, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# Spark jobs of a refresh on the 500-doc fixture, measured on local[4]
+# and local[8]: change detection is one classification pass, global
+# stats one aggregate, and driver-made rows run no job of their own.
+# Re-adding a bookkeeping pass (a second detection stream, a per-wave
+# state aggregate, a split stats aggregate) pushes a count over its
+# bound.
+NOOP_REFRESH_JOBS = 19
+ONE_BUCKET_REFRESH_JOBS = 29
+
+
+def test_refresh_job_counts_and_one_file_commits(spark, sf_dir, tmp_path):
+    import glob
+    import os
+
+    corpus = str(tmp_path / "corpus_jobs")
+    idx = str(tmp_path / "idx_jobs")
+    full = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    full.filter(F.col("doc_id") < 448).write.parquet(
+        corpus + "/documents.parquet"
+    )
+    kw = dict(sf_dir=corpus, index_root=idx, wave_size=8, docs_per_bucket=64)
+    build_index_resumable(spark, **kw)
+
+    s, jobs = _build_jobs(spark, "pisa-refresh-noop", **kw)
+    assert s["waves_run"] == 0
+    assert jobs <= NOOP_REFRESH_JOBS, jobs
+
+    # docs 448..499 land in one new bucket (7)
+    full.write.mode("overwrite").parquet(corpus + "/documents.parquet")
+    s, jobs = _build_jobs(spark, "pisa-refresh-append", **kw)
+    assert s["waves_run"] == 1 and s["docs"] == 500
+    assert jobs <= ONE_BUCKET_REFRESH_JOBS, jobs
+    lin = catalog.read_table(spark, idx, "lineage")
+    assert lin.filter(F.col("bucket") == 7).count() == 1
+
+    # every lineage / corpus_stats generation the builds wrote is one
+    # data file (driver-made rows commit as one-partition frames)
+    for table in ("lineage", "corpus_stats"):
+        gens = glob.glob(os.path.join(catalog.table_path(idx, table), "gen-*"))
+        assert len(gens) >= 2, (table, gens)
+        for g in gens:
+            assert len(glob.glob(os.path.join(g, "*.parquet"))) == 1, g

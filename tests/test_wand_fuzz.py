@@ -184,7 +184,8 @@ def test_wand_kernel_exact_under_fuzz(seed, factory):
 def test_encode_groups_batch_split_invariance(seed):
     """_encode_groups must emit identical blocks no matter how Arrow
     splits the partition-sorted input into batches (the tail-group
-    carry-over logic is the tricky part)."""
+    carry-over logic is the tricky part) — for the plain and the
+    positional layout."""
     from pisa_spark.index.build import _encode_groups
 
     rng = np.random.default_rng(seed)
@@ -195,28 +196,34 @@ def test_encode_groups_batch_split_invariance(seed):
                 rng.choice(np.arange(100), size=rng.integers(1, 30), replace=False)
             )
             for d in docs:
+                tf = int(rng.integers(1, 5))
                 rows.append(
                     {
                         "bucket": bucket,
                         "term": term,
                         "doc_id": int(d),
-                        "tf": int(rng.integers(1, 5)),
+                        "tf": tf,
                         "doc_len": int(rng.integers(1, 40)),
+                        "positions": np.sort(
+                            rng.choice(np.arange(300), size=tf, replace=False)
+                        ).astype(np.int32),
                     }
                 )
     pdf = pd.DataFrame(rows).sort_values(["bucket", "term", "doc_id"]).reset_index(
         drop=True
     )
 
-    def blocks(chunks):
-        frames = list(_encode_groups(iter(chunks), block_size=4))
+    def blocks(chunks, with_positions):
+        frames = list(
+            _encode_groups(iter(chunks), block_size=4,
+                           with_positions=with_positions)
+        )
         out = pd.concat(frames, ignore_index=True)
         return sorted(
             map(tuple, out.itertuples(index=False)),
             key=lambda r: (r[0], r[1], r[2]),
         )
 
-    whole = blocks([pdf])
     # random split points, including pathological 1-row batches
     n = len(pdf)
     cuts = np.sort(rng.choice(np.arange(1, n), size=min(n - 1, 7), replace=False))
@@ -224,9 +231,11 @@ def test_encode_groups_batch_split_invariance(seed):
         pdf.iloc[a:b].reset_index(drop=True)
         for a, b in zip(np.concatenate(([0], cuts)), np.concatenate((cuts, [n])))
     ]
-    assert blocks(parts) == whole
     one_row = [pdf.iloc[i : i + 1].reset_index(drop=True) for i in range(n)]
-    assert blocks(one_row) == whole
+    for with_positions in (False, True):
+        whole = blocks([pdf], with_positions)
+        assert blocks(parts, with_positions) == whole
+        assert blocks(one_row, with_positions) == whole
 
 
 def naive_filtered_topk(tf, doc_len, terms, conjunctive, k, n_docs,
