@@ -29,3 +29,14 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from pyspark import TaskContext
+
+from pisa_spark.session import install_zip_stat_cache
+
+# A Spark Python worker imports pisa_spark while it unpickles a task's
+# engine closure (a task context is set then): from that worker's next
+# task on, the per-task import-cache reset stops re-reading Spark's
+# zips and jars. The driver process is never patched.
+if TaskContext.get() is not None:
+    install_zip_stat_cache()

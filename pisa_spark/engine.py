@@ -100,6 +100,10 @@ class SearchEngine:
         # precompute_kgrams()/first wildcard lookup finds the table
         self._kgram_df: DataFrame | None = None
         self._kgram_checked = False
+        # the corpus_stats snapshot seq a load()ed engine serves; the
+        # persisted artifacts above (and the stopword table) record the
+        # seq they were derived from and count as absent on a mismatch
+        self._stats_seq: int | None = None
 
     # -- construction ------------------------------------------------------
 
@@ -151,10 +155,22 @@ class SearchEngine:
         Every load also takes the term lexicon (_load_lexicon, one
         aggregate job), so query planning needs no Spark job."""
         from pisa_spark.index.deletes import DELETES_TABLE
-        from pisa_spark.index.lineage import POSTINGS_TABLE
+        from pisa_spark.index.lineage import POSTINGS_TABLE, STATS_TABLE
         from pisa_spark.sources import catalog
 
+        # the corpus_stats snapshot served; None when a build published
+        # new stats during the read, so no derived artifact matches
+        if as_of_ts is None:
+            stats_seq = catalog.current_seq(index_root, STATS_TABLE)
+        else:
+            stats_seq = catalog.snapshot_as_of_ts(
+                index_root, STATS_TABLE, as_of_ts
+            )
         postings, stats = load_index(spark, index_root, as_of_ts=as_of_ts)
+        if as_of_ts is None and stats_seq != catalog.current_seq(
+            index_root, STATS_TABLE
+        ):
+            stats_seq = None
         if cache:
             arranged = bucket_arranged(postings).cache()
             eng = cls(spark, arranged, stats, pre_arranged=True)
@@ -177,6 +193,7 @@ class SearchEngine:
                 stored_ok = False
             eng = cls(spark, postings, stats, pre_arranged=stored_ok)
         eng._index_root = index_root
+        eng._stats_seq = stats_seq
         # a reorder_by= build persists its (doc_id, new_id) mapping:
         # the index lives in new-id space, so the doc store, deletes
         # and restore() must resolve through it (index/reorder.py)
@@ -276,7 +293,15 @@ class SearchEngine:
             catalog.write_table(
                 ids, self._index_root, DELETES_TABLE, mode="append"
             )
+        replaced = self.postings
         self._apply_tombstones(ids)
+        if self.postings is not replaced:
+            # swap in a warm relation: fill the new cache here, not in
+            # the first query after the delete, then free the cached
+            # tombstoned relation it replaces (never the base one)
+            self.postings.count()
+            if replaced is not self._base_postings:
+                replaced.unpersist()
         return self
 
     def compact(self, corpus_dir: str | None = None, **build_kwargs):
@@ -802,6 +827,43 @@ class SearchEngine:
             )
         return {t: self._term_stats_cache[t] for t in terms}
 
+    def _write_artifact(self, df: DataFrame, table: str) -> DataFrame:
+        """Persist a derived serving artifact under the index root,
+        recording the corpus_stats snapshot it was derived from, and
+        return the persisted relation."""
+        from pisa_spark.sources import catalog
+
+        if self._index_root is None:
+            raise ValueError(
+                "persist=True needs a catalog-backed index"
+                " (build()/load()); pass persist=False for a"
+                " relation-constructed engine"
+            )
+        catalog.write_table(
+            df, self._index_root, table,
+            meta={"corpus_stats_seq": self._stats_seq},
+        )
+        return catalog.read_table(self.spark, self._index_root, table)
+
+    def _read_artifact(self, table: str) -> DataFrame | None:
+        """The persisted artifact ``table`` when it was derived from
+        the corpus_stats snapshot this engine serves; None when absent
+        or stale (a build since then changed the stats and dfs it was
+        computed under). The artifacts are physical hints that never
+        change an answer, so a stale one is served as absent."""
+        from pisa_spark.sources import catalog
+
+        if (
+            self._index_root is None
+            or self._stats_seq is None
+            or not catalog.table_exists(self._index_root, table)
+            or catalog.table_meta(self._index_root, table).get(
+                "corpus_stats_seq"
+            ) != self._stats_seq
+        ):
+            return None
+        return catalog.read_table(self.spark, self._index_root, table)
+
     def precompute_thresholds(
         self, k: int = 10, persist: bool = True
     ) -> DataFrame:
@@ -810,8 +872,10 @@ class SearchEngine:
         (query/thresholds.py). One decode pass + a WindowGroupLimit
         per-term top-k; persist=True commits it under the index root
         as the ``term_thresholds`` catalog table so future load()s
-        prime without recomputing. Serving reads it per query with a
-        pushed In(term, ...) filter — search_batch(primed=True)."""
+        prime without recomputing, until a build publishes new corpus
+        stats (the table then serves as absent: _read_artifact).
+        Serving reads it per query with a pushed In(term, ...) filter —
+        search_batch(primed=True)."""
         if self._tombstone_ids is not None:
             raise ValueError(
                 "precompute_thresholds on a tombstoned index would"
@@ -821,7 +885,6 @@ class SearchEngine:
             THRESHOLDS_TABLE,
             term_kth_scores,
         )
-        from pisa_spark.sources import catalog
 
         thr = term_kth_scores(
             self.postings,
@@ -830,16 +893,7 @@ class SearchEngine:
             k=k,
         ).withColumn("k", F.lit(k))
         if persist:
-            if self._index_root is None:
-                raise ValueError(
-                    "persist=True needs a catalog-backed index"
-                    " (build()/load()); pass persist=False for a"
-                    " relation-constructed engine"
-                )
-            catalog.write_table(thr, self._index_root, THRESHOLDS_TABLE)
-            thr = catalog.read_table(
-                self.spark, self._index_root, THRESHOLDS_TABLE
-            )
+            thr = self._write_artifact(thr, THRESHOLDS_TABLE)
         self._thr_df = thr
         self._thr_table_k = k
         self._thr_cache = {}
@@ -863,18 +917,17 @@ class SearchEngine:
         from pisa_spark.sources import catalog
 
         if self._thr_df is None:
-            if self._index_root is not None and catalog.table_exists(
+            if self._index_root is None or not catalog.table_exists(
                 self._index_root, THRESHOLDS_TABLE
             ):
-                self._thr_df = catalog.read_table(
-                    self.spark, self._index_root, THRESHOLDS_TABLE
-                )
-            else:
                 raise ValueError(
                     "primed=True needs precomputed thresholds — call"
                     " precompute_thresholds() (persisted under the"
                     " index root as the term_thresholds table)"
                 )
+            self._thr_df = self._read_artifact(THRESHOLDS_TABLE)
+            if self._thr_df is None:
+                return {}  # derived from other stats: serve unprimed
         qterms = sorted({t for q in normalized for t in q["terms"]})
         missing = [t for t in qterms if t not in self._thr_cache]
         if missing:
@@ -907,27 +960,18 @@ class SearchEngine:
         the negative-idf set). Block-metadata aggregate only;
         persist=True commits it under the index root as the
         ``stopwords`` catalog table so future load()s pick it up for
-        search_stopped without recomputing."""
+        search_stopped without recomputing, until a build publishes new
+        corpus stats."""
         from pisa_spark.query.stopwords import (
             STOPWORDS_TABLE,
             stopword_list,
         )
-        from pisa_spark.sources import catalog
 
         sw = stopword_list(
             self.postings, int(self.stats["n_docs"]), max_df_ratio
         )
         if persist:
-            if self._index_root is None:
-                raise ValueError(
-                    "persist=True needs a catalog-backed index"
-                    " (build()/load()); pass persist=False for a"
-                    " relation-constructed engine"
-                )
-            catalog.write_table(sw, self._index_root, STOPWORDS_TABLE)
-            sw = catalog.read_table(
-                self.spark, self._index_root, STOPWORDS_TABLE
-            )
+            sw = self._write_artifact(sw, STOPWORDS_TABLE)
         self._stop_df = sw
         self._stop_set = None
         self._stop_checked = True
@@ -935,22 +979,16 @@ class SearchEngine:
 
     def _stopword_set(self) -> set[str]:
         """The stop set, collected once (bounded by the df cut —
-        hundreds of terms under any Zipf vocabulary). Prefers the
-        persisted ``stopwords`` table; derives at the default ratio
-        otherwise."""
+        hundreds of terms under any Zipf vocabulary). Prefers a current
+        persisted ``stopwords`` table (_read_artifact); derives at the
+        default ratio otherwise."""
         if getattr(self, "_stop_set", None) is not None:
             return self._stop_set
         if not getattr(self, "_stop_checked", False):
             self._stop_checked = True
             from pisa_spark.query.stopwords import STOPWORDS_TABLE
-            from pisa_spark.sources import catalog
 
-            if self._index_root is not None and catalog.table_exists(
-                self._index_root, STOPWORDS_TABLE
-            ):
-                self._stop_df = catalog.read_table(
-                    self.spark, self._index_root, STOPWORDS_TABLE
-                )
+            self._stop_df = self._read_artifact(STOPWORDS_TABLE)
         if getattr(self, "_stop_df", None) is None:
             from pisa_spark.query.stopwords import stopword_list
 
@@ -983,7 +1021,9 @@ class SearchEngine:
         generation — the stem_mates/term_thresholds artifact idiom;
         persist=True commits it under the index root as the
         ``kgram_index`` catalog table so future load()s pick it up
-        automatically on the first wildcard query. A purely physical
+        automatically on the first wildcard query, until a build
+        publishes new corpus stats (the table would miss new terms). A
+        purely physical
         hint: expansion results are identical either way. Gram length
         is pinned to the serving default (kgram.KGRAM_K) so stored
         grams always match the patterns' query-side grams."""
@@ -993,7 +1033,6 @@ class SearchEngine:
             KGRAM_TABLE,
             kgram_table,
         )
-        from pisa_spark.sources import catalog
 
         vocab = (
             self.postings.filter(
@@ -1005,35 +1044,21 @@ class SearchEngine:
         )
         kt = kgram_table(vocab, KGRAM_K).select("gram", "term", "df")
         if persist:
-            if self._index_root is None:
-                raise ValueError(
-                    "persist=True needs a catalog-backed index"
-                    " (build()/load()); pass persist=False for a"
-                    " relation-constructed engine"
-                )
-            catalog.write_table(kt, self._index_root, KGRAM_TABLE)
-            kt = catalog.read_table(
-                self.spark, self._index_root, KGRAM_TABLE
-            )
+            kt = self._write_artifact(kt, KGRAM_TABLE)
         self._kgram_df = kt
         self._kgram_checked = True
         return kt
 
     def _kgram_lookup(self) -> DataFrame | None:
-        """The persisted k-gram table if one exists (checked once per
-        engine); None falls back to the per-query vocabulary path —
-        a physical decision only, never an answer change."""
+        """The persisted k-gram table if one exists and is current
+        (_read_artifact; checked once per engine); None falls back to
+        the per-query vocabulary path — a physical decision only, never
+        an answer change."""
         if not self._kgram_checked:
             self._kgram_checked = True
             from pisa_spark.query.kgram import KGRAM_TABLE
-            from pisa_spark.sources import catalog
 
-            if self._index_root is not None and catalog.table_exists(
-                self._index_root, KGRAM_TABLE
-            ):
-                self._kgram_df = catalog.read_table(
-                    self.spark, self._index_root, KGRAM_TABLE
-                )
+            self._kgram_df = self._read_artifact(KGRAM_TABLE)
         return self._kgram_df
 
     def _dictionary_vocab(self) -> DataFrame:

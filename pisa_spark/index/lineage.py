@@ -400,9 +400,12 @@ def build_index_resumable(
             # SearchEngine.load(cache=False) reads it shuffle-free
             # (a bucket can never span scan partitions when each bucket
             # is one sub-maxPartitionBytes file). Iceberg analog: write
-            # clustered by partition spec.
+            # clustered by partition spec. The sort fixes the row order
+            # inside each file, so the stored bytes do not depend on
+            # how many partitions the encode stage ran on.
             catalog.write_table(
-                postings.repartition(len(wave), "bucket"),
+                postings.repartition(len(wave), "bucket")
+                .sortWithinPartitions("bucket", "term", "block_idx"),
                 index_root, POSTINGS_TABLE, partition_by=["bucket"],
                 mode="overwrite", claim_partitions=wave,
             )

@@ -306,6 +306,33 @@ def bucket_arranged(df: DataFrame) -> DataFrame:
     return df.repartition(task_wave_partitions(df.sparkSession), "bucket")
 
 
+# Postings one query-kernel task scores before the kernel stage takes
+# another partition (up to one per core). Splitting P postings over two
+# tasks saves P / (2 R) of kernel time and costs E, the exchange and
+# second job a multi-task plan adds, so it pays from P = 2 R E. Measured
+# on a 4-vCPU box (CPython 3.11, Spark 4.1.2, local[4], Zipf corpora of
+# 8k-20k docs): the WAND kernel scores R ~ 2M postings/s of one core
+# (1.6-3.9M/s for 4-64 terms), and a query on one task runs E ~ 60 ms
+# faster than on four (167-247 vs 224-309 ms below 54k postings); so
+# P = 2 x 2M/s x 0.06 s ~ 240k. End to end, one task and four broke
+# even between 220k and 335k postings.
+POSTINGS_PER_TASK = 250_000
+
+
+def kernel_partitions(spark, term_dfs: dict[str, int]) -> int:
+    """Partition count for a query's kernel stage: one task per
+    POSTINGS_PER_TASK postings of the scored terms (lexicon dfs), at
+    most one per core. An empty term_dfs (a caller with no real dfs)
+    keeps one partition per core. With one partition the kernel output
+    is a single partition, so the top-k window needs no exchange: a
+    small query runs as one Spark job of one Python task."""
+    n = task_wave_partitions(spark)
+    if not term_dfs:
+        return n
+    postings = sum(term_dfs.values())
+    return max(1, min(n, -(-postings // POSTINGS_PER_TASK)))
+
+
 def _arrange_pruned(
     postings: DataFrame,
     terms: list[str],
@@ -314,14 +341,26 @@ def _arrange_pruned(
 ) -> tuple[DataFrame, dict[str, int]]:
     """Shared query-driver prologue: term-pruned scan (PushedFilters),
     df derivation from block metadata when not supplied, bucket
-    co-location unless the input is already arranged."""
+    co-location on kernel_partitions(term_dfs) partitions. An arranged
+    input is coalesced, which merges whole partitions and so keeps
+    every bucket inside one; any other input is repartitioned by
+    bucket."""
     pruned = postings.filter(F.col("term").isin(list(terms)))
     if term_dfs is None:
         term_dfs = {
             r["term"]: int(r["df"])
             for r in pruned.groupBy("term").agg(F.sum("n").alias("df")).collect()
         }
-    arranged = pruned if pre_arranged else bucket_arranged(pruned)
+        # every queried term is known now: absent ones have 0 postings
+        n = kernel_partitions(
+            postings.sparkSession, {t: term_dfs.get(t, 0) for t in terms}
+        )
+    else:
+        n = kernel_partitions(postings.sparkSession, term_dfs)
+    if pre_arranged:
+        arranged = pruned.coalesce(n)
+    else:
+        arranged = pruned.repartition(n, "bucket")
     return arranged, term_dfs
 
 

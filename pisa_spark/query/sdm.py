@@ -318,7 +318,7 @@ def sdm_collection_stats(
     partial-aggregated per bucket (|terms| + 2*|pairs| rows cross the
     wire per bucket, never postings)."""
     all_terms = sorted({t for q in queries for t in q["terms"]})
-    arranged, _ = _arrange_pruned(postings, all_terms, {t: 0 for t in all_terms}, False)
+    arranged, _ = _arrange_pruned(postings, all_terms, {}, False)
     rows = (
         arranged.mapInPandas(
             _stats_kernel(queries, window), schema=_STATS_SCHEMA
@@ -354,9 +354,7 @@ def sdm_topk(
         | {t for q in queries for t in q.get("negated", [])}
         | {t for q in queries for t in _flat_filters(q)}
     )
-    arranged, _ = _arrange_pruned(
-        postings, all_terms, {t: 0 for t in all_terms}, False
-    )
+    arranged, _ = _arrange_pruned(postings, all_terms, {}, False)
     partial = arranged.mapInPandas(
         _score_kernel(
             queries, stats, float(total_cf), k, float(mu), lambdas, window

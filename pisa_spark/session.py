@@ -10,8 +10,58 @@ Arrow enabled for every pandas-UDF edge.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
+
+
+def install_zip_stat_cache() -> None:
+    """Make zipimporter.invalidate_caches() re-read an archive's zip
+    directory only when the archive's (st_mtime_ns, st_size) changed
+    since the last read, as CPython 3.13 made it lazy.
+
+    A Spark Python worker calls importlib.invalidate_caches() at the
+    start of every task (pyspark worker_util.setup_spark_files), and
+    its sys.path starts with pyspark.zip, the py4j zip and the
+    spark-core jar. On CPython <= 3.12 each call re-parses all of
+    those zip directories in pure Python: 118-222 ms (median 187 ms)
+    of every task in a warm worker, ~0.1 ms with this cache (4-vCPU
+    box, CPython 3.11, Spark 4.1.2).
+    A changed or re-shipped archive (addPyFile) still gets re-read, so
+    imports see its new contents. No-op on 3.13+ and when already
+    installed."""
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "stat_checked", False):
+        return
+    directories = zipimport._zip_directory_cache
+    # archive -> ((st_mtime_ns, st_size) taken before the read, files)
+    read_at: dict[str, tuple[tuple[int, int], dict]] = {}
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            key = None
+        last = read_at.get(self.archive)
+        if (
+            key is not None
+            and last is not None
+            and last[0] == key
+            and directories.get(self.archive) is last[1]
+        ):
+            self._files = last[1]
+            return
+        reread(self)
+        if key is not None:
+            read_at[self.archive] = (key, self._files)
+
+    invalidate_caches.stat_checked = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def default_driver_memory() -> str:
@@ -26,11 +76,13 @@ def task_wave_partitions(spark: SparkSession) -> int:
     """Partition count for a stage of Python (Arrow/pandas) tasks: one
     partition per core (defaultParallelism), so the stage runs in ONE
     wave of task slots. A Python task carries fixed worker and Arrow
-    overhead whether or not it gets rows, and on 4 cores each wave
-    beyond the first adds ~0.2 s. Every serving-side bucket repartition
-    (query/bm25.py bucket_arranged) and every block-encode stage (index
-    build, static pruning, quantized and BM25F-quantized builds) sizes
-    its shuffle here."""
+    overhead whether or not it gets rows: on 4 cores, one extra wave
+    cost ~0.2 s, mostly the per-task zip re-read that
+    install_zip_stat_cache now skips. Every serving-side bucket
+    repartition (query/bm25.py bucket_arranged) and every block-encode
+    stage (index build, static pruning, quantized and BM25F-quantized
+    builds) sizes its shuffle here; a query's kernel stage may take
+    fewer (bm25.kernel_partitions)."""
     return spark.sparkContext.defaultParallelism
 
 

@@ -230,6 +230,7 @@ def write_table(
     partition_by: list[str] | None = None,
     mode: str = "overwrite",
     claim_partitions: list | None = None,
+    meta: dict | None = None,
 ) -> None:
     """Write df into a fresh generation dir, then atomically publish.
 
@@ -249,7 +250,11 @@ def write_table(
 
     The manifest read-modify-publish runs under the per-table writer
     lock — concurrent writers serialize instead of silently dropping
-    each other's repoints."""
+    each other's repoints.
+
+    meta: small JSON facts published with this write's manifest and
+    read back by table_meta, e.g. the snapshot of another table that a
+    derived artifact was computed from (whole-table overwrites)."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"catalog supports overwrite/append, not {mode!r}")
     if partition_by and mode == "append":
@@ -299,7 +304,9 @@ def write_table(
                     dirs = [gen]
             else:
                 dirs = [gen]
-            _publish(root, name, {"dirs": dirs})
+            _publish(
+                root, name, {"dirs": dirs, **({"meta": meta} if meta else {})}
+            )
 
 
 def _adopt_legacy(tp: str) -> str:
@@ -571,6 +578,20 @@ def partition_file_stats(root: str, name: str) -> tuple[int, int, int, int]:
             max_bytes = max(max_bytes, sz)
             total_bytes += sz
     return max_files, max_bytes, n_files, total_bytes
+
+
+def current_seq(root: str, name: str) -> int | None:
+    """Snapshot seq of the table's current manifest (None for a
+    legacy or never-published table)."""
+    m = _read_manifest(root, name)
+    return None if m is None else m.get("seq")
+
+
+def table_meta(root: str, name: str) -> dict:
+    """The ``meta`` its last whole-table write published (write_table),
+    {} when none."""
+    m = _read_manifest(root, name)
+    return dict((m or {}).get("meta") or {})
 
 
 def table_exists(root: str, name: str) -> bool:

@@ -106,6 +106,36 @@ def test_reload_with_deletes_keeps_stale_lexicon(spark, sf_dir, tmp_path):
     assert all(before[d] == s for d, s in after.items() if d in before)
 
 
+def test_delete_swaps_in_a_warm_relation_and_frees_the_replaced(spark, eng):
+    """delete_docs fills the new tombstoned serving cache before it
+    returns, so the first query after it launches no more Spark jobs
+    than the second; the tombstoned relation it replaces is unpersisted
+    and the base relation stays cached."""
+    from pyspark import StorageLevel
+
+    from tests.test_engine import _job_ids
+
+    none = StorageLevel(False, False, False, False)
+    base = eng.postings
+    top = [r["doc_id"] for r in eng.search("data join", k=4).collect()]
+    eng.delete_docs(top[:1], persist=False)
+    first = eng.postings
+    eng.delete_docs(top[1:2], persist=False)
+    second = eng.postings
+    assert first.storageLevel == none
+    assert second.storageLevel != none and base.storageLevel != none
+    jobs = [
+        _job_ids(
+            spark, f"after-delete-{i}",
+            lambda: eng.search("data join", k=10).collect(),
+        )
+        for i in range(2)
+    ]
+    assert len(jobs[0][1]) <= len(jobs[1][1]), jobs
+    assert jobs[0][0] == jobs[1][0]
+    assert not set(top[:2]) & {r["doc_id"] for r in jobs[0][0]}
+
+
 def test_deletes_compose_with_lifted_facades(eng):
     """search_scored / search_quantized / search_wildcard now exclude
     tombstoned docs (the __deleted__ pseudo-term rides their kernels'

@@ -209,6 +209,55 @@ def test_serving_relation_has_one_partition_per_core(spark, eng):
     fresh._base_postings.unpersist()
 
 
+def test_small_query_runs_one_job_of_one_task(spark, eng, oracle):
+    """A query whose terms hold fewer than bm25.POSTINGS_PER_TASK
+    postings runs its kernel on one partition, so the top-k window needs
+    no exchange: one Spark job running one task."""
+    query = "data join"
+    loaded = SearchEngine.load(spark, eng._index_root)
+    loaded.search(query, k=10).collect()  # the serving cache is filled
+    rows, jobs = _job_ids(
+        spark, "one-task", lambda: loaded.search(query, k=10).collect()
+    )
+    assert len(jobs) == 1, jobs
+    tracker = spark.sparkContext.statusTracker()
+    stages = [
+        tracker.getStageInfo(s) for s in tracker.getJobInfo(jobs[0]).stageIds
+    ]
+    assert sum(s.numCompletedTasks for s in stages if s) == 1
+    assert sorted((r["rank"], r["doc_id"]) for r in rows) == [
+        (r, d) for r, d, _ in oracle.topk(["data", "join"], k=10)
+    ]
+
+
+def test_big_query_runs_one_partition_per_core(spark, eng, monkeypatch):
+    """Above POSTINGS_PER_TASK postings per task the kernel stage takes
+    one partition per core, on the cached (coalesced) and the
+    unarranged (repartitioned) relation alike, with identical rows."""
+    from pisa_spark.query import bm25
+
+    cores = spark.sparkContext.defaultParallelism
+    terms = ["data", "join"]
+    dfs = eng._term_dfs(terms)
+    unarranged = SearchEngine(spark, eng.postings, eng.stats)
+
+    def rows(e):
+        return [tuple(r) for r in e.search("data join", k=10).collect()]
+
+    def partitions(pre_arranged):
+        arranged, _ = bm25._arrange_pruned(eng.postings, terms, dfs, pre_arranged)
+        return arranged.rdd.getNumPartitions()
+
+    small = [rows(eng), rows(unarranged)]
+    assert partitions(True) == partitions(False) == 1
+    monkeypatch.setattr(bm25, "POSTINGS_PER_TASK", 1)
+    assert partitions(True) == partitions(False) == cores
+    assert [rows(eng), rows(unarranged)] == small
+    assert small[0] == small[1]
+    # callers without real dfs keep one partition per core
+    assert bm25.kernel_partitions(spark, {}) == cores
+
+
 def test_lexicon_matches_oracle_dfs(eng, oracle):
     """The load-time lexicon holds exactly the oracle's dfs — head,
     mid-frequency and absent terms included."""

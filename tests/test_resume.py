@@ -536,3 +536,39 @@ def test_refresh_job_counts_and_one_file_commits(spark, sf_dir, tmp_path):
         assert len(gens) >= 2, (table, gens)
         for g in gens:
             assert len(glob.glob(os.path.join(g, "*.parquet"))) == 1, g
+
+
+def _postings_file_bytes(root):
+    """{bucket: bytes of its one data file} from the current manifest."""
+    import glob
+    import os
+
+    tp = catalog.table_path(root, "postings")
+    out = {}
+    for bucket, rel in catalog._read_manifest(root, "postings")["partitions"].items():
+        (path,) = glob.glob(os.path.join(tp, rel, "*.parquet"))
+        with open(path, "rb") as f:
+            out[bucket] = f.read()
+    return out
+
+
+def test_postings_bytes_do_not_depend_on_encode_partitions(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The wave write sorts each bucket's rows, so the stored postings
+    files are byte-identical whatever partition count the encode stage
+    ran on (the core count of the building machine)."""
+    import pisa_spark.index.build as build_mod
+
+    files = []
+    for n_part in (2, 5):
+        monkeypatch.setattr(
+            build_mod, "task_wave_partitions", lambda _spark, n=n_part: n
+        )
+        root = str(tmp_path / f"idx_parts{n_part}")
+        build_index_resumable(
+            spark, sf_dir, root, wave_size=8, docs_per_bucket=64
+        )
+        files.append(_postings_file_bytes(root))
+    assert len(files[0]) == 8
+    assert files[0] == files[1]

@@ -259,3 +259,38 @@ def test_deletes_disable_priming_and_stay_correct(spark, tmp_path):
     # recomputing on a tombstoned index would bake deletes into bounds
     with pytest.raises(ValueError, match="compact"):
         eng.precompute_thresholds(k=10)
+
+
+def test_stale_thresholds_after_growth_serve_unprimed(spark, tmp_path):
+    """A build that grows the corpus publishes new corpus stats; a
+    threshold table derived from the old ones (old df, n_docs and
+    avgdl) is treated as absent, so a primed batch returns the unprimed
+    answer instead of pruning with k-th scores that no longer hold."""
+    root = str(tmp_path / "idx_grow")
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    eng = SearchEngine.build(
+        spark, SF, root, docs_df=docs, n_buckets=8, wave_size=8
+    )
+    eng.precompute_thresholds(k=5)
+    # a real term with a stored threshold, then in 300 new docs: its
+    # df jumps, so its stored k-th score exceeds every new score
+    rare = min(
+        (t for t, d in eng._lexicon.items() if d >= 5 and t.isalpha()),
+        key=lambda t: (eng._lexicon[t], t),
+    )
+    first = int(docs.agg(F.max("doc_id")).collect()[0][0]) + 1
+    extra = spark.range(first, first + 300).select(
+        F.col("id").alias("doc_id"), F.lit(f"xray {rare}").alias("text")
+    )
+    grown = SearchEngine.build(
+        spark, SF, root, docs_df=docs.unionByName(extra),
+        n_buckets=8, wave_size=8,
+    )
+    query = [f"xray {rare}"]
+    base = _rows(grown.search_batch(query, k=5))
+    assert len(base) == 5
+    assert _rows(grown.search_batch(query, k=5, primed=True)) == base
+    # a precompute on the grown index primes again, still identically
+    grown.precompute_thresholds(k=5)
+    fresh = SearchEngine.load(spark, root)
+    assert _rows(fresh.search_batch(query, k=5, primed=True)) == base

@@ -178,3 +178,37 @@ def test_wildcard_negation_composes(built, spark):
     }
     assert {r["doc_id"] for r in neg} == set(base) - joined
     assert all(round(r["score"], 9) == base[r["doc_id"]] for r in neg)
+
+
+def test_stale_kgram_table_after_growth_is_not_used(spark, tmp_path):
+    """A k-gram table derived before the corpus grew misses the new
+    terms; serving treats it as absent, so '*tion' expands against the
+    grown vocabulary and returns the table-free answer."""
+    from pisa_spark.engine import SearchEngine
+
+    root = str(tmp_path / "kidx")
+    texts = ["station data", "merge scan", "station join", "data join"]
+    old = spark.createDataFrame(
+        [(i, texts[i % len(texts)]) for i in range(40)],
+        "doc_id long, text string",
+    )
+    eng = SearchEngine.build(spark, None, root, docs_df=old, docs_per_bucket=16)
+    eng.precompute_kgrams()
+    new = spark.createDataFrame(
+        [(40 + i, "nation emotion") for i in range(10)],
+        "doc_id long, text string",
+    )
+    grown = SearchEngine.build(
+        spark, None, root, docs_df=old.unionByName(new), docs_per_bucket=16
+    )
+    got = grown.search_wildcard("*tion", k=10).collect()
+    want = wildcard_topk(
+        grown.postings,
+        [{"query_id": 0, "terms": [], "wildcards": ["*tion"]}],
+        grown.stats["n_docs"], grown.stats["avgdl"], k=10,
+        pre_arranged=True, kgrams=None,
+    ).collect()
+    assert [(r["rank"], r["doc_id"], round(r["score"], 9)) for r in got] == [
+        (r["rank"], r["doc_id"], round(r["score"], 9)) for r in want
+    ]
+    assert {r["doc_id"] for r in got} & set(range(40, 50))
