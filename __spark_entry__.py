@@ -135,9 +135,10 @@ stats AS (SELECT count(*) AS n_docs, avg(doc_len) AS avgdl FROM doclen)
 _OR_QUERIES = [(0, ["data", "join"]), (1, ["the"]), (2, ["spark", "query", "scan"])]
 _AND_QUERIES = [(10, ["window", "merge", "scan"]), (11, ["data", "table"])]
 # single mixed-idf query (rare positive 'dup' + head negative-idf
-# 'query'): run alone so the WAND latency path (per-query block prune,
-# two-phase threshold) is the one under test — regression gate for the
-# unsound negative-idf block prune under OR semantics
+# 'query'): run alone so the WAND latency path (per-query masked
+# decode, not the batch's shared union decode) is the one under test —
+# regression gate for the unsound negative-idf block prune under OR
+# semantics
 _MIXED_QUERIES = [(20, ["dup", "query"])]
 
 
@@ -867,11 +868,9 @@ def _scored_pruned_df(
     k: int = 10,
 ) -> DataFrame:
     """Same result contract as _scored_df but served through the
-    bucket-local pruned kernel (query/scored_kernel.scored_topk_pruned)
-    off the compressed index with two-phase thresholds ACTIVE — the
-    gate replays the exhaustive relational oracle SQL against the
-    pruned path, proving block-bound soundness (qld: corner bounds;
-    pl2/dph: bound pass-through) end to end."""
+    bucket-local kernel (query/scored_kernel.scored_topk_pruned) off
+    the compressed index — the gate replays the exhaustive relational
+    oracle SQL against the kernel path end to end."""
     toks = _tokens(spark, sf_dir)
     row = toks.agg(
         F.count(F.lit(1)), F.avg("doc_len"), F.sum("doc_len")
@@ -884,7 +883,7 @@ def _scored_pruned_df(
     ]
     out = scored_topk_pruned(
         postings, queries, n_docs, avgdl, float(total_cf),
-        scorer=scorer, k=k, two_phase=True,
+        scorer=scorer, k=k,
     )
     return out.select(
         "query_id", "rank", "doc_id", F.round("score", 4).alias("score")
@@ -2271,7 +2270,7 @@ def _bm25_wand(
         for qid, terms in qs
     ]
     out = bm25_topk_wand(
-        postings, queries, stats["n_docs"], stats["avgdl"], k=k, two_phase=True
+        postings, queries, stats["n_docs"], stats["avgdl"], k=k
     )
     return out.select(
         "query_id", "rank", "doc_id", F.round("score", 4).alias("score")
@@ -2340,8 +2339,8 @@ _PRIMED_QUERIES = [
 
 
 def _bm25_primed(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
-    """WAND serving with build-time primed thresholds (no phase-1
-    bootstrap job): rank-identical to the exhaustive BM25 oracle."""
+    """WAND serving with build-time primed thresholds: rank-identical
+    to the exhaustive BM25 oracle."""
     from pisa_spark.query.thresholds import prime_thresholds, term_kth_scores
 
     postings, stats = _built_index(spark, sf_dir)
@@ -2613,7 +2612,7 @@ def _fusion_runs(spark: SparkSession, sf_dir: str, qs, depth: int = _FUSION_DEPT
         bm25 = bm25_topk_wand(postings, queries, n_docs, avgdl, k=depth)
         qld = scored_topk_pruned(
             postings, queries, n_docs, avgdl, float(total_cf),
-            scorer="qld", k=depth, two_phase=True,
+            scorer="qld", k=depth,
         )
         _MEMO[key] = (bm25.cache(), qld.cache())
     return _MEMO[key]
@@ -3357,7 +3356,6 @@ def _bm25_reordered(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     ]
     out = bm25_topk_wand(
         postings, queries, stats["n_docs"], stats["avgdl"], k=k,
-        two_phase=True,
     )
     return restore_ids(out, mapping).select(
         "query_id", "rank", "doc_id", F.round("score", 4).alias("score")
@@ -3443,7 +3441,6 @@ def _bm25_bisected(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     ]
     out = bm25_topk_wand(
         postings, queries, stats["n_docs"], stats["avgdl"], k=k + 50,
-        two_phase=True,
     )
     back = restore_ids(out, mapping).select(
         "query_id", "doc_id", F.round("score", 4).alias("score")
@@ -3503,7 +3500,6 @@ def _search_mmr(
     ]
     cands = bm25_topk_wand(
         postings, queries, stats["n_docs"], stats["avgdl"], k=n_cand,
-        two_phase=True,
     )
     toks = candidate_tokens(_docs(spark, sf_dir))
     return mmr_rerank(cands, toks, k=k, div10=5)
@@ -3673,7 +3669,6 @@ def _bm25_deleted(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     )
     out = bm25_topk_wand(
         postings, queries, stats["n_docs"], stats["avgdl"], k=k,
-        two_phase=True,
     )
     return out.select(
         "query_id", "rank", "doc_id", F.round("score", 4).alias("score")
@@ -3694,7 +3689,7 @@ def _bm25_page(
     ]
     out = bm25_topk_wand(
         postings, queries, stats["n_docs"], stats["avgdl"],
-        k=offset + size, two_phase=True,
+        k=offset + size,
     )
     return out.filter(F.col("rank") > offset).select(
         "query_id",
@@ -3758,7 +3753,6 @@ def _bm25_boolean(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     ]
     out = bm25_topk_wand(
         postings, queries, stats["n_docs"], stats["avgdl"], k=k,
-        two_phase=True,
     )
     return out.select(
         "query_id", "rank", "doc_id", F.round("score", 4).alias("score")
@@ -4348,7 +4342,6 @@ def _bm25_negation(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     ]
     out = bm25_topk_wand(
         postings, queries, stats["n_docs"], stats["avgdl"], k=k,
-        two_phase=True,
     )
     return out.select(
         "query_id", "rank", "doc_id", F.round("score", 4).alias("score")
@@ -4407,7 +4400,7 @@ def _bm25_maxscore(
         for qid, terms in qs
     ]
     out = bm25_topk_maxscore(
-        postings, queries, stats["n_docs"], stats["avgdl"], k=k, two_phase=True
+        postings, queries, stats["n_docs"], stats["avgdl"], k=k
     )
     return out.select(
         "query_id", "rank", "doc_id", F.round("score", 4).alias("score")
@@ -5617,8 +5610,7 @@ def _bm25f_quant_df(
     """Quantized BM25F off the combined-units table
     (query/bm25f_quant.py): per-field weights/normalization baked into
     uint32 pseudo-tf units at build, integer saturation + idf at serve
-    — exactly deterministic fielded ranking, two-phase thresholds
-    active so the gate also proves the saturated corner bounds."""
+    — exactly deterministic fielded ranking."""
     from pisa_spark.query.bm25f_quant import (
         bm25f_quantized_topk,
         build_bm25f_quantized,
@@ -5639,7 +5631,7 @@ def _bm25f_quant_df(
         for qid, terms in qs
     ]
     return bm25f_quantized_topk(
-        postings, queries, n_docs, k=k, two_phase=True
+        postings, queries, n_docs, k=k
     )
 
 

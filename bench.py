@@ -101,33 +101,21 @@ def main() -> None:
     # cost a warm serving cluster has already paid — same rationale as
     # the JVM/Python warm-up above, applied to the query plan shape
     warm_terms = sorted(term_dfs, key=term_dfs.get, reverse=True)[:2]
-    for warm_2p in (False, True):  # warm both plan shapes (default + 2p)
-        bm25_topk_wand(
-            postings,
-            [{"query_id": -1, "terms": warm_terms, "conjunctive": False}],
-            stats["n_docs"], stats["avgdl"], k=10, two_phase=warm_2p,
-            term_dfs={t: term_dfs[t] for t in warm_terms}, pre_arranged=True,
-        ).collect()
+    bm25_topk_wand(
+        postings,
+        [{"query_id": -1, "terms": warm_terms, "conjunctive": False}],
+        stats["n_docs"], stats["avgdl"], k=10,
+        term_dfs={t: term_dfs[t] for t in warm_terms}, pre_arranged=True,
+    ).collect()
 
     # --- queries (each timed to a collected result) ---
-    # two_phase=False is the facade default at every batch size now:
-    # the phase-1 threshold bootstrap measured slower at BOTH scale
-    # points (2.5x at sf0.1, 1.4-1.9x single-query at 10.24M docs —
-    # BENCH.md pruning table), so singles measure the default path and
-    # one diagnostic entry keeps the bootstrap variant visible.
     for q in BENCH_QUERIES:
         t0 = time.perf_counter()
         bm25_topk_wand(
             postings, [q], stats["n_docs"], stats["avgdl"], k=10,
-            two_phase=False, term_dfs=term_dfs, pre_arranged=True,
+            term_dfs=term_dfs, pre_arranged=True,
         ).collect()
         timings[f"q{q['query_id']}"] = round(time.perf_counter() - t0, 4)
-    t0 = time.perf_counter()
-    bm25_topk_wand(
-        postings, [BENCH_QUERIES[0]], stats["n_docs"], stats["avgdl"], k=10,
-        two_phase=True, term_dfs=term_dfs, pre_arranged=True,
-    ).collect()
-    timings["q0_2p"] = round(time.perf_counter() - t0, 4)
     # batched: all queries in one pass (the serving-path shape)
     t0 = time.perf_counter()
     bm25_topk_wand(
@@ -159,17 +147,6 @@ def main() -> None:
     # "value" (the entries below are additive diagnostics, timed but
     # not counted into the suite total)
     total = time.perf_counter() - t_all
-
-    # batch64 with two-phase thresholds (phase-1 sample bootstrap then
-    # pruned phase-2) — the union-mask decode honors per-query
-    # thresholds, so this measures whether pruning pays in batch mode
-    t0 = time.perf_counter()
-    bm25_topk_wand(
-        postings, big_batch, stats["n_docs"], stats["avgdl"], k=10,
-        two_phase=True, term_dfs=term_dfs, pre_arranged=True,
-    ).collect()
-    t_big2 = time.perf_counter() - t0
-    timings["q_batch64_2p"] = round(t_big2, 4)
 
     # same 64-query batch through MaxScore (impact-ordered TAAT with
     # candidate freezing) — rank-identical by contract, timed here to
@@ -514,7 +491,6 @@ def main() -> None:
         "latency_p50_s": p50,
         "latency_p95_s": p95,
         "batch64_queries_per_s": round(64 / t_big, 2),
-        "batch64_2p_queries_per_s": round(64 / t_big2, 2),
         "quant_payload_bytes": int(quant_bytes),
         "positional_payload_bytes": int(
             pos_agg["base_bytes"] + pos_agg["poss_bytes"]

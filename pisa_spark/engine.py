@@ -263,8 +263,8 @@ class SearchEngine:
 
     def delete_docs(self, doc_ids, persist: bool = True) -> "SearchEngine":
         """Tombstone-delete documents: they can no longer be returned
-        by search()/search_batch() (incl. filters, negation, AND,
-        two-phase), while surviving docs keep their exact scores —
+        by search()/search_batch() (incl. filters, negation, AND and
+        primed pruning), while surviving docs keep their exact scores —
         Lucene semantics: corpus stats stay stale until the next
         incremental rebuild compacts the tombstones away.
 
@@ -465,18 +465,10 @@ class SearchEngine:
         return out
 
     def search(
-        self, query, k: int = 10, two_phase: bool = False,
-        algorithm: str = "wand", primed: bool = False,
+        self, query, k: int = 10, algorithm: str = "wand",
+        primed: bool = False,
     ) -> DataFrame:
         """One query (string or dict) -> (query_id, rank, doc_id, score).
-
-        two_phase defaults OFF for single queries too (it was the one
-        surface still defaulting on): the phase-1 threshold bootstrap
-        is an extra Spark job + collect on the latency path, and it
-        measured slower at BOTH scale points — 2.5x at sf0.1 (5k docs)
-        and 1.4-1.9x at 10.24M docs (BENCH.md pruning table). It stays
-        available as an explicit hint for corpora where block-max
-        spread makes threshold skipping effective.
 
         A double-quoted segment makes it a MIXED query: the phrase is
         required (positional index needed), loose terms boost the
@@ -494,8 +486,8 @@ class SearchEngine:
                     "'+' does not combine with a quoted phrase — loose"
                     " terms beside a phrase boost, they never filter"
                 )
-            # two_phase/algorithm are pruning hints for the term
-            # kernels; the mixed kernel has its own candidate gating.
+            # algorithm is a pruning hint for the term kernels; the
+            # mixed kernel has its own candidate gating.
             # Attribute filters, '-term' negation and tombstone deletes
             # all COMPOSE: the positional kernels gate the candidate
             # set bucket-locally (query/bm25.py phrase_kernel) exactly
@@ -532,8 +524,7 @@ class SearchEngine:
                 pre_arranged=self._pre_arranged,
             )
         return self.search_batch(
-            [q], k=k, two_phase=two_phase, algorithm=algorithm,
-            primed=primed,
+            [q], k=k, algorithm=algorithm, primed=primed
         )
 
     # above this many queries, MaxScore's per-query term-at-a-time
@@ -544,8 +535,7 @@ class SearchEngine:
     MAXSCORE_BATCH_LIMIT = 8
 
     def search_batch(
-        self, queries, k: int = 10, two_phase: bool = False,
-        algorithm: str = "wand", strict_algorithm: bool = False,
+        self, queries, k: int = 10, algorithm: str = "wand",
         primed: bool = False,
     ) -> DataFrame:
         """Batch of queries in one pass. algorithm: 'wand' (block-max
@@ -553,22 +543,19 @@ class SearchEngine:
         default) or 'maxscore' (impact-ordered term-at-a-time with
         candidate freezing — strongest on long disjunctive queries mixing
         rare and stop-word-ish terms). Both are rank-identical to the
-        exhaustive scorer; two_phase stays opt-in for batches (measured
-        slower at bench scales — see BENCH.md).
+        exhaustive scorer.
 
         'maxscore' is a single-query latency mode: for batches larger
-        than MAXSCORE_BATCH_LIMIT it is rerouted to the WAND
-        union-decode with a warning (identical ranks, ~2x less work at
-        10M docs). Pass strict_algorithm=True to force the requested
-        kernel anyway (e.g. for kernel A/B measurement).
+        than MAXSCORE_BATCH_LIMIT, or batches with attribute filters,
+        it is rerouted to the WAND union-decode with a warning
+        (identical ranks, ~2x less work at 10M docs).
 
         primed=True starts pruning from the precomputed per-term k-th
         score bounds (precompute_thresholds — PISA's kth_threshold
-        tool) instead of -inf: the threshold skipping of two_phase
-        without its phase-1 job + collect. Rank-identical by the bound
-        soundness contract; ineligible queries (conjunctive, negated,
-        filtered, negative-idf terms, k above the table's K) simply
-        stay unprimed."""
+        tool) instead of -inf, with no extra Spark job. Rank-identical
+        by the bound soundness contract; ineligible queries
+        (conjunctive, negated, filtered, negative-idf terms, k above
+        the table's K) simply stay unprimed."""
         import warnings
 
         from pisa_spark.query.bm25 import bm25_topk_maxscore
@@ -577,15 +564,12 @@ class SearchEngine:
         if algorithm not in impl:
             raise ValueError(f"algorithm must be one of {sorted(impl)}")
         normalized = self._normalize(queries)
-        if (
-            algorithm == "maxscore"
-            and any(q.get("filter") for q in normalized)
-            and not strict_algorithm
+        if algorithm == "maxscore" and any(
+            q.get("filter") for q in normalized
         ):
             # algorithm is a physical-strategy hint, never an answer
             # change: MaxScore has no include intersection, so filtered
-            # queries reroute to WAND (strict_algorithm surfaces the
-            # kernel's own refusal instead, for explicit A/B runs)
+            # queries reroute to WAND
             warnings.warn(
                 "search_batch: attribute filters are served by the WAND"
                 " kernel; rerouting this batch (rank-identical).",
@@ -595,13 +579,12 @@ class SearchEngine:
         if (
             algorithm == "maxscore"
             and len(normalized) > self.MAXSCORE_BATCH_LIMIT
-            and not strict_algorithm
         ):
             warnings.warn(
                 f"search_batch: maxscore is a single-query latency mode;"
                 f" rerouting this {len(normalized)}-query batch to the"
                 f" WAND union-decode (rank-identical, ~2x faster at"
-                f" scale). strict_algorithm=True forces maxscore.",
+                f" scale).",
                 stacklevel=2,
             )
             algorithm = "wand"
@@ -614,7 +597,6 @@ class SearchEngine:
             self.stats["n_docs"],
             self.stats["avgdl"],
             k=k,
-            two_phase=two_phase,
             term_dfs=term_dfs,
             pre_arranged=self._pre_arranged,
             primed_thresholds=(
@@ -1165,15 +1147,11 @@ class SearchEngine:
         top-k window — no per-posting shuffle, unlike the relational
         scored_topk_dataframe path (which remains the oracle twin).
 
-        Pruning is scorer-aware with exactness first: QLD (and BM25)
-        are corner-monotone, so the stored (tf, dl) corner stats give
-        exact block bounds when two-phase thresholds are active; PL2 /
-        DPH are not corner-monotone and always decode their kept
-        terms fully — same dataflow, no block skipping. per-term df/cf
-        are cached per engine generation; total_cf comes from the
-        stored corpus stats. '-term' negation, attribute filters and
-        tombstone deletes compose (bucket-local exclusion/inclusion,
-        the WAND kernel's machinery)."""
+        Every scorer decodes its queried terms' blocks fully (no block
+        skipping). Per-term df/cf are cached per engine generation;
+        total_cf comes from the stored corpus stats. '-term' negation,
+        attribute filters and tombstone deletes compose (bucket-local
+        exclusion/inclusion, the WAND kernel's machinery)."""
         from pisa_spark.query.scored_kernel import scored_topk_pruned
 
         normalized = self._normalize(queries)
@@ -1888,9 +1866,7 @@ class SearchEngine:
             doc_ids=doc_ids,
         )
 
-    def search_filtered(
-        self, query, filters, k: int = 10, two_phase: bool = False
-    ) -> DataFrame:
+    def search_filtered(self, query, filters, k: int = 10) -> DataFrame:
         """Attribute-filtered search: BM25 over the query's terms,
         restricted to docs matching EVERY filter, e.g.
         search_filtered("data join", {"lang": "en"}).
@@ -1964,7 +1940,7 @@ class SearchEngine:
             # intersection — route through search()'s mixed path (the
             # deletes exclusion and one-phrase rule live there)
             q["filter"] = list(q.get("filter", [])) + fterms
-            return self.search(q, k=k, two_phase=two_phase)
+            return self.search(q, k=k)
         norm = self._normalize([q])[0]
         # a dict query may carry its own filter spec too — concatenate
         # groups (AND semantics make duplicates harmless)
@@ -1980,7 +1956,6 @@ class SearchEngine:
             self.stats["n_docs"],
             self.stats["avgdl"],
             k=k,
-            two_phase=two_phase,
             term_dfs=self._term_dfs(
                 set(norm["terms"]) | set(norm.get("negated", [])) | flat
             ),
@@ -2585,10 +2560,10 @@ class FederatedEngine:
             lexicons=lexicons,
         )
 
-    def search(self, query, k: int = 10, two_phase: bool = False):
-        return self.search_batch([query], k=k, two_phase=two_phase)
+    def search(self, query, k: int = 10):
+        return self.search_batch([query], k=k)
 
-    def search_batch(self, queries, k: int = 10, two_phase: bool = False):
+    def search_batch(self, queries, k: int = 10):
         from pisa_spark.query.bm25 import bm25_topk_federated
 
         norm = []
@@ -2617,7 +2592,7 @@ class FederatedEngine:
                 }
             )
         return bm25_topk_federated(
-            self.members, norm, k=k, two_phase=two_phase,
+            self.members, norm, k=k,
             pre_arranged=self._pre_arranged, lexicons=self._lexicons,
         )
 

@@ -42,7 +42,8 @@ per-bucket serving and the global top-k merge are identical.
 Scale shape: one (bucket, term) shuffle at build (same as
 build_postings); serving is a term-pruned scan (PushedFilters on the
 query's terms) -> per-bucket Arrow kernel -> <= n_buckets*|q|*k row
-top-k window. max impact per block is stored for block-max pruning.
+top-k window. Max and min impact per block are stored as block-max
+metadata; no serving path prunes on them today.
 
 Reference parity: quantized scoring generalizes the reference's
 integer-rank inference (exact top-k over precomputed score matrices,
@@ -298,76 +299,18 @@ def _quant_block_docs(g: pd.DataFrame) -> np.ndarray:
     return np.unique(_decode_quant_blocks(g)[0])
 
 
-def _quant_keep_masks(
-    present: list[str],
-    conjunctive: bool,
-    idf_q: dict[str, int],
-    by_term: dict[str, pd.DataFrame],
-    threshold: int | None,
-) -> dict[str, np.ndarray] | None:
-    """Block-level keep masks for one query in one bucket under an
-    integer threshold, or None when the bucket provably cannot reach it.
-
-    Same soundness contract as the float path's _query_keep_masks
-    (query/bm25.py), with one structural improvement: every bound here
-    is an EXACT int64 — the block upper bound idf_q*imp_max (idf_q>=0)
-    or idf_q*imp_min (idf_q<0) is attained by a posting hitting the
-    corner, with zero float association error — so no epsilon slack is
-    needed and `bound >= threshold` keeps exactly the blocks that
-    could still contain a doc tying or beating the k-th score.
-    Negative-idf_q terms stay undroppable under OR (skipping them
-    would inflate other-match docs' scores), mirroring the float
-    kernel's negative-idf rule."""
-    ubs: dict[str, np.ndarray] = {}
-    for t in present:
-        g = by_term[t]
-        iq = int(idf_q[t])
-        corner = g["imp_max"] if iq >= 0 else g["imp_min"]
-        ubs[t] = iq * corner.to_numpy(np.int64)
-    if threshold is None:
-        return {t: np.ones(len(ubs[t]), bool) for t in present}
-    term_max = {t: int(ubs[t].max()) for t in present}
-    if conjunctive:
-        total = sum(term_max.values())
-        others = {t: total - term_max[t] for t in present}
-        best_bound = total
-    else:
-        pos = {t: max(term_max[t], 0) for t in present}
-        pos_sum = sum(pos.values())
-        others = {t: pos_sum - pos[t] for t in present}
-        best_bound = max(term_max[t] + others[t] for t in present)
-    if best_bound < threshold:
-        return None
-    masks: dict[str, np.ndarray] = {}
-    for t in present:
-        if not conjunctive and int(idf_q[t]) < 0:
-            masks[t] = np.ones(len(ubs[t]), bool)
-            continue
-        m = ubs[t] + others[t] >= threshold
-        if conjunctive and not m.any():
-            return None
-        masks[t] = m
-    return masks
-
-
 def quantized_kernel(
     queries: list[dict],
     idf_q: dict[str, int],
     k: int,
-    thresholds: dict[int, int] | None = None,
 ):
     """Per-bucket integer top-k closure.
 
-    Per term, decode the UNION of the batch's kept blocks ONCE; every
-    query then accumulates the decoded arrays in full — extra blocks
-    (kept for another query) only move a doc's score toward exact,
-    which is always sound. Scores accumulate via bincount over the
-    unique-doc inverse (exact — see the in-kernel note); AND keeps docs
-    whose matched-term count equals the query's distinct-term count
-    (each term contributes one posting per doc). thresholds: per-query
-    integer lower bounds on the global k-th score (from the two-phase
-    bootstrap); empty -> no pruning."""
-    thresholds = thresholds or {}
+    Per term, decode the bucket's blocks ONCE for the whole batch;
+    every query then accumulates the shared arrays. Scores accumulate
+    via bincount over the unique-doc inverse (exact — see the in-kernel
+    note); AND keeps docs whose matched-term count equals the query's
+    distinct-term count (each term contributes one posting per doc)."""
 
     def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pisa_spark.query.bm25 import (
@@ -384,7 +327,7 @@ def quantized_kernel(
         for _, bucket_blocks in all_blocks.groupby("bucket", sort=False):
             by_term = dict(tuple(bucket_blocks.groupby("term", sort=False)))
             fx_cache: dict[str, np.ndarray] = {}
-            plans = []
+            decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
             for q in queries:
                 terms = list(dict.fromkeys(q["terms"]))
                 present = [t for t in terms if t in by_term]
@@ -392,34 +335,13 @@ def quantized_kernel(
                     q["conjunctive"] and len(present) < len(terms)
                 ):
                     continue
-                masks = _quant_keep_masks(
-                    present, q["conjunctive"], idf_q, by_term,
-                    thresholds.get(q["query_id"]),
-                )
-                if masks is not None:
-                    plans.append((q, terms, present, masks))
-            if not plans:
-                continue
-            union: dict[str, np.ndarray] = {}
-            for _, _, present, masks in plans:
-                for t in present:
-                    union[t] = (
-                        masks[t] if t not in union else union[t] | masks[t]
-                    )
-            decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for t, um in union.items():
-                if um.any():
-                    decoded[t] = _decode_quant_blocks(by_term[t][um])
-            for q, terms, present, masks in plans:
                 doc_parts, contrib_parts = [], []
                 for t in present:
                     if t not in decoded:
-                        continue
+                        decoded[t] = _decode_quant_blocks(by_term[t])
                     docs, imps = decoded[t]
                     doc_parts.append(docs)
                     contrib_parts.append(imps * int(idf_q[t]))
-                if not doc_parts:
-                    continue
                 docs_all = np.concatenate(doc_parts)
                 contribs = np.concatenate(contrib_parts)
                 uniq, inv = np.unique(docs_all, return_inverse=True)
@@ -508,8 +430,6 @@ def quantized_topk(
     k: int = 10,
     term_dfs: dict[str, int] | None = None,
     pre_arranged: bool = False,
-    two_phase: bool = False,
-    sample_buckets: int = 2,
 ) -> DataFrame:
     """Top-k over the quantized index: (query_id, rank, doc_id,
     score_q:long). queries: [{query_id, terms, conjunctive}].
@@ -517,14 +437,7 @@ def quantized_topk(
     Ranking is EXACT under the quantization contract — integer scores,
     ties broken doc_id ASC — so two runs (or two engines) can never
     disagree. df per term = sum(n) over its blocks, as in the exact
-    path; idf_q is computed driver-side for the query's terms only.
-
-    two_phase: bootstrap per-query integer thresholds by scoring
-    ``sample_buckets`` exhaustively (their collected top-k rows are
-    reused as those buckets' partial results, so nothing is read
-    twice); phase 2 prunes blocks with the EXACT integer block-max
-    bounds (_quant_keep_masks — no epsilon slack). A threshold is only
-    applied once a query has a full k phase-1 rows."""
+    path; idf_q is computed driver-side for the query's terms only."""
     from pisa_spark.query.bm25 import _arrange_pruned, _flat_filters
 
     all_terms = sorted({t for q in queries for t in q["terms"]})
@@ -545,44 +458,10 @@ def quantized_topk(
         for t in all_terms
         if t in term_dfs
     }
-    if not two_phase:
-        local = arranged.mapInPandas(
-            quantized_kernel(queries, idf_q, k), schema=_TOPK_SCHEMA
-        )
-        return _quant_topk_window(local, k)
-    spark = arranged.sparkSession
-    sample = arranged.filter(F.col("bucket") < sample_buckets)
-    phase1_rows = (
-        _quant_topk_window(
-            sample.mapInPandas(
-                quantized_kernel(queries, idf_q, k), schema=_TOPK_SCHEMA
-            ),
-            k,
-        )
-        .select("query_id", "doc_id", "score_q")
-        .collect()
+    local = arranged.mapInPandas(
+        quantized_kernel(queries, idf_q, k), schema=_TOPK_SCHEMA
     )
-    counts: dict[int, int] = {}
-    kth: dict[int, int] = {}
-    for r in phase1_rows:
-        qid = r["query_id"]
-        counts[qid] = counts.get(qid, 0) + 1
-        kth[qid] = min(kth.get(qid, np.iinfo(np.int64).max), int(r["score_q"]))
-    thresholds = {q: kth[q] for q, c in counts.items() if c >= k}
-    rest = arranged.filter(F.col("bucket") >= sample_buckets)
-    partial = rest.mapInPandas(
-        quantized_kernel(queries, idf_q, k, thresholds), schema=_TOPK_SCHEMA
-    )
-    if phase1_rows:
-        phase1_df = spark.createDataFrame(
-            [
-                (r["query_id"], r["doc_id"], r["score_q"])
-                for r in phase1_rows
-            ],
-            schema=_TOPK_SCHEMA,
-        )
-        partial = partial.unionByName(phase1_df)
-    return _quant_topk_window(partial, k)
+    return _quant_topk_window(local, k)
 
 
 QUANT_TABLE = "postings_quant"

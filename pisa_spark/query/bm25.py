@@ -168,7 +168,7 @@ def _block_bounds(
     association) as the scorer, so a posting that attains the block's
     corners gets a bound bit-identical to its score — an independently
     associated formula can land one ulp below an achieved score used as
-    a two-phase threshold and unsoundly skip the block/bucket holding
+    a pruning threshold and unsoundly skip the block/bucket holding
     the true top doc (caught by tests/test_wand_fuzz.py).
     """
     idf, bmax = {}, {}
@@ -602,8 +602,6 @@ def bm25_topk_wand(
     n_docs: float,
     avgdl: float,
     k: int = 10,
-    two_phase: bool = False,
-    sample_buckets: int = 2,
     term_dfs: dict[str, int] | None = None,
     pre_arranged: bool = False,
     primed_thresholds: dict[int, float] | None = None,
@@ -616,17 +614,9 @@ def bm25_topk_wand(
     queries: [{query_id, terms, conjunctive}] — small, shipped in the
     closure (the broadcast-side of SURVEY T13).
 
-    two_phase: bootstrap per-query pruning thresholds by fully scoring a
-    few buckets first. Any k docs' k-th score from a subset is a valid
-    lower bound on the global k-th score, so phase-2 pruning is exact;
-    at 10^12 docs this skips decoding for the vast majority of blocks
-    of head terms while only metadata (block_max_score) is scanned.
-
     primed_thresholds: per-query VALID lower bounds on the global k-th
     score, precomputed at build time (query/thresholds.py — PISA's
-    kth_threshold tool). Pruning starts from them instead of -inf, with
-    no phase-1 job; composes with two_phase (phase 2 takes the max of
-    the primed and bootstrapped bounds).
+    kth_threshold tool). Pruning starts from them instead of -inf.
 
     pre_arranged: the input already holds every bucket wholly inside
     one partition (the serving layout: the catalog stores postings
@@ -650,91 +640,13 @@ def bm25_topk_wand(
     arranged, term_dfs = _arrange_pruned(
         postings, all_terms, term_dfs, pre_arranged
     )
-    return _two_phase_topk(
-        wand_kernel, arranged, queries, n_docs, avgdl, k,
-        two_phase, sample_buckets, term_dfs, primed_thresholds,
-    )
-
-
-def _two_phase_topk(
-    kernel_factory,
-    arranged: DataFrame,
-    queries: list[dict],
-    n_docs: float,
-    avgdl: float,
-    k: int,
-    two_phase: bool,
-    sample_buckets: int,
-    term_dfs: dict[str, int],
-    primed: dict[int, float] | None = None,
-) -> DataFrame:
-    """Shared phase-1/phase-2 driver for both pruning kernels.
-
-    Phase 1 scores the sample buckets exhaustively (no thresholds), so
-    its per-bucket candidates are exactly what a thresholded pass would
-    keep — they are REUSED as those buckets' partial results
-    (collected k rows per query re-shipped as a literal frame) and
-    phase 2 scans only bucket >= sample_buckets. The sampled buckets
-    are never read twice, and the thresholds ride along for free from
-    the same collect that builds the reused rows.
-
-    primed: precomputed per-query lower bounds (query/thresholds.py).
-    They seed BOTH phases — phase-1 candidates below a primed bound
-    are dropped early, which is exact because a primed bound already
-    proves >= k docs score above them globally; phase 2 prunes with
-    max(primed, phase-1 k-th)."""
-    primed = primed or {}
-    if not two_phase:
-        partial = arranged.mapInPandas(
-            kernel_factory(
-                queries, float(n_docs), float(avgdl), k, term_dfs,
-                primed or None,
-            ),
-            schema=TOPK_RESULT_SCHEMA,
-        )
-        return topk_window(partial, k)
-    spark = arranged.sparkSession
-    sample = arranged.filter(F.col("bucket") < sample_buckets)
-    phase1_rows = (
-        topk_window(
-            sample.mapInPandas(
-                kernel_factory(
-                    queries, float(n_docs), float(avgdl), k, term_dfs,
-                    primed or None,
-                ),
-                schema=TOPK_RESULT_SCHEMA,
-            ),
-            k,
-        )
-        .select("query_id", "doc_id", "score")
-        .collect()
-    )
-    counts: dict[int, int] = {}
-    kth: dict[int, float] = {}
-    for r in phase1_rows:
-        counts[r["query_id"]] = counts.get(r["query_id"], 0) + 1
-        kth[r["query_id"]] = min(
-            kth.get(r["query_id"], np.inf), r["score"]
-        )
-    # a bootstrapped threshold is only valid once we have a full k
-    # results; a primed bound is valid unconditionally — take the max
-    thresholds = dict(primed)
-    for q, c in counts.items():
-        if c >= k:
-            thresholds[q] = max(thresholds.get(q, -np.inf), kth[q])
-    rest = arranged.filter(F.col("bucket") >= sample_buckets)
-    partial = rest.mapInPandas(
-        kernel_factory(
-            queries, float(n_docs), float(avgdl), k, term_dfs, thresholds
+    partial = arranged.mapInPandas(
+        wand_kernel(
+            queries, float(n_docs), float(avgdl), k, term_dfs,
+            primed_thresholds,
         ),
         schema=TOPK_RESULT_SCHEMA,
     )
-    if phase1_rows:
-        phase1_df = spark.createDataFrame(
-            [(r["query_id"], r["doc_id"], r["score"]) for r in phase1_rows],
-            schema=TOPK_RESULT_SCHEMA,
-        )
-        partial = partial.unionByName(phase1_df)
     return topk_window(partial, k)
 
 
@@ -797,8 +709,8 @@ def _maxscore_or(
     Soundness (pruning must never change the returned top-k):
 
     * tau is always a valid lower bound on this bucket's k-th FINAL
-      score: it starts from the caller's two-phase threshold (a global
-      k-th lower bound) and is only raised to the k-th largest
+      score: it starts from the caller's primed threshold (a global
+      k-th lower bound, or -inf) and is only raised to the k-th largest
       ACCUMULATED partial — partials are per-doc lower bounds of finals
       (negative-idf terms are applied FIRST in full, so every remaining
       contribution is >= 0), and the k-th largest of lower bounds never
@@ -1015,8 +927,6 @@ def bm25_topk_maxscore(
     n_docs: float,
     avgdl: float,
     k: int = 10,
-    two_phase: bool = False,
-    sample_buckets: int = 2,
     term_dfs: dict[str, int] | None = None,
     pre_arranged: bool = False,
     primed_thresholds: dict[int, float] | None = None,
@@ -1024,9 +934,7 @@ def bm25_topk_maxscore(
     """MaxScore top-k over the compressed index — same signature,
     result contract and plan shape as bm25_topk_wand (term-pruned scan
     -> per-bucket kernel -> global top-k window); only the per-bucket
-    pruning strategy differs. two_phase bootstraps thresholds exactly
-    as the WAND driver does (any k docs' k-th score from a bucket
-    subset is a valid global lower bound)."""
+    pruning strategy differs."""
     if any(q.get("filter") for q in queries):
         raise ValueError(
             "attribute filters are served by the WAND path"
@@ -1040,10 +948,14 @@ def bm25_topk_maxscore(
     arranged, term_dfs = _arrange_pruned(
         postings, all_terms, term_dfs, pre_arranged
     )
-    return _two_phase_topk(
-        maxscore_kernel, arranged, queries, n_docs, avgdl, k,
-        two_phase, sample_buckets, term_dfs, primed_thresholds,
+    partial = arranged.mapInPandas(
+        maxscore_kernel(
+            queries, float(n_docs), float(avgdl), k, term_dfs,
+            primed_thresholds,
+        ),
+        schema=TOPK_RESULT_SCHEMA,
     )
+    return topk_window(partial, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1450,7 +1362,6 @@ def bm25_topk_federated(
     indexes: list[tuple[DataFrame, dict]],
     queries: list[dict],
     k: int = 10,
-    two_phase: bool = False,
     pre_arranged: bool = False,
     lexicons: list[dict[str, int] | None] | None = None,
 ) -> DataFrame:
@@ -1478,9 +1389,7 @@ def bm25_topk_federated(
     scores its own buckets under the COMBINED stats (the corner-stat
     block design makes member blocks valid under any global stats —
     build.py module doc), and the global answer is the k-row window
-    over the members' top-ks. Per-member two_phase stays sound: a
-    member's phase-1 k-th score is attained by k real docs, hence a
-    valid lower bound on the federated k-th."""
+    over the members' top-ks."""
     if not indexes:
         raise ValueError("bm25_topk_federated needs at least one index")
     n_docs = sum(int(st["n_docs"]) for _, st in indexes)
@@ -1515,7 +1424,7 @@ def bm25_topk_federated(
             term_dfs[t] = term_dfs.get(t, 0) + int(df)
     parts = [
         bm25_topk_wand(
-            postings, queries, n_docs, avgdl, k=k, two_phase=two_phase,
+            postings, queries, n_docs, avgdl, k=k,
             term_dfs=term_dfs, pre_arranged=pre_arranged,
         ).select("query_id", "doc_id", "score")
         for postings, _ in indexes

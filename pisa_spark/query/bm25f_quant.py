@@ -36,9 +36,8 @@ free from block metadata like the BM25 quant path.
 
 Payload: 4 bytes/posting (uint32 units — u_f can reach 64 * w * fl, so
 8/16-bit would need contract-visible clipping). Serving plan shape ==
-quantized_topk: term-pruned scan -> per-bucket integer kernel with
-exact corner bounds (sat is monotone, so block bounds transform
-through it) -> <= n_buckets*|q|*k rows to the global window.
+quantized_topk: term-pruned scan -> per-bucket integer kernel ->
+<= n_buckets*|q|*k rows to the global window.
 Field params are frozen at build — a re-weighted ranking rebuilds the
 table (one narrow pass), the same trade the avgdl bake-in makes.
 """
@@ -178,59 +177,15 @@ def _sat(p: np.ndarray) -> np.ndarray:
     return np.floor(SAT_SCALE * pf / (pf + K1_UNITS)).astype(np.int64)
 
 
-def _bm25f_keep_masks(
-    present: list[str],
-    conjunctive: bool,
-    idf_q: dict[str, int],
-    by_term: dict[str, pd.DataFrame],
-    threshold: int | None,
-) -> dict[str, np.ndarray] | None:
-    """_quant_keep_masks with the bound pushed through the (monotone)
-    saturation: block ub = idf_q * sat(imp_max) for idf_q >= 0, else
-    idf_q * sat(imp_min) — exact int64 corners, no epsilon."""
-    ubs: dict[str, np.ndarray] = {}
-    for t in present:
-        g = by_term[t]
-        iq = int(idf_q[t])
-        corner = g["imp_max"] if iq >= 0 else g["imp_min"]
-        ubs[t] = iq * _sat(corner.to_numpy(np.int64))
-    if threshold is None:
-        return {t: np.ones(len(ubs[t]), bool) for t in present}
-    term_max = {t: int(ubs[t].max()) for t in present}
-    if conjunctive:
-        total = sum(term_max.values())
-        others = {t: total - term_max[t] for t in present}
-        best_bound = total
-    else:
-        pos = {t: max(term_max[t], 0) for t in present}
-        pos_sum = sum(pos.values())
-        others = {t: pos_sum - pos[t] for t in present}
-        best_bound = max(term_max[t] + others[t] for t in present)
-    if best_bound < threshold:
-        return None
-    masks: dict[str, np.ndarray] = {}
-    for t in present:
-        if not conjunctive and int(idf_q[t]) < 0:
-            masks[t] = np.ones(len(ubs[t]), bool)
-            continue
-        m = ubs[t] + others[t] >= threshold
-        if conjunctive and not m.any():
-            return None
-        masks[t] = m
-    return masks
-
-
 def bm25f_quant_kernel(
     queries: list[dict],
     idf_q: dict[str, int],
     k: int,
-    thresholds: dict[int, int] | None = None,
 ):
     """Per-bucket integer BM25F top-k closure — quantized_kernel's
-    structure with the saturation transform in scoring and bounds;
-    '-term' exclusion and attribute-filter inclusion compose via the
-    shared docs-only decoders."""
-    thresholds = thresholds or {}
+    structure with the saturation transform in scoring; '-term'
+    exclusion and attribute-filter inclusion compose via the shared
+    docs-only decoders."""
 
     def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pisa_spark.index.quantized import _quant_block_docs
@@ -248,7 +203,7 @@ def bm25f_quant_kernel(
         for _, bucket_blocks in all_blocks.groupby("bucket", sort=False):
             by_term = dict(tuple(bucket_blocks.groupby("term", sort=False)))
             fx_cache: dict[str, np.ndarray] = {}
-            plans = []
+            decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
             for q in queries:
                 terms = list(dict.fromkeys(q["terms"]))
                 present = [t for t in terms if t in by_term]
@@ -256,35 +211,14 @@ def bm25f_quant_kernel(
                     q["conjunctive"] and len(present) < len(terms)
                 ):
                     continue
-                masks = _bm25f_keep_masks(
-                    present, q["conjunctive"], idf_q, by_term,
-                    thresholds.get(q["query_id"]),
-                )
-                if masks is not None:
-                    plans.append((q, terms, present, masks))
-            if not plans:
-                continue
-            union: dict[str, np.ndarray] = {}
-            for _, _, present, masks in plans:
-                for t in present:
-                    union[t] = (
-                        masks[t] if t not in union else union[t] | masks[t]
-                    )
-            decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for t, um in union.items():
-                if um.any():
-                    docs, units = _decode_u32_blocks(by_term[t][um])
-                    decoded[t] = (docs, _sat(units) * int(idf_q[t]))
-            for q, terms, present, masks in plans:
                 doc_parts, contrib_parts = [], []
                 for t in present:
                     if t not in decoded:
-                        continue
+                        docs, units = _decode_u32_blocks(by_term[t])
+                        decoded[t] = (docs, _sat(units) * int(idf_q[t]))
                     docs, contribs = decoded[t]
                     doc_parts.append(docs)
                     contrib_parts.append(contribs)
-                if not doc_parts:
-                    continue
                 docs_all = np.concatenate(doc_parts)
                 contribs = np.concatenate(contrib_parts)
                 uniq, inv = np.unique(docs_all, return_inverse=True)
@@ -348,8 +282,6 @@ def bm25f_quantized_topk(
     k: int = 10,
     term_dfs: dict[str, int] | None = None,
     pre_arranged: bool = False,
-    two_phase: bool = False,
-    sample_buckets: int = 2,
 ) -> DataFrame:
     """Fielded integer top-k off the combined-units table: (query_id,
     rank, doc_id, score_q:long), ranking exactly deterministic. df per
@@ -372,41 +304,7 @@ def bm25f_quantized_topk(
         for t in all_terms
         if t in term_dfs
     }
-    if not two_phase:
-        local = arranged.mapInPandas(
-            bm25f_quant_kernel(queries, idf_q, k), schema=_TOPK_SCHEMA
-        )
-        return _quant_topk_window(local, k)
-    spark = arranged.sparkSession
-    sample = arranged.filter(F.col("bucket") < sample_buckets)
-    phase1_rows = (
-        _quant_topk_window(
-            sample.mapInPandas(
-                bm25f_quant_kernel(queries, idf_q, k), schema=_TOPK_SCHEMA
-            ),
-            k,
-        )
-        .select("query_id", "doc_id", "score_q")
-        .collect()
+    local = arranged.mapInPandas(
+        bm25f_quant_kernel(queries, idf_q, k), schema=_TOPK_SCHEMA
     )
-    counts: dict[int, int] = {}
-    kth: dict[int, int] = {}
-    for r in phase1_rows:
-        qid = r["query_id"]
-        counts[qid] = counts.get(qid, 0) + 1
-        kth[qid] = min(
-            kth.get(qid, np.iinfo(np.int64).max), int(r["score_q"])
-        )
-    thresholds = {q: kth[q] for q, c in counts.items() if c >= k}
-    rest = arranged.filter(F.col("bucket") >= sample_buckets)
-    partial = rest.mapInPandas(
-        bm25f_quant_kernel(queries, idf_q, k, thresholds),
-        schema=_TOPK_SCHEMA,
-    )
-    if phase1_rows:
-        phase1_df = spark.createDataFrame(
-            [(r["query_id"], r["doc_id"], r["score_q"]) for r in phase1_rows],
-            schema=_TOPK_SCHEMA,
-        )
-        partial = partial.unionByName(phase1_df)
-    return _quant_topk_window(partial, k)
+    return _quant_topk_window(local, k)

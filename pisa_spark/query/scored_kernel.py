@@ -12,26 +12,10 @@ locally, emit <= k candidate rows per bucket — only n_buckets*|q|*k
 rows ever cross an exchange. This module gives every registered scorer
 that dataflow.
 
-Dynamic pruning is scorer-aware, exactness first (the same
-scorer/pruning split PISA itself makes — impact layouts and bound
-metadata are per-scorer):
-
-* **QLD** (and **QLJM**, whose score is strictly +tf/-dl and always
-  positive) is corner-monotone like BM25 (score rises with tf, falls
-  with dl — d/dtf ln(1+tf/(mu*p_c)) > 0, d/ddl ln(mu/(dl+mu)) < 0), so
-  the stored (tf_max, tf_min, dl_min, dl_max) corner stats yield exact
-  attainable block bounds: ub = qld(tf_max, dl_min), lb =
-  qld(tf_min, dl_max), computed by the SAME NumPy function as the
-  scorer (bit-identical at the corners — the _block_bounds soundness
-  rule). A term whose lb can go negative (common term + long doc: the
-  ln(mu/(dl+mu)) normalizer dominates) is undroppable under OR,
-  exactly like negative-idf BM25 terms.
-* **PL2 / DPH** are NOT corner-monotone (PL2's score is non-monotone
-  in tfn; DPH's (1-f)^2/(tf+1) norm falls while the log term rises),
-  so no sound corner bound exists without per-block score metadata.
-  Their block upper bounds are +inf — blocks are never skipped, the
-  ranking stays exact, and the win is the dataflow (no per-posting
-  shuffle), which dominates at every scale measured.
+The kernel decodes every block of each present query term once per
+bucket and never skips a block, so no scorer needs block bounds; the
+win is the dataflow (no per-posting shuffle), which dominates at every
+scale measured.
 
 Results are rank- and score-identical to ``scored_topk_dataframe``
 (same per-posting float math via the shared NumPy twins, bincount
@@ -56,7 +40,8 @@ from pisa_spark.query.bm25 import (
     _decode_blocks_vectorized,
     _EMPTY_TOPK_FRAME,
     _flat_filters,
-    _two_phase_topk,
+    TOPK_RESULT_SCHEMA,
+    topk_window,
 )
 from pisa_spark.query.scorers import (
     bm25plus_np,
@@ -98,98 +83,6 @@ def _score_fn(scorer: str, n_docs: float, avgdl: float, total_cf: float):
     raise ValueError(f"unknown scorer: {scorer!r}")
 
 
-# bm25plus: per-term monotone (+tf, -dl) with the sign carried by idf,
-# exactly like bm25 — the direction-agnostic corner evaluation below
-# is exact for any scorer monotone in each of (tf, dl) separately
-_CORNER_MONOTONE = {"bm25", "bm25plus", "qld", "qljm", "inl2"}
-
-
-def _scored_block_bounds(
-    by_term: dict[str, pd.DataFrame],
-    terms: list[str],
-    score_fn,
-    scorer: str,
-    term_stats: dict[str, tuple[int, int]],
-) -> tuple[dict[str, np.ndarray], dict[str, bool]]:
-    """Per-block upper-bound arrays + per-term may-be-negative flags.
-
-    Corner-monotone scorers (bm25/qld/qljm) bound from the stored (tf, dl)
-    corners with the scorer's own function; BM25's direction flips
-    with the idf sign (the _block_bounds rule), QLD's never does
-    (always +tf/-dl). Non-monotone scorers get +inf bounds — sound,
-    never skipped."""
-    ub: dict[str, np.ndarray] = {}
-    neg: dict[str, bool] = {}
-    for t in terms:
-        g = by_term[t]
-        dfreq, cf = term_stats[t]
-        if scorer not in _CORNER_MONOTONE:
-            ub[t] = np.full(len(g), np.inf)
-            neg[t] = True
-            continue
-        hi = score_fn(
-            g["tf_max"].to_numpy(np.float64),
-            g["dl_min"].to_numpy(np.float64),
-            float(dfreq),
-            float(cf),
-        )
-        lo = score_fn(
-            g["tf_min"].to_numpy(np.float64),
-            g["dl_max"].to_numpy(np.float64),
-            float(dfreq),
-            float(cf),
-        )
-        # a corner-monotone score's box max/min sit at one of the two
-        # opposite corners; which one flips with BM25's idf sign (QLD
-        # never flips), so the elementwise max/min is the sound,
-        # direction-agnostic choice — and bit-identical to an attaining
-        # posting's score (same function, same floats)
-        ub[t] = np.maximum(hi, lo)
-        lb = np.minimum(hi, lo)
-        neg[t] = bool(lb.size and float(lb.min()) < 0.0)
-    return ub, neg
-
-
-def _keep_masks(
-    present: list[str],
-    conjunctive: bool,
-    neg: dict[str, bool],
-    ub: dict[str, np.ndarray],
-    threshold: float,
-) -> dict[str, np.ndarray] | None:
-    """Block keep masks for one query, or None when the bucket provably
-    can't reach ``threshold``. Structure and soundness contract are
-    bm25._query_keep_masks with the negative-idf test generalized to a
-    per-term may-be-negative flag: under OR a term whose contribution
-    can be negative always decodes fully (skipping it would inflate
-    other-match docs' scores); under AND skipping is sound because a
-    pruned doc loses a REQUIRED term."""
-    term_max = {t: float(ub[t].max()) for t in present}
-    if conjunctive:
-        others = {
-            t: sum(term_max[u] for u in present if u != t) for t in present
-        }
-        best_bound = sum(term_max.values())
-    else:
-        pos = {t: max(term_max[t], 0.0) for t in present}
-        pos_sum = sum(pos.values())
-        others = {t: pos_sum - pos[t] for t in present}
-        best_bound = max(term_max[t] + others[t] for t in present)
-    eps = 1e-9 * max(1.0, abs(threshold)) if np.isfinite(threshold) else 0.0
-    if best_bound < threshold - eps:
-        return None
-    masks: dict[str, np.ndarray] = {}
-    for t in present:
-        if not conjunctive and neg[t]:
-            masks[t] = np.ones(len(ub[t]), bool)
-            continue
-        m = ub[t] + others[t] >= threshold - eps
-        if conjunctive and not m.any():
-            return None
-        masks[t] = m
-    return masks
-
-
 def scored_kernel(
     queries: list[dict],
     scorer: str,
@@ -198,17 +91,11 @@ def scored_kernel(
     total_cf: float,
     k: int,
     term_stats: dict[str, tuple[int, int]],
-    thresholds: dict[int, float] | None = None,
 ):
     """Per-bucket scorer-generic top-k closure (mapInPandas).
 
-    Per term, the UNION of the batch's kept blocks decodes ONCE; each
-    query then accumulates the decoded arrays in full — extra blocks
-    (kept for another query) only move a doc's score toward exact,
-    always sound (the quantized_kernel sharing rule). Docs absent from
-    every decoded block of a pruned term lose only contributions the
-    masks proved couldn't lift them past the threshold."""
-    thresholds = thresholds or {}
+    Per term, the bucket's blocks decode and score ONCE for the whole
+    batch; each query then accumulates the shared arrays."""
     fn = _score_fn(scorer, float(n_docs), float(avgdl), float(total_cf))
 
     def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -220,15 +107,7 @@ def scored_kernel(
         for _, bucket_blocks in all_blocks.groupby("bucket", sort=False):
             by_term = dict(tuple(bucket_blocks.groupby("term", sort=False)))
             fx_cache: dict[str, np.ndarray] = {}
-            needed = [
-                t
-                for t in dict.fromkeys(t for q in queries for t in q["terms"])
-                if t in by_term
-            ]
-            ub, neg = _scored_block_bounds(
-                by_term, needed, fn, scorer, term_stats
-            )
-            plans = []
+            decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
             for q in queries:
                 terms = list(dict.fromkeys(q["terms"]))
                 present = [t for t in terms if t in by_term]
@@ -236,32 +115,14 @@ def scored_kernel(
                     q["conjunctive"] and len(present) < len(terms)
                 ):
                     continue
-                masks = _keep_masks(
-                    present, q["conjunctive"], neg, ub,
-                    thresholds.get(q["query_id"], -np.inf),
-                )
-                if masks is not None:
-                    plans.append((q, terms, present, masks))
-            if not plans:
-                continue
-            union: dict[str, np.ndarray] = {}
-            for _, _, present, masks in plans:
-                for t in present:
-                    union[t] = (
-                        masks[t] if t not in union else union[t] | masks[t]
-                    )
-            decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for t, um in union.items():
-                if not um.any():
-                    continue
-                docs, tfs, dls = _decode_blocks_vectorized(by_term[t][um])
-                dfreq, cf = term_stats[t]
-                decoded[t] = (docs, fn(tfs, dls, float(dfreq), float(cf)))
-            for q, terms, present, masks in plans:
                 doc_parts, score_parts = [], []
                 for t in present:
                     if t not in decoded:
-                        continue
+                        docs, tfs, dls = _decode_blocks_vectorized(by_term[t])
+                        dfreq, cf = term_stats[t]
+                        decoded[t] = (
+                            docs, fn(tfs, dls, float(dfreq), float(cf))
+                        )
                     docs, scores = decoded[t]
                     doc_parts.append(docs)
                     score_parts.append(scores)
@@ -331,8 +192,6 @@ def scored_topk_pruned(
     k: int = 10,
     term_stats: dict[str, tuple[int, int]] | None = None,
     pre_arranged: bool = False,
-    two_phase: bool = False,
-    sample_buckets: int = 2,
 ) -> DataFrame:
     """Top-k under any registered scorer served off the compressed
     index through the bucket-local kernel: (query_id, rank, doc_id,
@@ -345,13 +204,7 @@ def scored_topk_pruned(
     Plan shape == bm25_topk_wand: term-pruned scan (PushedFilters) ->
     one bucket repartition (elided when pre_arranged) -> per-bucket
     vectorized kernel -> global top-k window over <=
-    n_buckets*|queries|*k rows. two_phase bootstraps per-query
-    thresholds from ``sample_buckets`` exactly like the BM25 driver —
-    thresholds only prune where the scorer has sound block bounds
-    (bm25/qld); pl2/dph run exhaustively with the same dataflow.
-    Exclusion keeps pruning sound: dropping docs only lowers scores,
-    and a skipped block's docs provably sat below the threshold
-    already."""
+    n_buckets*|queries|*k rows."""
     from pisa_spark.query.bm25 import _arrange_pruned
 
     all_terms = sorted(
@@ -363,13 +216,11 @@ def scored_topk_pruned(
     if term_stats is None:
         term_stats = term_stats_from_blocks(postings, all_terms)
 
-    def factory(queries_, n_docs_, avgdl_, k_, _dfs, thresholds=None):
-        return scored_kernel(
-            queries_, scorer, n_docs_, avgdl_, float(total_cf), k_,
-            term_stats, thresholds,
-        )
-
-    return _two_phase_topk(
-        factory, arranged, queries, n_docs, avgdl, k,
-        two_phase, sample_buckets, {},
+    partial = arranged.mapInPandas(
+        scored_kernel(
+            queries, scorer, float(n_docs), float(avgdl), float(total_cf), k,
+            term_stats,
+        ),
+        schema=TOPK_RESULT_SCHEMA,
     )
+    return topk_window(partial, k)

@@ -3,21 +3,20 @@
 Real PISA ships an offline tool that computes, for each term, the k-th
 highest score inside that term's own posting list; at query time the
 max of the query terms' precomputed values primes WAND/MaxScore's
-pruning threshold theta BEFORE the first posting is decoded. This
-matters here specifically because the repo's two-phase bootstrap — the
-other way to obtain a starting theta — costs an extra Spark job plus a
-collect on the latency path and measured SLOWER at both bench scales
-(see engine.search's docstring / BENCH.md pruning table). Priming
-moves that cost to build time: serving pays one pushed In(term, ...)
-lookup against a small catalog table, no postings job.
+pruning threshold theta BEFORE the first posting is decoded. Deriving
+theta at query time from a first scoring pass costs an extra Spark job
+plus a collect on the latency path, and measured SLOWER at both bench
+scales (BENCH.md pruning table). Priming moves that cost to build
+time: serving pays one pushed In(term, ...) lookup against a small
+catalog table, no postings job.
 
 Soundness of the bound: the k-th highest SINGLE-TERM score of term t
 is realized by k distinct documents. Under disjunctive BM25 where
 every query term's idf >= 0, each of those documents' FULL query score
 >= its single-term score, so at least k documents score >= theta0 —
 theta0 is a valid lower bound on the global k-th score, and pruning
-with it is exact (the same contract the two-phase bootstrap satisfies;
-the kernels' epsilon-inclusive block masks keep score==theta0 ties).
+with it is exact (the kernels' epsilon-inclusive block masks keep
+score==theta0 ties).
 
 Eligibility (``prime_thresholds`` enforces; ineligible queries simply
 stay unprimed — priming is a physical hint, never an answer change):

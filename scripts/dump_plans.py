@@ -57,14 +57,13 @@ def main() -> None:
     assert uncached._pre_arranged, (
         "stored one-file-per-bucket layout failed the split-size check"
     )
-    serve_plan = fmt(uncached.search("data join", k=10, two_phase=False))
+    serve_plan = fmt(uncached.search("data join", k=10))
     assert "hashpartitioning(bucket" not in serve_plan, (
         "uncached serving regressed to a per-query bucket repartition"
     )
 
     ms_plan = fmt(
-        uncached.search("data join", k=10, two_phase=False,
-                        algorithm="maxscore")
+        uncached.search("data join", k=10, algorithm="maxscore")
     )
     assert "hashpartitioning(bucket" not in ms_plan, (
         "maxscore serving regressed to a per-query bucket repartition"

@@ -4,9 +4,8 @@ Same amplified corpus as stress_bench.py (sf0.1 x QUANT_REPLICAS),
 8 taskset-pinned cores. Builds the exact posting blocks once, derives
 the quantized twin via the shuffle-free requantization pass, then
 times the 64-query batch on: float block-max WAND (the serving
-default), quantized exhaustive, quantized two-phase (integer block-max
-pruning), plus payload sizes for both layouts. Appends a manual
-section to BENCH.md.
+default) and quantized exhaustive, plus payload sizes for both
+layouts. Appends a manual section to BENCH.md.
 
 Usage: [QUANT_REPLICAS=2048] python scripts/quant_stress.py
 """
@@ -92,7 +91,7 @@ def worker() -> None:
         quant, warm, n_docs, k=10, term_dfs=term_dfs, pre_arranged=True
     ).collect()
 
-    samples: dict[str, list] = {"wand": [], "quant": [], "quant_2p": []}
+    samples: dict[str, list] = {"wand": [], "quant": []}
     for _ in range(3):
         t0 = time.perf_counter()
         bm25_topk_wand(
@@ -106,12 +105,6 @@ def worker() -> None:
             pre_arranged=True,
         ).collect()
         samples["quant"].append(round(time.perf_counter() - t0, 2))
-        t0 = time.perf_counter()
-        quantized_topk(
-            quant, queries, n_docs, k=10, term_dfs=term_dfs,
-            pre_arranged=True, two_phase=True,
-        ).collect()
-        samples["quant_2p"].append(round(time.perf_counter() - t0, 2))
 
     print(json.dumps({
         "cores": cores,
@@ -124,7 +117,6 @@ def worker() -> None:
         "samples": samples,
         "wand_s": min(samples["wand"]),
         "quant_s": min(samples["quant"]),
-        "quant_2p_s": min(samples["quant_2p"]),
     }))
     spark.stop()
 
@@ -157,7 +149,6 @@ quantized twin derived by the shuffle-free requantization pass
 | quantized payload (docs+imps) | {r["quant_payload_bytes"]:,} bytes ({100 * r["quant_payload_bytes"] / r["exact_payload_bytes"]:.0f}% of exact) |
 | batch64 float WAND (min of 3) | {r["wand_s"]} s ({round(64 / r["wand_s"], 1)} q/s; samples {r["samples"]["wand"]}) |
 | batch64 quantized exhaustive (min of 3) | {r["quant_s"]} s ({round(64 / r["quant_s"], 1)} q/s; samples {r["samples"]["quant"]}) |
-| batch64 quantized two-phase (min of 3) | {r["quant_2p_s"]} s ({round(64 / r["quant_2p_s"], 1)} q/s; samples {r["samples"]["quant_2p"]}) |
 
 Quantized serving decodes 1-byte fixed-width impacts and scores with
 int64 multiply-adds (no per-posting float BM25, no dls payload), and

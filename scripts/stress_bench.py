@@ -82,54 +82,21 @@ def worker() -> None:
         # methodology), so each query entry takes several interleaved
         # samples; min is the engine-capability number, all samples
         # are reported
-        def timed(**kw) -> float:
+        def timed(kern=bm25_topk_wand) -> float:
             t0 = time.perf_counter()
-            kern = bm25_topk_maxscore if kw.pop("maxscore", False) \
-                else bm25_topk_wand
             kern(
                 postings, queries, stats["n_docs"], stats["avgdl"], k=10,
-                pre_arranged=True, **kw,
+                pre_arranged=True,
             ).collect()
             return round(time.perf_counter() - t0, 2)
 
-        samples = {"batch64": [], "batch64_2p": [], "batch64_maxscore": []}
-        # single-query two-phase evidence: does the phase-1 threshold
-        # bootstrap (an extra job + collect) ever pay for itself on a
-        # SINGLE query at ~10M docs? (the sf0.1 bench shows it costing
-        # 2.5x at 5k docs; this is the other scale point behind the
-        # facade search() default)
-        singles = [
-            {"query_id": 200, "terms": ["stream"], "conjunctive": False},
-            {"query_id": 201, "terms": ["data", "join"], "conjunctive": False},
-            {"query_id": 202, "terms": ["group", "filter", "row"],
-             "conjunctive": True},
-        ]
-        single_samples: dict[str, list] = {}
+        samples = {"batch64": [], "batch64_maxscore": []}
         for _ in range(3):
             samples["batch64"].append(timed())
-            # two-phase thresholds: the sf0.1 bench shows the phase-1
-            # bootstrap costing more than pruning saves at 5k docs;
-            # this measures whether that flips at ~10M docs (the
-            # evidence behind search_batch's two_phase default)
-            samples["batch64_2p"].append(timed(two_phase=True))
             # MaxScore at scale: per-query TAAT vs WAND's batch
             # union-decode
-            samples["batch64_maxscore"].append(
-                timed(maxscore=True, two_phase=True)
-            )
-            for sq in singles:
-                for tp in (False, True):
-                    key = f"single_q{sq['query_id']}_{'2p' if tp else '1p'}"
-                    t0 = time.perf_counter()
-                    bm25_topk_wand(
-                        postings, [sq], stats["n_docs"], stats["avgdl"],
-                        k=10, pre_arranged=True, two_phase=tp,
-                    ).collect()
-                    single_samples.setdefault(key, []).append(
-                        round(time.perf_counter() - t0, 2)
-                    )
+            samples["batch64_maxscore"].append(timed(bm25_topk_maxscore))
         batch_s = min(samples["batch64"])
-        batch2p_s = min(samples["batch64_2p"])
         batchms_s = min(samples["batch64_maxscore"])
 
         print(json.dumps({
@@ -142,12 +109,9 @@ def worker() -> None:
             "postings_per_s": round(summary["postings"] / build_s, 1),
             "batch64_s": round(batch_s, 2),
             "batch64_qps": round(64 / batch_s, 1),
-            "batch64_2p_s": round(batch2p_s, 2),
-            "batch64_2p_qps": round(64 / batch2p_s, 1),
             "batch64_maxscore_s": round(batchms_s, 2),
             "batch64_maxscore_qps": round(64 / batchms_s, 1),
             "query_samples": samples,
-            "single_query_samples": single_samples,
             "bucket_bytes": {
                 "min": int(bstats["min_b"]), "p50": int(bstats["p50_b"]),
                 "p95": int(bstats["p95_b"]), "max": int(bstats["max_b"]),
@@ -187,9 +151,7 @@ buckets, wave_size=256) at {r["cores"]} taskset-pinned cores, then the
 | docs/s | {r["docs_per_s"]:,} |
 | postings/s | {r["postings_per_s"]:,} |
 | batch64 wall (min of 3) | {r["batch64_s"]} s ({r["batch64_qps"]} q/s; samples {r["query_samples"]["batch64"]}) |
-| batch64 two-phase wall (min of 3) | {r["batch64_2p_s"]} s ({r["batch64_2p_qps"]} q/s; samples {r["query_samples"]["batch64_2p"]}) |
 | batch64 MaxScore wall (min of 3) | {r["batch64_maxscore_s"]} s ({r["batch64_maxscore_qps"]} q/s; samples {r["query_samples"]["batch64_maxscore"]}) |
-| single-query WAND, exhaustive vs two-phase (min of 3 each) | {", ".join(f"{k}={min(v)}s" for k, v in sorted(r.get("single_query_samples", {}).items()))} |
 | bucket payload bytes min/p50/p95/max | {bb["min"]:,} / {bb["p50"]:,} / {bb["p95"]:,} / {bb["max"]:,} |
 | total payload | {bb["total"]:,} bytes |
 

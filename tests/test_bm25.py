@@ -1,5 +1,5 @@
 """Golden end-to-end BM25 tests (SURVEY §5.2 item 3): engine paths
-(exhaustive DataFrame, WAND, two-phase WAND) must be rank-identical to
+(exhaustive DataFrame, WAND, MaxScore) must be rank-identical to
 the independent NumPy oracle, scores equal to atol 1e-6."""
 
 import pytest
@@ -61,14 +61,6 @@ def test_wand_matches_oracle(built, oracle):
     assert_matches(rows, oracle, QUERIES)
 
 
-def test_wand_two_phase_matches_oracle(built, oracle):
-    postings, stats = built
-    rows = bm25_topk_wand(
-        postings, QUERIES, stats["n_docs"], stats["avgdl"], k=10, two_phase=True
-    ).collect()
-    assert_matches(rows, oracle, QUERIES)
-
-
 def test_dataframe_path_matches_oracle(spark, sf_dir, built, oracle):
     _, stats = built
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -95,23 +87,22 @@ def test_pre_arranged_serving_path_matches(built, oracle):
     co-located partitions) must be rank-identical to the default path."""
     postings, stats = built
     arranged = postings.repartition(8, "bucket")
-    for two_phase in (False, True):
-        rows = bm25_topk_wand(
-            arranged, QUERIES, stats["n_docs"], stats["avgdl"], k=10,
-            two_phase=two_phase, pre_arranged=True,
-        ).collect()
-        assert_matches(rows, oracle, QUERIES)
+    rows = bm25_topk_wand(
+        arranged, QUERIES, stats["n_docs"], stats["avgdl"], k=10,
+        pre_arranged=True,
+    ).collect()
+    assert_matches(rows, oracle, QUERIES)
 
 
-def test_mixed_idf_single_query_two_phase(built, oracle):
-    """Single-query latency mode + two-phase threshold: the exact repro
-    of the unsound negative-idf prune (batch mode masks it because the
-    shared decode is union-masked)."""
+def test_mixed_idf_single_query(built, oracle):
+    """Single-query latency mode (plain masked decode, not the batch's
+    shared union decode) on a rare positive term + a head negative-idf
+    term, under OR and AND."""
     postings, stats = built
     for conj in (False, True):
         q = [{"query_id": 0, "terms": ["dup", "query"], "conjunctive": conj}]
         rows = bm25_topk_wand(
-            postings, q, stats["n_docs"], stats["avgdl"], k=10, two_phase=True
+            postings, q, stats["n_docs"], stats["avgdl"], k=10
         ).collect()
         assert_matches(rows, oracle, q)
 
@@ -129,7 +120,7 @@ def test_precomputed_term_dfs_matches(built, oracle):
            for r in term_document_frequency(tf).collect()}
     rows = bm25_topk_wand(
         postings, QUERIES, stats["n_docs"], stats["avgdl"], k=10,
-        two_phase=True, term_dfs=dfs,
+        term_dfs=dfs,
     ).collect()
     assert_matches(rows, oracle, QUERIES)
 
@@ -150,12 +141,3 @@ def test_maxscore_matches_oracle(built, oracle):
     ).collect()
     assert_matches(rows, oracle, QUERIES)
 
-
-def test_maxscore_two_phase_matches_oracle(built, oracle):
-    from pisa_spark.query.bm25 import bm25_topk_maxscore
-
-    postings, stats = built
-    rows = bm25_topk_maxscore(
-        postings, QUERIES, stats["n_docs"], stats["avgdl"], k=10, two_phase=True
-    ).collect()
-    assert_matches(rows, oracle, QUERIES)

@@ -1,6 +1,6 @@
 """Quantized BM25F (query/bm25f_quant.py): integer contract vs an
 independent pure-Python witness (same pinned float ops, dict/Counter
-machinery), two-phase pruning exactness, and exclusion composition."""
+machinery), small-k trimming, and exclusion composition."""
 
 import collections
 import math
@@ -111,18 +111,16 @@ def test_matches_python_witness(built, spark):
     assert got == _witness(avgs)
 
 
-def test_two_phase_pruning_is_exact(built):
-    postings, _ = built
-    qs = [dict(q) for q in QUERIES]
-    base = _norm(
-        bm25f_quantized_topk(postings, qs, len(ROWS), k=3).collect()
-    )
-    pruned = _norm(
+def test_small_k_matches_python_witness(built):
+    """k below the per-bucket candidate count: the bucket-local trim and
+    the global window keep exactly the witness's top 3."""
+    postings, avgs = built
+    got = _norm(
         bm25f_quantized_topk(
-            postings, qs, len(ROWS), k=3, two_phase=True, sample_buckets=1
+            postings, [dict(q) for q in QUERIES], len(ROWS), k=3
         ).collect()
     )
-    assert pruned == base
+    assert got == _witness(avgs, k=3)
 
 
 def test_negation_composes(built):

@@ -111,271 +111,3 @@ try:
 
 except ImportError:  # hypothesis optional
     pass
-
-
-def test_bitpack_roundtrip_basic():
-    from pisa_spark.index.codec import bitpack_decode, bitpack_encode
-
-    for arr in (
-        np.array([], dtype=np.uint64),
-        np.zeros(7, dtype=np.uint64),
-        np.array([1, 2, 3, 127, 128, 2**33, 0], dtype=np.uint64),
-        np.arange(1000, dtype=np.uint64),
-    ):
-        got = bitpack_decode(bitpack_encode(arr))
-        assert got.dtype == np.uint64
-        assert np.array_equal(got, arr)
-
-
-@given(
-    st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=300)
-)
-def test_bitpack_roundtrip_property(vals):
-    from pisa_spark.index.codec import bitpack_decode, bitpack_encode
-
-    arr = np.array(vals, dtype=np.uint64)
-    assert np.array_equal(bitpack_decode(bitpack_encode(arr)), arr)
-
-
-def test_ef_roundtrip_basic():
-    from pisa_spark.index.codec import ef_decode, ef_encode
-
-    for arr in (
-        np.array([], dtype=np.uint64),
-        np.array([0], dtype=np.uint64),
-        np.array([0, 0, 0], dtype=np.uint64),  # non-decreasing duplicates
-        np.arange(128, dtype=np.uint64),  # dense run
-        np.array([5, 9, 9, 10**12], dtype=np.uint64),  # sparse + dup
-        np.array([2**62], dtype=np.uint64),
-    ):
-        got = ef_decode(ef_encode(arr))
-        assert got.dtype == np.uint64
-        assert np.array_equal(got, arr)
-
-
-def test_ef_explicit_upper_bound_roundtrip():
-    from pisa_spark.index.codec import ef_decode, ef_encode
-
-    arr = np.array([3, 17, 900], dtype=np.uint64)
-    assert np.array_equal(ef_decode(ef_encode(arr, upper=10**6)), arr)
-    with pytest.raises(ValueError):
-        ef_encode(arr, upper=900)  # upper must exceed the last value
-
-
-def test_ef_rejects_decreasing():
-    from pisa_spark.index.codec import ef_encode
-
-    with pytest.raises(ValueError):
-        ef_encode(np.array([5, 4], dtype=np.uint64))
-
-
-def test_ef_select_random_access():
-    from pisa_spark.index.codec import ef_encode, ef_select
-
-    rng = np.random.default_rng(11)
-    arr = np.sort(rng.choice(10**9, size=500, replace=False)).astype(np.uint64)
-    enc = ef_encode(arr)
-    for i in (0, 1, 250, 499):
-        assert ef_select(enc, i) == int(arr[i])
-    with pytest.raises(IndexError):
-        ef_select(enc, 500)
-
-
-def test_ef_size_near_theoretical_bound():
-    """EF uses n*(2 + log2(u/n)) bits + small header; check the measured
-    size sits within a byte-rounding margin of that bound on a sparse
-    sequence where varint-delta needs multi-byte gaps."""
-    from pisa_spark.index.codec import delta_encode_docids, ef_encode
-
-    rng = np.random.default_rng(7)
-    arr = np.sort(rng.choice(10**8, size=4096, replace=False)).astype(np.uint64)
-    enc = ef_encode(arr)
-    n, u = arr.size, int(arr[-1]) + 1
-    l = max(0, (u // n).bit_length() - 1)
-    bound_bits = n * 2 + n * l + (u >> l)  # unary high + packed low
-    assert len(enc) <= 13 + bound_bits // 8 + 2
-    # sparse gaps (~24k apart = 2-3 varint bytes each): EF is smaller
-    assert len(enc) < len(delta_encode_docids(arr.astype(np.int64)))
-
-
-@given(
-    st.sets(st.integers(min_value=0, max_value=10**12), min_size=1, max_size=400)
-)
-@settings(max_examples=150, deadline=None)
-def test_ef_roundtrip_property(ids):
-    from pisa_spark.index.codec import ef_decode, ef_encode
-
-    arr = np.array(sorted(ids), dtype=np.uint64)
-    assert np.array_equal(ef_decode(ef_encode(arr)), arr)
-
-
-@given(
-    st.lists(st.integers(min_value=0, max_value=2**20), min_size=1, max_size=200),
-    st.integers(min_value=0, max_value=2**16),
-)
-@settings(max_examples=150, deadline=None)
-def test_ef_roundtrip_nondecreasing_with_upper_property(vals, slack):
-    from pisa_spark.index.codec import ef_decode, ef_encode
-
-    arr = np.sort(np.array(vals, dtype=np.uint64))  # duplicates allowed
-    enc = ef_encode(arr, upper=int(arr[-1]) + 1 + slack)
-    assert np.array_equal(ef_decode(enc), arr)
-
-
-def test_bitpack_beats_varint_on_dense_uniform():
-    """The documented tradeoff: dense uniform small deltas pack tighter
-    bit-packed than varint (which floors at 1 byte/value)."""
-    from pisa_spark.index.codec import bitpack_encode, varint_encode
-
-    deltas = np.random.default_rng(3).integers(0, 8, size=4096).astype(np.uint64)
-    assert len(bitpack_encode(deltas)) < len(varint_encode(deltas))
-
-
-# ---------------------------------------------------------------------------
-# Partitioned Elias-Fano
-# ---------------------------------------------------------------------------
-
-def test_pef_roundtrip_basic():
-    from pisa_spark.index.codec import pef_decode, pef_encode
-
-    rng = np.random.default_rng(11)
-    for n in (1, 2, 127, 128, 129, 1000):
-        arr = np.sort(
-            rng.choice(10**7, size=n, replace=False)
-        ).astype(np.uint64)
-        got = pef_decode(pef_encode(arr))
-        assert np.array_equal(got, arr), n
-    assert pef_decode(b"").size == 0
-
-
-def test_pef_dense_run_is_implicit():
-    from pisa_spark.index.codec import pef_decode, pef_encode
-
-    # a dense range FROM ZERO: every partition's sub-universe equals
-    # its size, so all take the zero-byte implicit representation and
-    # the whole blob is header + L1 + one tag byte per partition
-    arr = np.arange(0, 512, dtype=np.uint64)
-    blob = pef_encode(arr, chunk=128)
-    assert np.array_equal(pef_decode(blob), arr)
-    from pisa_spark.index.codec import _ef_blob_len
-
-    assert len(blob) == 6 + _ef_blob_len(blob, 6) + 4
-    # a dense range NOT from zero: partition 0 pays for the offset
-    # (its sub-universe is [0, hi]), later partitions are implicit
-    arr2 = np.arange(1000, 1000 + 512, dtype=np.uint64)
-    blob2 = pef_encode(arr2, chunk=128)
-    assert np.array_equal(pef_decode(blob2), arr2)
-    from pisa_spark.index.codec import _pef_walk
-
-    tags = [t[3] for t in _pef_walk(blob2)]
-    assert tags[1:] == [2, 2, 2]
-
-
-def test_pef_clustered_beats_plain_ef():
-    from pisa_spark.index.codec import ef_encode, pef_decode, pef_encode
-
-    rng = np.random.default_rng(7)
-    # clustered ids: tight runs scattered across a wide universe —
-    # the URL-locality / BP-reordered shape
-    starts = np.sort(rng.choice(10**9, size=40, replace=False))
-    arr = np.unique(
-        np.concatenate([s + np.arange(100) for s in starts])
-    ).astype(np.uint64)
-    pef = pef_encode(arr)
-    ef = ef_encode(arr)
-    assert np.array_equal(pef_decode(pef), arr)
-    # uniform partitions already beat plain EF on locality...
-    assert len(pef) < len(ef)
-    # ...and the paper's boundary optimization is the decisive win:
-    # gap-crossings become tiny partitions, runs become implicit
-    opt = pef_encode(arr, optimize=True)
-    assert np.array_equal(pef_decode(opt), arr)
-    assert len(opt) < 0.3 * len(ef)
-    from pisa_spark.index.codec import delta_encode_docids
-
-    assert len(opt) < len(delta_encode_docids(arr.astype(np.int64)))
-
-
-def test_pef_select_matches_decode():
-    from pisa_spark.index.codec import pef_decode, pef_encode, pef_select
-
-    rng = np.random.default_rng(3)
-    arr = np.sort(
-        rng.choice(10**8, size=700, replace=False)
-    ).astype(np.uint64)
-    blob = pef_encode(arr, chunk=64)
-    dec = pef_decode(blob)
-    for i in (0, 1, 63, 64, 65, 350, 698, 699):
-        assert pef_select(blob, i) == int(dec[i]), i
-    optb = pef_encode(arr, optimize=True)
-    for i in (0, 1, 17, 350, 699):
-        assert pef_select(optb, i) == int(dec[i]), i
-    import pytest as _pytest
-
-    with _pytest.raises(IndexError):
-        pef_select(blob, 700)
-
-
-def test_pef_rejects_non_increasing():
-    import pytest as _pytest
-
-    from pisa_spark.index.codec import pef_encode
-
-    with _pytest.raises(ValueError):
-        pef_encode(np.array([3, 3, 5], dtype=np.uint64))
-    with _pytest.raises(ValueError):
-        pef_encode(np.array([5, 4], dtype=np.uint64))
-
-
-@given(
-    st.sets(
-        st.integers(min_value=0, max_value=10**12), min_size=1, max_size=400
-    )
-)
-@settings(max_examples=60, deadline=None)
-def test_pef_roundtrip_hypothesis(vals):
-    from pisa_spark.index.codec import pef_decode, pef_encode
-
-    arr = np.array(sorted(vals), dtype=np.uint64)
-    for chunk in (1, 7, 128):
-        assert np.array_equal(pef_decode(pef_encode(arr, chunk)), arr)
-    assert np.array_equal(
-        pef_decode(pef_encode(arr, optimize=True)), arr
-    )
-
-
-def test_pef_size_tradeoff_on_posting_shapes():
-    """Record the measured doc-id bytes/posting of delta+varint vs EF
-    vs PEF on the three canonical posting shapes."""
-    from pisa_spark.index.codec import (
-        delta_encode_docids,
-        ef_encode,
-        pef_encode,
-    )
-
-    rng = np.random.default_rng(42)
-    shapes = {
-        "dense_run": np.arange(5000, dtype=np.int64),
-        "clustered": np.unique(
-            np.concatenate(
-                [
-                    s + np.arange(80)
-                    for s in np.sort(
-                        rng.choice(10**8, size=60, replace=False)
-                    )
-                ]
-            )
-        ),
-        "uniform_sparse": np.sort(
-            rng.choice(10**9, size=5000, replace=False)
-        ),
-    }
-    for name, ids in shapes.items():
-        ids = ids.astype(np.int64)
-        dv = len(delta_encode_docids(ids)) / ids.size
-        ef = len(ef_encode(ids.astype(np.uint64))) / ids.size
-        pef = len(pef_encode(ids.astype(np.uint64))) / ids.size
-        # PEF never loses badly to EF and wins on locality
-        assert pef <= ef * 1.05, (name, dv, ef, pef)
-        if name in ("dense_run", "clustered"):
-            assert pef < ef, (name, ef, pef)

@@ -59,22 +59,29 @@ def _rows(df):
     )
 
 
-@pytest.mark.parametrize("split,two_phase", [(5, False), (7, True), (2, False)])
-def test_federated_equals_single_index(spark, split, two_phase):
+@pytest.mark.parametrize(
+    "split,pre_arranged", [(5, False), (7, True), (2, False)]
+)
+def test_federated_equals_single_index(spark, split, pre_arranged):
+    """pre_arranged=True serves bucket-co-located members without the
+    per-query repartition (the FederatedEngine.load layout)."""
     base = [d for d in DOCS if d[0] < split]
     delta = [d for d in DOCS if d[0] >= split]
     single, st = _build(spark, DOCS, n_buckets=3)
     want = _rows(
         bm25_topk_wand(
             single, [dict(q) for q in QUERIES], st["n_docs"], st["avgdl"],
-            k=5, two_phase=two_phase,
+            k=5,
         )
     )
+    members = [_build(spark, base, 2), _build(spark, delta, 2)]
+    if pre_arranged:
+        members = [(p.repartition(2, "bucket"), s) for p, s in members]
     fed = bm25_topk_federated(
-        [_build(spark, base, 2), _build(spark, delta, 2)],
+        members,
         [dict(q) for q in QUERIES],
         k=5,
-        two_phase=two_phase,
+        pre_arranged=pre_arranged,
     )
     assert _rows(fed) == want and len(want) > 0
 

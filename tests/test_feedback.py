@@ -144,7 +144,7 @@ def test_engine_search_reranked_matches_exhaustive_blend(spark, sf_dir, tmp_path
     got = sorted(
         (r["rank"], r["doc_id"], round(r["score"], 6))
         for r in eng.search_reranked(
-            "data join", priors, k=10, depth=500, two_phase=False
+            "data join", priors, k=10, depth=500
         ).collect()
     )
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -94,22 +94,6 @@ def test_negation_matches_exhaustive_reference(spark, sf_dir, built, impl):
         assert got.get(q["query_id"], []) == want, f"q{q['query_id']}"
 
 
-def test_negation_two_phase_and_plain_agree(built):
-    postings, stats = built
-    a = _canon(
-        bm25_topk_wand(
-            postings, NEG_QUERIES, stats["n_docs"], stats["avgdl"], k=10
-        ).collect()
-    )
-    b = _canon(
-        bm25_topk_wand(
-            postings, NEG_QUERIES, stats["n_docs"], stats["avgdl"], k=10,
-            two_phase=True, sample_buckets=2,
-        ).collect()
-    )
-    assert a == b
-
-
 def test_negation_excludes_all_matches(built):
     postings, stats = built
     # negating the query's own only term empties the result

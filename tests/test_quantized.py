@@ -50,11 +50,12 @@ def stats(toks):
     return int(r["n"]), float(r["avgdl"])
 
 
-def _brute(qterms, conjunctive, n_docs, avgdl, k=10):
-    """Pure-Python replay of the quantization contract over DOCS."""
+def _brute(qterms, conjunctive, n_docs, avgdl, k=10, docs=DOCS):
+    """Pure-Python replay of the quantization contract over ``docs``
+    (whitespace-separated lowercase tokens)."""
     tf: dict[tuple[int, str], int] = {}
     dl: dict[int, int] = {}
-    for doc_id, text in DOCS:
+    for doc_id, text in docs:
         ts = [t for t in text.split() if t]
         dl[doc_id] = len(ts)
         for t in ts:
@@ -273,10 +274,11 @@ def test_facade_search_quantized(spark, sf_dir, tmp_path_factory):
     assert all(r["score_q"] == base[r["doc_id"]] for r in neg)
 
 
-def test_two_phase_pruning_is_exact(spark):
-    """two_phase=True (integer block-max pruning, no epsilon) returns
-    EXACTLY the exhaustive answer — fuzzed over a seeded corpus with
-    head terms (negative idf_q), AND/OR, and single-term queries."""
+def test_seeded_batch_matches_brute_force(spark):
+    """One batch over a seeded corpus with head terms (negative idf_q),
+    AND/OR and single-term queries — the kernel's shared per-bucket
+    decode — returns EXACTLY the brute-force replay, as does a single
+    query."""
     import random
 
     rng = random.Random(421)
@@ -317,18 +319,19 @@ def test_two_phase_pruning_is_exact(spark):
             for r in df.collect()
         )
 
-    exhaustive = rows(quantized_topk(postings, queries, n_docs, k=5))
-    pruned = rows(
-        quantized_topk(
-            postings, queries, n_docs, k=5, two_phase=True, sample_buckets=2
+    def brute(qs, k):
+        return sorted(
+            (q["query_id"], *hit)
+            for q in qs
+            for hit in _brute(
+                q["terms"], q["conjunctive"], n_docs, avgdl, k=k, docs=docs
+            )
         )
-    )
-    assert pruned == exhaustive
-    # single-query latency shape too (one threshold, one query)
+
+    got = rows(quantized_topk(postings, queries, n_docs, k=5))
+    assert got and got == brute(queries, 5)
     one = [{"query_id": 99, "terms": ["t2", "t3", "t0"], "conjunctive": False}]
-    assert rows(
-        quantized_topk(postings, one, n_docs, k=3, two_phase=True)
-    ) == rows(quantized_topk(postings, one, n_docs, k=3))
+    assert rows(quantized_topk(postings, one, n_docs, k=3)) == brute(one, 3)
 
 
 def test_save_load_quantized_round_trip(spark, sf_dir, tmp_path_factory):

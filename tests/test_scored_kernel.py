@@ -1,7 +1,6 @@
 """Scorer-generic pruned kernel (query/scored_kernel.py): rank+score
 parity with the relational exhaustive path for every registered scorer,
-two-phase pruning exactness for the corner-monotone scorers, and the
-negative-contribution undroppable rule."""
+and '-term' / filter / delete composition."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -66,24 +65,6 @@ def test_kernel_matches_relational(built, spark, scorer):
             ).collect()
         )
     assert _norm(got) == _norm(want), scorer
-
-
-@pytest.mark.parametrize("scorer", ["bm25", "bm25plus", "inl2", "qld", "qljm", "pl2", "dph"])
-def test_two_phase_pruning_is_exact(built, scorer):
-    """Thresholded phase-2 (block masks active for the corner-monotone
-    scorers, pass-through for pl2/dph) returns the identical top-k —
-    including the stop-wordy 'the' whose QLD/BM25 contribution can go
-    negative (undroppable under OR)."""
-    postings, _, n_docs, avgdl, total_cf = built
-    qs = [dict(q) for q in QUERIES]
-    base = scored_topk_pruned(
-        postings, qs, n_docs, avgdl, total_cf, scorer=scorer, k=10,
-    ).collect()
-    pruned = scored_topk_pruned(
-        postings, qs, n_docs, avgdl, total_cf, scorer=scorer, k=10,
-        two_phase=True, sample_buckets=2,
-    ).collect()
-    assert _norm(pruned) == _norm(base), scorer
 
 
 def test_term_stats_from_blocks_matches_relation(built):

@@ -192,21 +192,6 @@ def test_primed_matches_unprimed_both_kernels(spark, synth, impl, k):
     )
 
 
-def test_primed_composes_with_two_phase(spark, synth):
-    postings, n, avgdl = synth
-    primed = _primed_for(postings, n, avgdl, SYNTH_QS, 10)
-    base = bm25_topk_wand(postings, SYNTH_QS, n, avgdl, k=10).toPandas()
-    got = bm25_topk_wand(
-        postings, SYNTH_QS, n, avgdl, k=10, two_phase=True,
-        primed_thresholds=primed,
-    ).toPandas()
-    cols = ["query_id", "rank", "doc_id", "score"]
-    assert (
-        got[cols].sort_values(["query_id", "rank"]).values.tolist()
-        == base[cols].sort_values(["query_id", "rank"]).values.tolist()
-    )
-
-
 def _rows(df):
     return [
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))

@@ -89,12 +89,12 @@ def test_engine_time_travel_serves_old_index(spark, sf_dir, tmp_path):
     _, st_old = load_index(spark, root, as_of_ts=ts1)
     assert st_now["n_docs"] == 500 and st_old["n_docs"] == 50
     eng_old = SearchEngine.load(spark, root, cache=False, as_of_ts=ts1)
-    rows = eng_old.search("data the", k=10, two_phase=False).collect()
+    rows = eng_old.search("data the", k=10).collect()
     assert rows and all(r["doc_id"] < 50 for r in rows)
     eng_now = SearchEngine.load(spark, root, cache=False)
     assert any(
         r["doc_id"] >= 50
-        for r in eng_now.search("data the", k=10, two_phase=False).collect()
+        for r in eng_now.search("data the", k=10).collect()
     )
 
 
@@ -165,6 +165,6 @@ def test_engine_time_travel_cached_mode(spark, sf_dir, tmp_path):
     )
     eng = SearchEngine.load(spark, root, cache=True, as_of_ts=ts1)
     assert eng.stats["n_docs"] == 80
-    rows = eng.search("data the", k=10, two_phase=False).collect()
+    rows = eng.search("data the", k=10).collect()
     assert rows and all(r["doc_id"] < 80 for r in rows)
     eng.postings.unpersist()

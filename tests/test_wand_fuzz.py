@@ -148,9 +148,9 @@ def test_wand_kernel_exact_under_fuzz(seed, factory):
         for q in queries
     }
 
-    # thresholds exactly as production derives them: the kernel's OWN
-    # k-th score from an unpruned pass (bit-identical arithmetic — the
-    # two-phase bootstrap contract), plus a slightly slack variant
+    # the tightest valid threshold: the kernel's OWN k-th score from an
+    # unpruned pass (bit-identical arithmetic, so the k-th doc itself
+    # ties it and must survive), plus a slightly slack variant
     phase1 = run_kernel(blocks, queries, n_total, avgdl, k, term_dfs, {},
                         factory=factory)
     kth = {
