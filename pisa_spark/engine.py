@@ -436,7 +436,10 @@ class SearchEngine:
         phrases are only ENFORCED by search() (which routes a
         one-phrase query to the mixed kernel before normalization);
         everywhere else the quoted tokens degrade to loose terms —
-        the pre-phrase behavior, never silently dropped."""
+        the pre-phrase behavior, never silently dropped. A single
+        string or dict is one query."""
+        if isinstance(queries, (str, dict)):
+            queries = [queries]
         out = []
         for i, q in enumerate(queries):
             if isinstance(q, str):
@@ -1359,6 +1362,8 @@ class SearchEngine:
             mu=mu,
             lambdas=lambdas,
             window=window,
+            term_dfs=self._term_dfs(set(nq["terms"])),
+            pre_arranged=self._pre_arranged,
         )
 
     def search_fuzzy(

@@ -42,8 +42,7 @@ per-bucket serving and the global top-k merge are identical.
 Scale shape: one (bucket, term) shuffle at build (same as
 build_postings); serving is a term-pruned scan (PushedFilters on the
 query's terms) -> per-bucket Arrow kernel -> <= n_buckets*|q|*k row
-top-k window. Max and min impact per block are stored as block-max
-metadata; no serving path prunes on them today.
+top-k window.
 
 Reference parity: quantized scoring generalizes the reference's
 integer-rank inference (exact top-k over precomputed score matrices,
@@ -58,12 +57,18 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pisa_spark.corpus import tokens_col
 from pisa_spark.index import codec
 from pisa_spark.index.build import BLOCK_SIZE, term_frequencies
+from pisa_spark.query.bm25 import (
+    _segmented_delta_decode,
+    bucket_kernel,
+    kernel_topk,
+    term_at_a_time,
+)
 from pisa_spark.session import task_wave_partitions
 
 IMPACT_SCALE = 255      # 8-bit impacts: floor(255*x) with x in [0, 1)
@@ -75,10 +80,8 @@ _KB1 = 0.36
 
 QUANT_SCHEMA = (
     "bucket int, term string, block_idx int, first_doc long, max_doc long, "
-    "n int, imp_max int, imp_min int, docs binary, imps binary"
+    "n int, docs binary, imps binary"
 )
-
-_TOPK_SCHEMA = "query_id int, doc_id long, score_q long"
 
 
 def impact_expr(avgdl: float):
@@ -130,8 +133,6 @@ def _encode_quant_groups(
             out["first_doc"].append(int(d[0]))
             out["max_doc"].append(int(d[-1]))
             out["n"].append(int(d.size))
-            out["imp_max"].append(int(i.max()))
-            out["imp_min"].append(int(i.min()))
             out["docs"].append(codec.delta_encode_docids(d))
             out["imps"].append(i.astype(dtype).tobytes())
 
@@ -255,9 +256,8 @@ def requantize_postings(postings: DataFrame, avgdl: float) -> DataFrame:
             d = dls.astype(np.float64)
             imps = np.floor(
                 255.0 * t / (t + (0.54 + 0.36 * d / a))
-            ).astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
-            segs = np.split(imps.astype(np.uint8), np.cumsum(ns)[:-1])
+            ).astype(np.uint8)
+            segs = np.split(imps, np.cumsum(ns)[:-1])
             yield pd.DataFrame(
                 {
                     "bucket": pdf["bucket"].to_numpy(np.int32),
@@ -266,12 +266,6 @@ def requantize_postings(postings: DataFrame, avgdl: float) -> DataFrame:
                     "first_doc": pdf["first_doc"].to_numpy(np.int64),
                     "max_doc": pdf["max_doc"].to_numpy(np.int64),
                     "n": pdf["n"].to_numpy(np.int32),
-                    "imp_max": np.maximum.reduceat(imps, starts).astype(
-                        np.int32
-                    ),
-                    "imp_min": np.minimum.reduceat(imps, starts).astype(
-                        np.int32
-                    ),
                     "docs": pdf["docs"],
                     "imps": [s.tobytes() for s in segs],
                 }
@@ -280,15 +274,17 @@ def requantize_postings(postings: DataFrame, avgdl: float) -> DataFrame:
     return postings.mapInPandas(kernel, schema=QUANT_SCHEMA)
 
 
-def _decode_quant_blocks(g: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+def _decode_quant_blocks(
+    g: pd.DataFrame, dtype=np.uint8
+) -> tuple[np.ndarray, np.ndarray]:
     """All of a term's blocks in one varint pass (docs) + one
-    frombuffer (impacts) — block byte-strings concatenate losslessly."""
-    from pisa_spark.query.bm25 import _segmented_delta_decode
-
+    frombuffer (the fixed-width payload: uint8 impacts, or the BM25F
+    bridge's uint32 units) — block byte-strings concatenate
+    losslessly."""
     ns = g["n"].to_numpy(np.int64)
     deltas = codec.varint_decode(b"".join(g["docs"])).astype(np.int64)
     docs = _segmented_delta_decode(deltas, ns)
-    imps = np.frombuffer(b"".join(g["imps"]), dtype=np.uint8).astype(np.int64)
+    imps = np.frombuffer(b"".join(g["imps"]), dtype=dtype).astype(np.int64)
     return docs, imps
 
 
@@ -307,120 +303,38 @@ def quantized_kernel(
     """Per-bucket integer top-k closure.
 
     Per term, decode the bucket's blocks ONCE for the whole batch;
-    every query then accumulates the shared arrays. Scores accumulate
-    via bincount over the unique-doc inverse (exact — see the in-kernel
-    note); AND keeps docs whose matched-term count equals the query's
-    distinct-term count (each term contributes one posting per doc)."""
+    every query then accumulates the shared arrays (query/bm25.py
+    term_at_a_time). AND keeps docs whose matched-term count equals
+    the query's distinct-term count (each term contributes one posting
+    per doc); '-term' exclusion (incl. the deletes layer's __deleted__
+    pseudo-term) and attribute-filter inclusion use the docs-only
+    decoder, so pseudo-term impacts are never read.
 
-    def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pisa_spark.query.bm25 import (
-            _bucket_exclusion,
-            _bucket_inclusion,
-            _in_sorted,
-        )
+    The float64 accumulation is EXACT: every contribution is an
+    integer with |imp * idf_q| < 2^8 * 2^21 = 2^29 (idf_q <=
+    ln(2e12)*2^16), so a doc would need > 2^24 matched terms before any
+    partial sum could leave the 2^53 exact-integer range — far beyond
+    any query shape. The kernel shell's rint recovers the int64."""
+    def score_term(t, blocks):
+        docs, imps = _decode_quant_blocks(blocks)
+        return docs, (imps * int(idf_q[t])).astype(np.float64)
 
-        chunks = [pdf for pdf in pdf_iter if not pdf.empty]
-        if not chunks:
-            return
-        all_blocks = pd.concat(chunks, ignore_index=True)
-        out = {"query_id": [], "doc_id": [], "score_q": []}
-        for _, bucket_blocks in all_blocks.groupby("bucket", sort=False):
-            by_term = dict(tuple(bucket_blocks.groupby("term", sort=False)))
-            fx_cache: dict[str, np.ndarray] = {}
-            decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for q in queries:
-                terms = list(dict.fromkeys(q["terms"]))
-                present = [t for t in terms if t in by_term]
-                if not present or (
-                    q["conjunctive"] and len(present) < len(terms)
-                ):
-                    continue
-                doc_parts, contrib_parts = [], []
-                for t in present:
-                    if t not in decoded:
-                        decoded[t] = _decode_quant_blocks(by_term[t])
-                    docs, imps = decoded[t]
-                    doc_parts.append(docs)
-                    contrib_parts.append(imps * int(idf_q[t]))
-                docs_all = np.concatenate(doc_parts)
-                contribs = np.concatenate(contrib_parts)
-                uniq, inv = np.unique(docs_all, return_inverse=True)
-                # bincount's float64 accumulation is EXACT here: every
-                # contribution is an integer with |imp * idf_q| <
-                # 2^8 * 2^21 = 2^29 (idf_q <= ln(2e12)*2^16), so a doc
-                # would need > 2^24 matched terms before any partial
-                # sum could leave the 2^53 exact-integer range — far
-                # beyond any query shape. rint+cast recovers the int64.
-                # (np.add.at would accumulate in int64 directly but is
-                # an order of magnitude slower than bincount.)
-                sums = np.bincount(
-                    inv, weights=contribs.astype(np.float64),
-                    minlength=uniq.size,
-                )
-                scores = np.rint(sums).astype(np.int64)
-                if q["conjunctive"]:
-                    cnt = np.bincount(inv, minlength=uniq.size)
-                    keep = cnt == len(terms)
-                    uniq, scores = uniq[keep], scores[keep]
-                    if uniq.size == 0:
-                        continue
-                # '-term' exclusion (incl. the deletes layer's
-                # __deleted__ pseudo-term) and attribute-filter
-                # inclusion, bucket-local and BEFORE the trim — the
-                # WAND kernel's machinery with the quantized docs-only
-                # decoder (impacts never read for pseudo-terms)
-                include = _bucket_inclusion(
-                    by_term, q.get("filter", []), fx_cache,
-                    decode_docs=_quant_block_docs,
-                )
-                if include is not None:
-                    alive = (
-                        _in_sorted(include, uniq)
-                        if include.size
-                        else np.zeros(uniq.size, bool)
-                    )
-                    uniq, scores = uniq[alive], scores[alive]
-                exclude = _bucket_exclusion(
-                    by_term, q.get("negated", []), fx_cache,
-                    decode_docs=_quant_block_docs,
-                )
-                if exclude is not None and exclude.size and uniq.size:
-                    alive = ~_in_sorted(exclude, uniq)
-                    uniq, scores = uniq[alive], scores[alive]
-                if uniq.size == 0:
-                    continue
-                # tie-safe bucket-local trim (keep every doc scoring
-                # >= the k-th largest); the global window applies the
-                # (score_q DESC, doc_id ASC) order — same contract as
-                # the float path's _accumulate_topk
-                if uniq.size > k:
-                    kth = np.partition(scores, uniq.size - k)[uniq.size - k]
-                    m = scores >= kth
-                    uniq, scores = uniq[m], scores[m]
-                out["query_id"].extend([q["query_id"]] * uniq.size)
-                out["doc_id"].extend(uniq.tolist())
-                out["score_q"].extend(scores.tolist())
-        if out["query_id"]:
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.array(out["query_id"], dtype="int32"),
-                    "doc_id": pd.array(out["doc_id"], dtype="int64"),
-                    "score_q": pd.array(out["score_q"], dtype="int64"),
-                }
-            )
-
-    return kernel
-
-
-def _quant_topk_window(local: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_q").desc(), F.col("doc_id").asc()
+    return bucket_kernel(
+        term_at_a_time(queries, k, score_term, _quant_block_docs), "score_q"
     )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score_q")
-    )
+
+
+def _quantized_idf(
+    term_dfs: dict[str, int], queries: list[dict], n_docs: int
+) -> dict[str, int]:
+    """idf_q of the queries' scored terms only — a caller may hand the
+    full-vocabulary df dict (e.g. the bench shares one with the exact
+    index)."""
+    return {
+        t: idf_quantized(term_dfs[t], n_docs)
+        for t in {t for q in queries for t in q["terms"]}
+        if t in term_dfs
+    }
 
 
 def quantized_topk(
@@ -437,31 +351,15 @@ def quantized_topk(
     Ranking is EXACT under the quantization contract — integer scores,
     ties broken doc_id ASC — so two runs (or two engines) can never
     disagree. df per term = sum(n) over its blocks, as in the exact
-    path; idf_q is computed driver-side for the query's terms only."""
-    from pisa_spark.query.bm25 import _arrange_pruned, _flat_filters
-
-    all_terms = sorted({t for q in queries for t in q["terms"]})
-    # negated / filter pseudo-terms ride the same pruned scan (their
-    # quantized impacts are never read — docs-only exclusion/inclusion)
-    aux_terms = sorted(
-        {t for q in queries for t in q.get("negated", [])}
-        | {t for q in queries for t in _flat_filters(q)}
+    path; idf_q is computed driver-side for the query's terms only.
+    Negated / filter pseudo-terms ride the same pruned scan."""
+    return kernel_topk(
+        postings, queries, k, term_dfs, pre_arranged,
+        lambda dfs: quantized_kernel(
+            queries, _quantized_idf(dfs, queries, n_docs), k
+        ),
+        "score_q",
     )
-    arranged, term_dfs = _arrange_pruned(
-        postings, sorted(set(all_terms) | set(aux_terms)), term_dfs,
-        pre_arranged,
-    )
-    # only the query's terms — a caller may hand the full-vocabulary df
-    # dict (e.g. the bench shares one with the exact index)
-    idf_q = {
-        t: idf_quantized(term_dfs[t], n_docs)
-        for t in all_terms
-        if t in term_dfs
-    }
-    local = arranged.mapInPandas(
-        quantized_kernel(queries, idf_q, k), schema=_TOPK_SCHEMA
-    )
-    return _quant_topk_window(local, k)
 
 
 QUANT_TABLE = "postings_quant"

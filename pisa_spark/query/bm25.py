@@ -37,9 +37,6 @@ from pisa_spark.index import codec
 from pisa_spark.index.build import BM25_B, BM25_K1
 from pisa_spark.session import task_wave_partitions
 
-TOPK_RESULT_SCHEMA = "query_id int, doc_id long, score double"
-
-
 def score_expr(n_docs: float, avgdl: float):
     """BM25 partial score as a JVM column expression over (tf, df,
     doc_len) — stays inside whole-stage codegen."""
@@ -51,16 +48,17 @@ def score_expr(n_docs: float, avgdl: float):
     return idf * (tf * (BM25_K1 + 1.0)) / denom
 
 
-def topk_window(scored: DataFrame, k: int) -> DataFrame:
-    """(query_id, doc_id, score) -> top-k per query, ties
-    (score DESC, doc_id ASC), rank 1..k."""
+def topk_window(scored: DataFrame, k: int, score_col: str = "score") -> DataFrame:
+    """(query_id, doc_id, <score_col>) -> top-k per query, ties
+    (<score_col> DESC, doc_id ASC), rank 1..k. score_col is the float
+    ``score`` or the quantized kernels' integer ``score_q``."""
     w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
+        F.col(score_col).desc(), F.col("doc_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
+        .select("query_id", "rank", "doc_id", score_col)
     )
 
 
@@ -364,13 +362,6 @@ def _arrange_pruned(
     return arranged, term_dfs
 
 
-_EMPTY_TOPK_FRAME = {
-    "query_id": pd.array([], dtype="int32"),
-    "doc_id": pd.array([], dtype="int64"),
-    "score": pd.array([], dtype="float64"),
-}
-
-
 def _exact_block_docs(g: pd.DataFrame) -> np.ndarray:
     """Sorted unique doc ids of a term's exact-index blocks — the
     default docs-only decoder for exclusion/inclusion sets."""
@@ -464,6 +455,204 @@ def _bucket_inclusion(
     return inter
 
 
+# ---------------------------------------------------------------------------
+# The bucket-kernel skeleton: one driver (kernel_topk), one mapInPandas
+# shell (bucket_kernel) and one accumulate-and-trim (_accumulate_topk)
+# under every top-k kernel; each kernel supplies only its per-bucket
+# scorer.
+# ---------------------------------------------------------------------------
+
+
+def query_terms(queries: list[dict]) -> list[str]:
+    """Every term a batch's kernel reads: scored terms, a mixed query's
+    loose extra_terms, negated terms (incl. the deletes layer's
+    __deleted__) and attribute-filter pseudo-terms."""
+    return sorted(
+        {
+            t
+            for q in queries
+            for key in ("terms", "extra_terms", "negated")
+            for t in q.get(key, [])
+        }
+        | {t for q in queries for t in _flat_filters(q)}
+    )
+
+
+def _topk_schema(score_col: str) -> str:
+    kind = "long" if score_col == "score_q" else "double"
+    return f"query_id int, doc_id long, {score_col} {kind}"
+
+
+def kernel_topk(
+    postings: DataFrame,
+    queries: list[dict],
+    k: int,
+    term_dfs: dict[str, int] | None,
+    pre_arranged: bool,
+    make_kernel,
+    score_col: str = "score",
+) -> DataFrame:
+    """The one top-k driver: term-pruned scan of query_terms(queries),
+    bucket co-location (_arrange_pruned), the per-bucket kernel
+    make_kernel(term_dfs) and the global top-k window over
+    <= n_buckets * |queries| * k rows."""
+    arranged, term_dfs = _arrange_pruned(
+        postings, query_terms(queries), term_dfs, pre_arranged
+    )
+    partial = arranged.mapInPandas(
+        make_kernel(term_dfs), schema=_topk_schema(score_col)
+    )
+    return topk_window(partial, k, score_col)
+
+
+def bucket_groups(
+    pdf_iter: Iterator[pd.DataFrame],
+) -> Iterator[dict[str, pd.DataFrame]]:
+    """A kernel partition's rows as one {term: rows} dict per bucket.
+    Every Arrow batch is concatenated first: a bucket may span many
+    batches and a partition may hold several buckets, and per-doc
+    scores must sum over the whole bucket."""
+    chunks = [pdf for pdf in pdf_iter if not pdf.empty]
+    if not chunks:
+        return
+    rows = pd.concat(chunks, ignore_index=True)
+    for _, bucket_rows in rows.groupby("bucket", sort=False):
+        yield dict(tuple(bucket_rows.groupby("term", sort=False)))
+
+
+def _cat(parts: list[np.ndarray], dtype) -> np.ndarray:
+    if not parts:
+        return np.empty(0, dtype)
+    return np.concatenate(parts).astype(dtype, copy=False)
+
+
+def bucket_kernel(score_bucket, score_col: str = "score"):
+    """The mapInPandas shell of every top-k kernel: for each bucket,
+    score_bucket(by_term) yields (query_id, docs, scores) with the
+    bucket-local candidates; one (query_id, doc_id, <score_col>) frame
+    leaves the partition. The ``score_q`` kernels sum integer
+    contributions in float64, which their own notes prove exact, and
+    the shell rounds the sums back to int64."""
+
+    def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        qids, docs, scores = [], [], []
+        for by_term in bucket_groups(pdf_iter):
+            for qid, d, s in score_bucket(by_term):
+                qids.append(np.full(d.size, qid, np.int32))
+                docs.append(d)
+                scores.append(s)
+        out = _cat(scores, np.float64)
+        if score_col == "score_q":
+            out = np.rint(out).astype(np.int64)
+        yield pd.DataFrame(
+            {
+                "query_id": _cat(qids, np.int32),
+                "doc_id": _cat(docs, np.int64),
+                score_col: out,
+            }
+        )
+
+    return kernel
+
+
+def _query_terms_in(q: dict, by_term: dict) -> tuple[list, list] | None:
+    """(distinct terms, those with blocks in this bucket), or None when
+    the bucket holds no match: no term present, or a conjunctive query
+    missing one. A repeated term scores once."""
+    terms = list(dict.fromkeys(q["terms"]))
+    present = [t for t in terms if t in by_term]
+    if not present or (q["conjunctive"] and len(present) < len(terms)):
+        return None
+    return terms, present
+
+
+def term_at_a_time(
+    queries: list[dict],
+    k: int,
+    score_term,
+    decode_docs=_exact_block_docs,
+):
+    """Per-bucket scorer of the kernels without block skipping: each
+    present term's blocks decode and score once per bucket,
+    score_term(term, blocks) -> (docs, contributions), shared by every
+    query in the batch; each query accumulates the shared arrays.
+    decode_docs: docs-only decoder of the layout, for the negated and
+    filter pseudo-terms."""
+    def score_bucket(by_term):
+        fx_cache: dict[str, np.ndarray] = {}
+        decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+        for q in queries:
+            found = _query_terms_in(q, by_term)
+            if found is None:
+                continue
+            terms, present = found
+            for t in present:
+                if t not in decoded:
+                    decoded[t] = score_term(t, by_term[t])
+            docs, scores = _accumulate_topk(
+                [decoded[t][0] for t in present],
+                [decoded[t][1] for t in present],
+                len(terms), q["conjunctive"], k,
+                exclude=_bucket_exclusion(
+                    by_term, q.get("negated", []), fx_cache, decode_docs
+                ),
+                include=_bucket_inclusion(
+                    by_term, q.get("filter", []), fx_cache, decode_docs
+                ),
+            )
+            yield q["query_id"], docs, scores
+
+    return score_bucket
+
+
+def _bounded_plans(
+    queries: list[dict],
+    by_term: dict,
+    n_docs: float,
+    avgdl: float,
+    term_dfs: dict[str, int],
+):
+    """The block-bound kernels' bucket prologue: idf and block bounds
+    of every query term present in the bucket (_block_bounds, once per
+    bucket), and each query that can match here as (q, terms,
+    present)."""
+    needed = [
+        t
+        for t in dict.fromkeys(t for q in queries for t in q["terms"])
+        if t in by_term
+    ]
+    idf, bmax = _block_bounds(by_term, needed, n_docs, avgdl, term_dfs)
+    plans = []
+    for q in queries:
+        found = _query_terms_in(q, by_term)
+        if found is not None:
+            plans.append((q, *found))
+    return idf, bmax, plans
+
+
+def _masked_parts(
+    by_term: dict,
+    present: list[str],
+    masks: dict[str, np.ndarray],
+    term_dfs: dict[str, int],
+    n_docs: float,
+    avgdl: float,
+) -> tuple[list[np.ndarray], list[np.ndarray]]:
+    """One query's kept blocks, decoded and scored term by term (the
+    single-query path of the block-mask kernels)."""
+    doc_parts, score_parts = [], []
+    for t in present:
+        m = masks[t]
+        if not m.any():
+            continue
+        docs, tfs, dls = _decode_blocks_vectorized(by_term[t][m])
+        doc_parts.append(docs)
+        score_parts.append(
+            _bm25_np(tfs, dls, float(term_dfs[t]), n_docs, avgdl)
+        )
+    return doc_parts, score_parts
+
+
 def wand_kernel(
     queries: list[dict],
     n_docs: float,
@@ -490,110 +679,75 @@ def wand_kernel(
     """
     thresholds = thresholds or {}
 
-    def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # A physical partition may hold several buckets; group first.
-        chunks = [pdf for pdf in pdf_iter if not pdf.empty]
-        if not chunks:
-            return
-        all_blocks = pd.concat(chunks, ignore_index=True)
-        out_frames = []
-        for _, bucket_blocks in all_blocks.groupby("bucket", sort=False):
-            by_term = dict(tuple(bucket_blocks.groupby("term", sort=False)))
-            needed = [
-                t
-                for t in dict.fromkeys(t for q in queries for t in q["terms"])
-                if t in by_term
-            ]
-            idf, bmax = _block_bounds(by_term, needed, n_docs, avgdl, term_dfs)
-            # plan every query first: (query, distinct terms, present, masks)
-            plans = []
-            neg_cache: dict[str, np.ndarray] = {}
-            for q in queries:
-                terms = list(dict.fromkeys(q["terms"]))  # a term scores once
-                present = [t for t in terms if t in by_term]
-                if not present or (q["conjunctive"] and len(present) < len(terms)):
+    def score_bucket(by_term):
+        idf, bmax, candidates = _bounded_plans(
+            queries, by_term, n_docs, avgdl, term_dfs
+        )
+        plans = []
+        for q, terms, present in candidates:
+            masks = _query_keep_masks(
+                present, q["conjunctive"], idf, bmax,
+                thresholds.get(q["query_id"], -np.inf),
+            )
+            if masks is not None:
+                plans.append((q, terms, present, masks))
+        batch = len(plans) > 1
+        decoded: dict[str, tuple] = {}
+        if batch:
+            union: dict[str, np.ndarray] = {}
+            for _, _, present, masks in plans:
+                for t in present:
+                    union[t] = masks[t] if t not in union else union[t] | masks[t]
+            for t, um in union.items():
+                if not um.any():
                     continue
-                masks = _query_keep_masks(
-                    present, q["conjunctive"], idf, bmax,
-                    thresholds.get(q["query_id"], -np.inf),
+                g = by_term[t]
+                docs, tfs, dls = _decode_blocks_vectorized(g[um])
+                scores = _bm25_np(tfs, dls, float(term_dfs[t]), n_docs, avgdl)
+                kept = np.flatnonzero(um)
+                ns = g["n"].to_numpy(np.int64)[kept]
+                decoded[t] = (docs, scores, kept, ns)
+        neg_cache: dict[str, np.ndarray] = {}
+        for q, terms, present, masks in plans:
+            if not batch:
+                doc_parts, score_parts = _masked_parts(
+                    by_term, present, masks, term_dfs, n_docs, avgdl
                 )
-                if masks is not None:
-                    plans.append((q, terms, present, masks))
-            if not plans:
-                continue
-            batch = len(plans) > 1
-            decoded: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-            if batch:
-                union: dict[str, np.ndarray] = {}
-                for _, _, present, masks in plans:
-                    for t in present:
-                        union[t] = masks[t] if t not in union else union[t] | masks[t]
-                for t, um in union.items():
-                    if not um.any():
-                        continue
-                    g = by_term[t]
-                    docs, tfs, dls = _decode_blocks_vectorized(g[um])
-                    scores = _bm25_np(tfs, dls, float(term_dfs[t]), n_docs, avgdl)
-                    kept = np.flatnonzero(um)
-                    ns = g["n"].to_numpy(np.int64)[kept]
-                    decoded[t] = (docs, scores, kept, ns)
-            for q, terms, present, masks in plans:
+            else:
                 doc_parts, score_parts = [], []
                 for t in present:
                     m = masks[t]
                     if not m.any():
                         continue
-                    if batch:
-                        docs, scores, kept, ns = decoded[t]
-                        # sel: this query's keep decision per DECODED
-                        # block. Dense sel -> skip the per-posting
-                        # re-mask and accumulate the shared arrays
-                        # uncut: extra blocks (kept by other queries)
-                        # only move understated scores toward exact,
-                        # which is always sound — the gather+copy of a
-                        # nearly-full mask costs more than accumulating
-                        # the few extra postings it would drop.
-                        sel = m[kept]
-                        if sel.all() or ns[sel].sum() * 2 > docs.size:
-                            doc_parts.append(docs)
-                            score_parts.append(scores)
-                        else:
-                            pm = np.repeat(sel, ns)
-                            doc_parts.append(docs[pm])
-                            score_parts.append(scores[pm])
-                    else:
-                        g = by_term[t]
-                        docs, tfs, dls = _decode_blocks_vectorized(g[m])
-                        scores = _bm25_np(
-                            tfs, dls, float(term_dfs[t]), n_docs, avgdl
-                        )
+                    docs, scores, kept, ns = decoded[t]
+                    # sel: this query's keep decision per DECODED
+                    # block. Dense sel -> skip the per-posting
+                    # re-mask and accumulate the shared arrays
+                    # uncut: extra blocks (kept by other queries)
+                    # only move understated scores toward exact,
+                    # which is always sound — the gather+copy of a
+                    # nearly-full mask costs more than accumulating
+                    # the few extra postings it would drop.
+                    sel = m[kept]
+                    if sel.all() or ns[sel].sum() * 2 > docs.size:
                         doc_parts.append(docs)
                         score_parts.append(scores)
-                docs, scores = _accumulate_topk(
-                    doc_parts, score_parts, len(terms), q["conjunctive"], k,
-                    exclude=_bucket_exclusion(
-                        by_term, q.get("negated", []), neg_cache
-                    ),
-                    include=_bucket_inclusion(
-                        by_term, q.get("filter", []), neg_cache
-                    ),
-                )
-                if docs.size:
-                    out_frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.full(docs.size, q["query_id"], np.int32),
-                                "doc_id": docs,
-                                "score": scores,
-                            }
-                        )
-                    )
-        if out_frames:
-            yield pd.concat(out_frames, ignore_index=True)
-        else:
-            yield pd.DataFrame(_EMPTY_TOPK_FRAME)
+                    else:
+                        pm = np.repeat(sel, ns)
+                        doc_parts.append(docs[pm])
+                        score_parts.append(scores[pm])
+            docs, scores = _accumulate_topk(
+                doc_parts, score_parts, len(terms), q["conjunctive"], k,
+                exclude=_bucket_exclusion(
+                    by_term, q.get("negated", []), neg_cache
+                ),
+                include=_bucket_inclusion(
+                    by_term, q.get("filter", []), neg_cache
+                ),
+            )
+            yield q["query_id"], docs, scores
 
-    return kernel
+    return bucket_kernel(score_bucket)
 
 
 def bm25_topk_wand(
@@ -625,29 +779,18 @@ def bm25_topk_wand(
     invariant: a bucket must not span partitions, or per-doc scores
     would be summed per fragment instead of per bucket.
 
-    Plan shape: scan (term-pruned: only blocks of query terms survive,
-    pushed to the parquet/Iceberg scan) -> per-bucket kernel -> global
-    top-k window over <= n_buckets * |queries| * k rows.
+    Plan shape (kernel_topk): scan (term-pruned: only blocks of query
+    terms survive, pushed to the parquet/Iceberg scan) -> per-bucket
+    kernel -> global top-k window over <= n_buckets * |queries| * k
+    rows. No cache: the term-pruned scan is cheaper to re-run than to
+    materialize, and caching per call would leak.
     """
-    all_terms = sorted(
-        {t for q in queries for t in q["terms"]}
-        | {t for q in queries for t in q.get("negated", [])}
-        | {t for q in queries for t in _flat_filters(q)}
-    )
-    # no cache: the term-pruned parquet scan (PushedFilters) is cheaper
-    # to re-run than to materialize, and caching per call would leak;
-    # df = sum(n) over the term's blocks when not supplied
-    arranged, term_dfs = _arrange_pruned(
-        postings, all_terms, term_dfs, pre_arranged
-    )
-    partial = arranged.mapInPandas(
-        wand_kernel(
-            queries, float(n_docs), float(avgdl), k, term_dfs,
-            primed_thresholds,
+    return kernel_topk(
+        postings, queries, k, term_dfs, pre_arranged,
+        lambda dfs: wand_kernel(
+            queries, float(n_docs), float(avgdl), k, dfs, primed_thresholds
         ),
-        schema=TOPK_RESULT_SCHEMA,
     )
-    return topk_window(partial, k)
 
 
 # ---------------------------------------------------------------------------
@@ -843,82 +986,40 @@ def maxscore_kernel(
     and pick per workload). Same input/output contract as wand_kernel.
 
     Disjunctive queries run the impact-ordered TAAT loop (_maxscore_or);
-    conjunctive queries keep the block-mask path — MaxScore's
-    new-doc/frozen split buys nothing under AND, where every term is
-    already a required filter. Queries are processed independently
-    (TAAT thresholds evolve per query); wand_kernel's batch union-decode
-    remains the batched-serving fast path.
+    conjunctive queries take WAND's single-query block-mask path —
+    MaxScore's new-doc/frozen split buys nothing under AND, where every
+    term is already a required filter. Queries are processed
+    independently (TAAT thresholds evolve per query); wand_kernel's
+    batch union-decode remains the batched-serving fast path.
     """
     thresholds = thresholds or {}
 
-    def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [pdf for pdf in pdf_iter if not pdf.empty]
-        if not chunks:
-            return
-        all_blocks = pd.concat(chunks, ignore_index=True)
-        out_frames = []
-        for _, bucket_blocks in all_blocks.groupby("bucket", sort=False):
-            by_term = dict(tuple(bucket_blocks.groupby("term", sort=False)))
-            needed = [
-                t
-                for t in dict.fromkeys(t for q in queries for t in q["terms"])
-                if t in by_term
-            ]
-            idf, bmax = _block_bounds(by_term, needed, n_docs, avgdl, term_dfs)
-            neg_cache: dict[str, np.ndarray] = {}
-            for q in queries:
-                terms = list(dict.fromkeys(q["terms"]))
-                present = [t for t in terms if t in by_term]
-                if not present or (q["conjunctive"] and len(present) < len(terms)):
+    def score_bucket(by_term):
+        idf, bmax, plans = _bounded_plans(
+            queries, by_term, n_docs, avgdl, term_dfs
+        )
+        neg_cache: dict[str, np.ndarray] = {}
+        for q, terms, present in plans:
+            excl = _bucket_exclusion(by_term, q.get("negated", []), neg_cache)
+            tau0 = thresholds.get(q["query_id"], -np.inf)
+            if q["conjunctive"]:
+                masks = _query_keep_masks(present, True, idf, bmax, tau0)
+                if masks is None:
                     continue
-                excl = _bucket_exclusion(
-                    by_term, q.get("negated", []), neg_cache
+                docs, scores = _accumulate_topk(
+                    *_masked_parts(
+                        by_term, present, masks, term_dfs, n_docs, avgdl
+                    ),
+                    len(terms), True, k, exclude=excl,
                 )
-                tau0 = thresholds.get(q["query_id"], -np.inf)
-                if q["conjunctive"]:
-                    masks = _query_keep_masks(
-                        present, True, idf, bmax, tau0
-                    )
-                    if masks is None:
-                        continue
-                    doc_parts, score_parts = [], []
-                    for t in present:
-                        m = masks[t]
-                        if not m.any():
-                            continue
-                        g = by_term[t]
-                        docs, tfs, dls = _decode_blocks_vectorized(g[m])
-                        score_parts.append(
-                            _bm25_np(tfs, dls, float(term_dfs[t]), n_docs, avgdl)
-                        )
-                        doc_parts.append(docs)
-                    docs, scores = _accumulate_topk(
-                        doc_parts, score_parts, len(terms), True, k,
-                        exclude=excl,
-                    )
-                else:
-                    docs, scores = _maxscore_or(
-                        by_term, present, idf, bmax, term_dfs,
-                        n_docs, avgdl, k, tau0, exclude=excl,
-                    )
-                if docs.size:
-                    out_frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.full(
-                                    docs.size, q["query_id"], np.int32
-                                ),
-                                "doc_id": docs,
-                                "score": scores,
-                            }
-                        )
-                    )
-        if out_frames:
-            yield pd.concat(out_frames, ignore_index=True)
-        else:
-            yield pd.DataFrame(_EMPTY_TOPK_FRAME)
+            else:
+                docs, scores = _maxscore_or(
+                    by_term, present, idf, bmax, term_dfs,
+                    n_docs, avgdl, k, tau0, exclude=excl,
+                )
+            yield q["query_id"], docs, scores
 
-    return kernel
+    return bucket_kernel(score_bucket)
 
 
 def bm25_topk_maxscore(
@@ -941,21 +1042,12 @@ def bm25_topk_maxscore(
             " (bm25_topk_wand / search_filtered); the MaxScore kernel"
             " does not implement the include intersection"
         )
-    all_terms = sorted(
-        {t for q in queries for t in q["terms"]}
-        | {t for q in queries for t in q.get("negated", [])}
-    )
-    arranged, term_dfs = _arrange_pruned(
-        postings, all_terms, term_dfs, pre_arranged
-    )
-    partial = arranged.mapInPandas(
-        maxscore_kernel(
-            queries, float(n_docs), float(avgdl), k, term_dfs,
-            primed_thresholds,
+    return kernel_topk(
+        postings, queries, k, term_dfs, pre_arranged,
+        lambda dfs: maxscore_kernel(
+            queries, float(n_docs), float(avgdl), k, dfs, primed_thresholds
         ),
-        schema=TOPK_RESULT_SCHEMA,
     )
-    return topk_window(partial, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1111,142 +1203,120 @@ def phrase_kernel(
     exactly as in the term kernels.
     """
 
-    def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [pdf for pdf in pdf_iter if not pdf.empty]
-        if not chunks:
-            return
-        all_blocks = pd.concat(chunks, ignore_index=True)
-        out_frames = []
-        for _, bucket_blocks in all_blocks.groupby("bucket", sort=False):
-            by_term = dict(tuple(bucket_blocks.groupby("term", sort=False)))
-            fx_cache: dict[str, np.ndarray] = {}
-            for q in phrases:
-                tokens = list(q["terms"])
-                distinct = list(dict.fromkeys(tokens))
-                if not tokens or any(t not in by_term for t in distinct):
-                    continue
-                include = _bucket_inclusion(
-                    by_term, q.get("filter", []), fx_cache
-                )
-                if include is not None and include.size == 0:
-                    continue
-                exclude = _bucket_exclusion(
-                    by_term, q.get("negated", []), fx_cache
-                )
-                decoded: dict[str, tuple] = {}
-                cand: np.ndarray | None = None
-                for t in sorted(distinct, key=lambda u: term_dfs[u]):
-                    # blocks arrive in scan/shuffle order, which is NOT
-                    # guaranteed to be doc order (a split parquet file
-                    # interleaves); sort by range so the decoded docs
-                    # are globally sorted — searchsorted block skipping
-                    # and candidate indexing depend on it
-                    g = by_term[t].sort_values("first_doc")
-                    if cand is not None:
-                        fd = g["first_doc"].to_numpy(np.int64)
-                        md = g["max_doc"].to_numpy(np.int64)
-                        # block skip: keep only blocks whose doc range
-                        # holds at least one surviving candidate
-                        keep = np.searchsorted(cand, md, "right") > (
-                            np.searchsorted(cand, fd, "left")
-                        )
-                        if not keep.any():
-                            cand = np.empty(0, np.int64)
-                            break
-                        g = g[keep]
-                    docs, tfs, dls = _decode_blocks_vectorized(g)
-                    poss = _decode_positions(g, tfs)
-                    decoded[t] = (docs, tfs, dls, poss)
-                    cand = docs if cand is None else np.intersect1d(
-                        cand, docs, assume_unique=True
-                    )
-                    if cand.size == 0:
-                        break
-                if cand is None or cand.size == 0:
-                    continue
-                # filters/negation gate candidates BEFORE the position
-                # verify — sorted-set ops keep cand sorted for the
-                # verifiers' searchsorted indexing
-                if include is not None:
-                    cand = cand[_in_sorted(include, cand)]
-                if exclude is not None and exclude.size:
-                    cand = cand[~_in_sorted(exclude, cand)]
-                if cand.size == 0:
-                    continue
-                occs = {
-                    t: (decoded[t][0], decoded[t][1], decoded[t][3])
-                    for t in distinct
-                }
-                w = int(q.get("window", 0))
-                if w > 0:
-                    near = (
-                        _ordered_near_match_docs
-                        if q.get("ordered")
-                        else _near_match_docs
-                    )
-                    matched = near(occs, tokens, cand, w)
-                else:
-                    matched = _phrase_match_docs(occs, tokens, cand)
-                if matched.size == 0:
-                    continue
-                # score survivors: BM25 sum over the phrase's distinct
-                # terms plus any loose extra_terms (mixed query:
-                # "quoted phrase" other words — phrase REQUIRED, every
-                # term scored; loose terms are optional, so they
-                # decode candidate-gated and never filter)
-                extra = [
-                    t
-                    for t in dict.fromkeys(q.get("extra_terms", []))
-                    if t not in distinct and t in by_term
-                       and term_dfs.get(t)
-                ]
-                doc_parts, score_parts = [], []
-                for t in distinct:
-                    docs, tfs, dls, _ = decoded[t]
-                    m = np.isin(docs, matched)
-                    doc_parts.append(docs[m])
-                    score_parts.append(
-                        _bm25_np(tfs[m], dls[m], float(term_dfs[t]),
-                                 n_docs, avgdl)
-                    )
-                for t in extra:
-                    g = by_term[t].sort_values("first_doc")
+    def score_bucket(by_term):
+        fx_cache: dict[str, np.ndarray] = {}
+        for q in phrases:
+            tokens = list(q["terms"])
+            distinct = list(dict.fromkeys(tokens))
+            if not tokens or any(t not in by_term for t in distinct):
+                continue
+            include = _bucket_inclusion(
+                by_term, q.get("filter", []), fx_cache
+            )
+            if include is not None and include.size == 0:
+                continue
+            exclude = _bucket_exclusion(
+                by_term, q.get("negated", []), fx_cache
+            )
+            decoded: dict[str, tuple] = {}
+            cand: np.ndarray | None = None
+            for t in sorted(distinct, key=lambda u: term_dfs[u]):
+                # blocks arrive in scan/shuffle order, which is NOT
+                # guaranteed to be doc order (a split parquet file
+                # interleaves); sort by range so the decoded docs
+                # are globally sorted — searchsorted block skipping
+                # and candidate indexing depend on it
+                g = by_term[t].sort_values("first_doc")
+                if cand is not None:
                     fd = g["first_doc"].to_numpy(np.int64)
                     md = g["max_doc"].to_numpy(np.int64)
-                    keep = np.searchsorted(matched, md, "right") > (
-                        np.searchsorted(matched, fd, "left")
+                    # block skip: keep only blocks whose doc range
+                    # holds at least one surviving candidate
+                    keep = np.searchsorted(cand, md, "right") > (
+                        np.searchsorted(cand, fd, "left")
                     )
                     if not keep.any():
-                        continue
-                    docs, tfs, dls = _decode_blocks_vectorized(g[keep])
-                    m = np.isin(docs, matched)
-                    doc_parts.append(docs[m])
-                    score_parts.append(
-                        _bm25_np(tfs[m], dls[m], float(term_dfs[t]),
-                                 n_docs, avgdl)
-                    )
-                docs_out, scores_out = _accumulate_topk(
-                    doc_parts, score_parts, len(distinct),
-                    conjunctive=not extra, k=k,
+                        cand = np.empty(0, np.int64)
+                        break
+                    g = g[keep]
+                docs, tfs, dls = _decode_blocks_vectorized(g)
+                poss = _decode_positions(g, tfs)
+                decoded[t] = (docs, tfs, dls, poss)
+                cand = docs if cand is None else np.intersect1d(
+                    cand, docs, assume_unique=True
                 )
-                if docs_out.size:
-                    out_frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.full(
-                                    docs_out.size, q["query_id"], np.int32
-                                ),
-                                "doc_id": docs_out,
-                                "score": scores_out,
-                            }
-                        )
-                    )
-        if out_frames:
-            yield pd.concat(out_frames, ignore_index=True)
-        else:
-            yield pd.DataFrame(_EMPTY_TOPK_FRAME)
+                if cand.size == 0:
+                    break
+            if cand is None or cand.size == 0:
+                continue
+            # filters/negation gate candidates BEFORE the position
+            # verify — sorted-set ops keep cand sorted for the
+            # verifiers' searchsorted indexing
+            if include is not None:
+                cand = cand[_in_sorted(include, cand)]
+            if exclude is not None and exclude.size:
+                cand = cand[~_in_sorted(exclude, cand)]
+            if cand.size == 0:
+                continue
+            occs = {
+                t: (decoded[t][0], decoded[t][1], decoded[t][3])
+                for t in distinct
+            }
+            w = int(q.get("window", 0))
+            if w > 0:
+                near = (
+                    _ordered_near_match_docs
+                    if q.get("ordered")
+                    else _near_match_docs
+                )
+                matched = near(occs, tokens, cand, w)
+            else:
+                matched = _phrase_match_docs(occs, tokens, cand)
+            if matched.size == 0:
+                continue
+            # score survivors: BM25 sum over the phrase's distinct
+            # terms plus any loose extra_terms (mixed query:
+            # "quoted phrase" other words — phrase REQUIRED, every
+            # term scored; loose terms are optional, so they
+            # decode candidate-gated and never filter)
+            extra = [
+                t
+                for t in dict.fromkeys(q.get("extra_terms", []))
+                if t not in distinct and t in by_term
+                   and term_dfs.get(t)
+            ]
+            doc_parts, score_parts = [], []
+            for t in distinct:
+                docs, tfs, dls, _ = decoded[t]
+                m = np.isin(docs, matched)
+                doc_parts.append(docs[m])
+                score_parts.append(
+                    _bm25_np(tfs[m], dls[m], float(term_dfs[t]),
+                             n_docs, avgdl)
+                )
+            for t in extra:
+                g = by_term[t].sort_values("first_doc")
+                fd = g["first_doc"].to_numpy(np.int64)
+                md = g["max_doc"].to_numpy(np.int64)
+                keep = np.searchsorted(matched, md, "right") > (
+                    np.searchsorted(matched, fd, "left")
+                )
+                if not keep.any():
+                    continue
+                docs, tfs, dls = _decode_blocks_vectorized(g[keep])
+                m = np.isin(docs, matched)
+                doc_parts.append(docs[m])
+                score_parts.append(
+                    _bm25_np(tfs[m], dls[m], float(term_dfs[t]),
+                             n_docs, avgdl)
+                )
+            docs_out, scores_out = _accumulate_topk(
+                doc_parts, score_parts, len(distinct),
+                conjunctive=not extra, k=k,
+            )
+            yield q["query_id"], docs_out, scores_out
 
-    return kernel
+    return bucket_kernel(score_bucket)
 
 
 def bm25_phrase_topk(
@@ -1261,23 +1331,15 @@ def bm25_phrase_topk(
     """Exact phrase top-k over the positional index (with_positions
     build): docs containing the consecutive token sequence, ranked by
     the BM25 score of the phrase's distinct terms, ties
-    (score DESC, doc_id ASC). Same plan shape as bm25_topk_wand:
-    term-pruned scan -> per-bucket kernel -> k-row top-k merge.
-    Attribute filters / '-term' negation / tombstone deletes compose
-    (candidate-gated in the kernel, bucket-local)."""
-    all_terms = sorted(
-        {t for q in phrases for t in q["terms"]}
-        | {t for q in phrases for t in q.get("negated", [])}
-        | {t for q in phrases for t in _flat_filters(q)}
+    (score DESC, doc_id ASC). The one positional driver: a query dict
+    carrying ``window`` (and ``ordered``) is a proximity query, one
+    carrying ``extra_terms`` a mixed query. Same plan shape as
+    bm25_topk_wand. Attribute filters / '-term' negation / tombstone
+    deletes compose (candidate-gated in the kernel, bucket-local)."""
+    return kernel_topk(
+        postings, phrases, k, term_dfs, pre_arranged,
+        lambda dfs: phrase_kernel(phrases, float(n_docs), float(avgdl), k, dfs),
     )
-    arranged, term_dfs = _arrange_pruned(
-        postings, all_terms, term_dfs, pre_arranged
-    )
-    partial = arranged.mapInPandas(
-        phrase_kernel(phrases, float(n_docs), float(avgdl), k, term_dfs),
-        schema=TOPK_RESULT_SCHEMA,
-    )
-    return topk_window(partial, k)
 
 
 def bm25_mixed_topk(
@@ -1296,20 +1358,9 @@ def bm25_mixed_topk(
     ranges). queries: [{query_id, terms: [phrase tokens],
     extra_terms: [...]}]. Filters / negation / deletes compose like
     bm25_phrase_topk."""
-    all_terms = sorted(
-        {t for q in queries for t in q["terms"]}
-        | {t for q in queries for t in q.get("extra_terms", [])}
-        | {t for q in queries for t in q.get("negated", [])}
-        | {t for q in queries for t in _flat_filters(q)}
+    return bm25_phrase_topk(
+        postings, queries, n_docs, avgdl, k, term_dfs, pre_arranged
     )
-    arranged, term_dfs = _arrange_pruned(
-        postings, all_terms, term_dfs, pre_arranged
-    )
-    partial = arranged.mapInPandas(
-        phrase_kernel(queries, float(n_docs), float(avgdl), k, term_dfs),
-        schema=TOPK_RESULT_SCHEMA,
-    )
-    return topk_window(partial, k)
 
 
 def bm25_near_topk(
@@ -1343,19 +1394,9 @@ def bm25_near_topk(
         )
         for q in queries
     ]
-    all_terms = sorted(
-        {t for q in qs for t in q["terms"]}
-        | {t for q in qs for t in q.get("negated", [])}
-        | {t for q in qs for t in _flat_filters(q)}
+    return bm25_phrase_topk(
+        postings, qs, n_docs, avgdl, k, term_dfs, pre_arranged
     )
-    arranged, term_dfs = _arrange_pruned(
-        postings, all_terms, term_dfs, pre_arranged
-    )
-    partial = arranged.mapInPandas(
-        phrase_kernel(qs, float(n_docs), float(avgdl), k, term_dfs),
-        schema=TOPK_RESULT_SCHEMA,
-    )
-    return topk_window(partial, k)
 
 
 def bm25_topk_federated(
@@ -1401,11 +1442,7 @@ def bm25_topk_federated(
         avgdl = sum(
             float(st["avgdl"]) * int(st["n_docs"]) for _, st in indexes
         ) / float(n_docs)
-    all_terms = sorted(
-        {t for q in queries for t in q["terms"]}
-        | {t for q in queries for t in q.get("negated", [])}
-        | {t for q in queries for t in _flat_filters(q)}
-    )
+    all_terms = query_terms(queries)
     if lexicons is None:
         lexicons = [None] * len(indexes)
     term_dfs: dict[str, int] = {}

@@ -45,21 +45,18 @@ table (one narrow pass), the same trade the avgdl bake-in makes.
 from __future__ import annotations
 
 import math
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pisa_spark.index import codec
 from pisa_spark.index.quantized import (
     QUANT_SCHEMA,
+    _decode_quant_blocks,
     _encode_quant_groups,
-    _quant_topk_window,
-    _TOPK_SCHEMA,
-    idf_quantized,
+    _quant_block_docs,
+    _quantized_idf,
 )
+from pisa_spark.query.bm25 import bucket_kernel, kernel_topk, term_at_a_time
 from pisa_spark.query.bm25f import BM25F_K1, FIELD_PARAMS, TITLE_LEN, fielded_tf
 from pisa_spark.session import task_wave_partitions
 
@@ -155,20 +152,6 @@ def build_bm25f_quantized(
     )
 
 
-def _decode_u32_blocks(g: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """A term's kept blocks: one varint pass for docs, one frombuffer
-    for the uint32 units."""
-    from pisa_spark.query.bm25 import _segmented_delta_decode
-
-    ns = g["n"].to_numpy(np.int64)
-    deltas = codec.varint_decode(b"".join(g["docs"])).astype(np.int64)
-    docs = _segmented_delta_decode(deltas, ns)
-    units = np.frombuffer(b"".join(g["imps"]), dtype=np.uint32).astype(
-        np.int64
-    )
-    return docs, units
-
-
 def _sat(p: np.ndarray) -> np.ndarray:
     """floor(65536.0 * p / (p + 57.6)) over int64 pseudo-tf units —
     the single saturation of BM25F in 2^16 fixed point, token-for-token
@@ -185,94 +168,17 @@ def bm25f_quant_kernel(
     """Per-bucket integer BM25F top-k closure — quantized_kernel's
     structure with the saturation transform in scoring; '-term'
     exclusion and attribute-filter inclusion compose via the shared
-    docs-only decoders."""
+    docs-only decoders. The float64 sums are exact: |idf_q * sat| <
+    2^21 * 2^16 = 2^37, so > 2^16 matched terms would be needed to
+    leave the 2^53 exact-integer range."""
 
-    def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pisa_spark.index.quantized import _quant_block_docs
-        from pisa_spark.query.bm25 import (
-            _bucket_exclusion,
-            _bucket_inclusion,
-            _in_sorted,
-        )
+    def score_term(t, blocks):
+        docs, units = _decode_quant_blocks(blocks, np.uint32)
+        return docs, (_sat(units) * int(idf_q[t])).astype(np.float64)
 
-        chunks = [pdf for pdf in pdf_iter if not pdf.empty]
-        if not chunks:
-            return
-        all_blocks = pd.concat(chunks, ignore_index=True)
-        out = {"query_id": [], "doc_id": [], "score_q": []}
-        for _, bucket_blocks in all_blocks.groupby("bucket", sort=False):
-            by_term = dict(tuple(bucket_blocks.groupby("term", sort=False)))
-            fx_cache: dict[str, np.ndarray] = {}
-            decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for q in queries:
-                terms = list(dict.fromkeys(q["terms"]))
-                present = [t for t in terms if t in by_term]
-                if not present or (
-                    q["conjunctive"] and len(present) < len(terms)
-                ):
-                    continue
-                doc_parts, contrib_parts = [], []
-                for t in present:
-                    if t not in decoded:
-                        docs, units = _decode_u32_blocks(by_term[t])
-                        decoded[t] = (docs, _sat(units) * int(idf_q[t]))
-                    docs, contribs = decoded[t]
-                    doc_parts.append(docs)
-                    contrib_parts.append(contribs)
-                docs_all = np.concatenate(doc_parts)
-                contribs = np.concatenate(contrib_parts)
-                uniq, inv = np.unique(docs_all, return_inverse=True)
-                # float64 bincount is exact here: |idf_q * sat| <
-                # 2^21 * 2^16 = 2^37, so > 2^16 matched terms would be
-                # needed to leave the 2^53 exact-integer range
-                sums = np.bincount(
-                    inv, weights=contribs.astype(np.float64),
-                    minlength=uniq.size,
-                )
-                scores = np.rint(sums).astype(np.int64)
-                if q["conjunctive"]:
-                    cnt = np.bincount(inv, minlength=uniq.size)
-                    keep = cnt == len(terms)
-                    uniq, scores = uniq[keep], scores[keep]
-                    if uniq.size == 0:
-                        continue
-                include = _bucket_inclusion(
-                    by_term, q.get("filter", []), fx_cache,
-                    decode_docs=_quant_block_docs,
-                )
-                if include is not None:
-                    alive = (
-                        _in_sorted(include, uniq)
-                        if include.size
-                        else np.zeros(uniq.size, bool)
-                    )
-                    uniq, scores = uniq[alive], scores[alive]
-                exclude = _bucket_exclusion(
-                    by_term, q.get("negated", []), fx_cache,
-                    decode_docs=_quant_block_docs,
-                )
-                if exclude is not None and exclude.size and uniq.size:
-                    alive = ~_in_sorted(exclude, uniq)
-                    uniq, scores = uniq[alive], scores[alive]
-                if uniq.size == 0:
-                    continue
-                if uniq.size > k:
-                    kth = np.partition(scores, uniq.size - k)[uniq.size - k]
-                    m = scores >= kth
-                    uniq, scores = uniq[m], scores[m]
-                out["query_id"].extend([q["query_id"]] * uniq.size)
-                out["doc_id"].extend(uniq.tolist())
-                out["score_q"].extend(scores.tolist())
-        if out["query_id"]:
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.array(out["query_id"], dtype="int32"),
-                    "doc_id": pd.array(out["doc_id"], dtype="int64"),
-                    "score_q": pd.array(out["score_q"], dtype="int64"),
-                }
-            )
-
-    return kernel
+    return bucket_kernel(
+        term_at_a_time(queries, k, score_term, _quant_block_docs), "score_q"
+    )
 
 
 def bm25f_quantized_topk(
@@ -288,23 +194,10 @@ def bm25f_quantized_topk(
     term = sum(n) over its blocks — the document-level df BM25F pins
     (one row per (term, doc) with the term in any field). Negation /
     filters compose; quoted phrases have no positional payload here."""
-    from pisa_spark.query.bm25 import _arrange_pruned, _flat_filters
-
-    all_terms = sorted({t for q in queries for t in q["terms"]})
-    aux_terms = sorted(
-        {t for q in queries for t in q.get("negated", [])}
-        | {t for q in queries for t in _flat_filters(q)}
+    return kernel_topk(
+        postings, queries, k, term_dfs, pre_arranged,
+        lambda dfs: bm25f_quant_kernel(
+            queries, _quantized_idf(dfs, queries, n_docs), k
+        ),
+        "score_q",
     )
-    arranged, term_dfs = _arrange_pruned(
-        postings, sorted(set(all_terms) | set(aux_terms)), term_dfs,
-        pre_arranged,
-    )
-    idf_q = {
-        t: idf_quantized(term_dfs[t], n_docs)
-        for t in all_terms
-        if t in term_dfs
-    }
-    local = arranged.mapInPandas(
-        bm25f_quant_kernel(queries, idf_q, k), schema=_TOPK_SCHEMA
-    )
-    return _quant_topk_window(local, k)

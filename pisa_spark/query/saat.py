@@ -67,7 +67,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pisa_spark.index.codec import delta_decode_docids, delta_encode_docids
@@ -75,11 +75,14 @@ from pisa_spark.index.quantized import (
     _decode_quant_blocks,
     idf_quantized,
 )
-from pisa_spark.query.bm25 import bucket_arranged
+from pisa_spark.query.bm25 import (
+    _accumulate_topk,
+    bucket_arranged,
+    bucket_kernel,
+    kernel_topk,
+)
 
 SEG_SCHEMA = "bucket int, term string, imp int, n int, docs binary"
-
-_TOPK_SCHEMA = "query_id int, doc_id long, score_q long"
 
 
 # ---------------------------------------------------------------------------
@@ -183,69 +186,42 @@ def _saat_kernel(
     """Per-bucket integer accumulation over SELECTED segments only.
 
     Decodes each needed (term, imp) segment once per bucket (shared
-    across the batch's queries); scores accumulate via bincount over
-    the unique-doc inverse — exact for the same 2^53 headroom argument
-    as quantized_kernel's in-kernel note. Tie-safe bucket-local trim
-    (keep every doc scoring >= the k-th), global order applied by the
-    final window.
+    across the batch's queries); scores accumulate in float64, exact
+    for the same 2^53 headroom argument as quantized_kernel's note.
+    Tie-safe bucket-local trim (keep every doc scoring >= the k-th),
+    global order applied by the final window.
     """
+    needed_all = set().union(*selections.values())
 
-    def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [pdf for pdf in pdf_iter if not pdf.empty]
-        if not chunks:
-            return
-        segs = pd.concat(chunks, ignore_index=True)
-        out = {"query_id": [], "doc_id": [], "score_q": []}
-        for _, bucket_segs in segs.groupby("bucket", sort=False):
-            by_key: dict[tuple[str, int], bytes] = {
-                (r.term, int(r.imp)): r.docs
-                for r in bucket_segs.itertuples(index=False)
-            }
-            needed = set().union(*selections.values()) & by_key.keys()
-            decoded = {
-                key: delta_decode_docids(by_key[key]) for key in needed
-            }
-            for q in queries:
-                qid = q["query_id"]
-                sel = selections.get(qid, set())
-                doc_parts, contrib_parts = [], []
-                for (t, imp) in sel:
-                    docs = decoded.get((t, imp))
-                    if docs is None:
-                        continue
-                    doc_parts.append(docs)
-                    contrib_parts.append(
-                        np.full(
-                            docs.size, imp * int(idf_q[t]), dtype=np.int64
-                        )
-                    )
-                if not doc_parts:
-                    continue
-                docs_all = np.concatenate(doc_parts)
-                contribs = np.concatenate(contrib_parts)
-                uniq, inv = np.unique(docs_all, return_inverse=True)
-                sums = np.bincount(
-                    inv, weights=contribs.astype(np.float64),
-                    minlength=uniq.size,
-                )
-                scores = np.rint(sums).astype(np.int64)
-                if uniq.size > k:
-                    kth = np.partition(scores, uniq.size - k)[uniq.size - k]
-                    m = scores >= kth
-                    uniq, scores = uniq[m], scores[m]
-                out["query_id"].extend([qid] * uniq.size)
-                out["doc_id"].extend(uniq.tolist())
-                out["score_q"].extend(scores.tolist())
-        if out["query_id"]:
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.array(out["query_id"], dtype="int32"),
-                    "doc_id": pd.array(out["doc_id"], dtype="int64"),
-                    "score_q": pd.array(out["score_q"], dtype="int64"),
-                }
+    def score_bucket(by_term):
+        by_key = {
+            (t, int(imp)): docs
+            for t, g in by_term.items()
+            for imp, docs in zip(g["imp"], g["docs"])
+        }
+        decoded = {
+            key: delta_decode_docids(by_key[key])
+            for key in needed_all & by_key.keys()
+        }
+        for q in queries:
+            keys = [
+                key
+                for key in selections.get(q["query_id"], set())
+                if key in decoded
+            ]
+            if not keys:
+                continue
+            docs, scores = _accumulate_topk(
+                [decoded[key] for key in keys],
+                [
+                    np.full(decoded[(t, imp)].size, float(imp * idf_q[t]))
+                    for t, imp in keys
+                ],
+                len(keys), False, k,
             )
+            yield q["query_id"], docs, scores
 
-    return kernel
+    return bucket_kernel(score_bucket, "score_q")
 
 
 def saat_topk(
@@ -289,15 +265,8 @@ def saat_topk(
         )
         for q in queries
     }
-    arranged = pruned if pre_arranged else bucket_arranged(pruned)
-    local = arranged.mapInPandas(
-        _saat_kernel(queries, idf_q, selections, k), schema=_TOPK_SCHEMA
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_q").desc(), F.col("doc_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score_q")
+    return kernel_topk(
+        segments, queries, k, dfs, pre_arranged,
+        lambda _: _saat_kernel(queries, idf_q, selections, k),
+        "score_q",
     )

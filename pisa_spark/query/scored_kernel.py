@@ -25,23 +25,17 @@ oracle SQL against this path).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pisa_spark.query.bm25 import (
-    _accumulate_topk,
     _bm25_np,
-    _bucket_exclusion,
-    _bucket_inclusion,
     _decode_blocks_vectorized,
-    _EMPTY_TOPK_FRAME,
-    _flat_filters,
-    TOPK_RESULT_SCHEMA,
-    topk_window,
+    bucket_kernel,
+    kernel_topk,
+    query_terms,
+    term_at_a_time,
 )
 from pisa_spark.query.scorers import (
     bm25plus_np,
@@ -98,61 +92,12 @@ def scored_kernel(
     batch; each query then accumulates the shared arrays."""
     fn = _score_fn(scorer, float(n_docs), float(avgdl), float(total_cf))
 
-    def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [pdf for pdf in pdf_iter if not pdf.empty]
-        if not chunks:
-            return
-        all_blocks = pd.concat(chunks, ignore_index=True)
-        out_frames = []
-        for _, bucket_blocks in all_blocks.groupby("bucket", sort=False):
-            by_term = dict(tuple(bucket_blocks.groupby("term", sort=False)))
-            fx_cache: dict[str, np.ndarray] = {}
-            decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for q in queries:
-                terms = list(dict.fromkeys(q["terms"]))
-                present = [t for t in terms if t in by_term]
-                if not present or (
-                    q["conjunctive"] and len(present) < len(terms)
-                ):
-                    continue
-                doc_parts, score_parts = [], []
-                for t in present:
-                    if t not in decoded:
-                        docs, tfs, dls = _decode_blocks_vectorized(by_term[t])
-                        dfreq, cf = term_stats[t]
-                        decoded[t] = (
-                            docs, fn(tfs, dls, float(dfreq), float(cf))
-                        )
-                    docs, scores = decoded[t]
-                    doc_parts.append(docs)
-                    score_parts.append(scores)
-                docs, scores = _accumulate_topk(
-                    doc_parts, score_parts, len(terms), q["conjunctive"], k,
-                    exclude=_bucket_exclusion(
-                        by_term, q.get("negated", []), fx_cache
-                    ),
-                    include=_bucket_inclusion(
-                        by_term, q.get("filter", []), fx_cache
-                    ),
-                )
-                if docs.size:
-                    out_frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.full(
-                                    docs.size, q["query_id"], np.int32
-                                ),
-                                "doc_id": docs,
-                                "score": scores,
-                            }
-                        )
-                    )
-        if out_frames:
-            yield pd.concat(out_frames, ignore_index=True)
-        else:
-            yield pd.DataFrame(_EMPTY_TOPK_FRAME)
+    def score_term(t, blocks):
+        docs, tfs, dls = _decode_blocks_vectorized(blocks)
+        dfreq, cf = term_stats[t]
+        return docs, fn(tfs, dls, float(dfreq), float(cf))
 
-    return kernel
+    return bucket_kernel(term_at_a_time(queries, k, score_term))
 
 
 def term_stats_from_blocks(
@@ -205,22 +150,15 @@ def scored_topk_pruned(
     one bucket repartition (elided when pre_arranged) -> per-bucket
     vectorized kernel -> global top-k window over <=
     n_buckets*|queries|*k rows."""
-    from pisa_spark.query.bm25 import _arrange_pruned
-
-    all_terms = sorted(
-        {t for q in queries for t in q["terms"]}
-        | {t for q in queries for t in q.get("negated", [])}
-        | {t for q in queries for t in _flat_filters(q)}
-    )
-    arranged, _ = _arrange_pruned(postings, all_terms, {}, pre_arranged)
+    terms = query_terms(queries)
     if term_stats is None:
-        term_stats = term_stats_from_blocks(postings, all_terms)
-
-    partial = arranged.mapInPandas(
-        scored_kernel(
+        term_stats = term_stats_from_blocks(postings, terms)
+    # the dfs size the kernel stage: a small query runs as one task
+    term_dfs = {t: term_stats[t][0] for t in terms if t in term_stats}
+    return kernel_topk(
+        postings, queries, k, term_dfs, pre_arranged,
+        lambda _: scored_kernel(
             queries, scorer, float(n_docs), float(avgdl), float(total_cf), k,
             term_stats,
         ),
-        schema=TOPK_RESULT_SCHEMA,
     )
-    return topk_window(partial, k)

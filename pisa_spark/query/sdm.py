@@ -56,16 +56,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pisa_spark.query.bm25 import (
-    TOPK_RESULT_SCHEMA,
     _arrange_pruned,
     _bucket_exclusion,
     _bucket_inclusion,
     _decode_blocks_vectorized,
     _decode_positions,
-    _EMPTY_TOPK_FRAME,
-    _flat_filters,
     _in_sorted,
-    topk_window,
+    bucket_groups,
+    bucket_kernel,
+    kernel_topk,
 )
 
 MU = 2500.0
@@ -128,13 +127,8 @@ def _stats_kernel(queries: list[dict], window: int):
     pairs = sorted({p for q in queries for p in _pairs(q["terms"])})
 
     def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [pdf for pdf in pdf_iter if not pdf.empty]
-        if not chunks:
-            return
-        all_blocks = pd.concat(chunks, ignore_index=True)
         kinds, keys, vals = [], [], []
-        for _, bucket_blocks in all_blocks.groupby("bucket", sort=False):
-            by_term = dict(tuple(bucket_blocks.groupby("term", sort=False)))
+        for by_term in bucket_groups(pdf_iter):
             dec: dict[str, tuple] = {}
             for t in terms:
                 if t not in by_term:
@@ -181,144 +175,131 @@ def _score_kernel(
     cf_o = stats["o"]
     cf_u = stats["u"]
 
-    def kernel(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [pdf for pdf in pdf_iter if not pdf.empty]
-        if not chunks:
-            return
-        all_blocks = pd.concat(chunks, ignore_index=True)
-        out = []
-        for _, bucket_blocks in all_blocks.groupby("bucket", sort=False):
-            by_term = dict(tuple(bucket_blocks.groupby("term", sort=False)))
-            dec: dict[str, tuple] = {}
-            fx_cache: dict[str, np.ndarray] = {}
+    def score_bucket(by_term):
+        dec: dict[str, tuple] = {}
+        fx_cache: dict[str, np.ndarray] = {}
 
-            def decoded(t):
-                if t not in dec:
-                    g = by_term[t].sort_values("first_doc")
-                    docs, tfs, dls = _decode_blocks_vectorized(g)
-                    poss = _decode_positions(g, tfs)
-                    dec[t] = (docs, tfs, dls, poss)
-                return dec[t]
+        def decoded(t):
+            if t not in dec:
+                g = by_term[t].sort_values("first_doc")
+                docs, tfs, dls = _decode_blocks_vectorized(g)
+                poss = _decode_positions(g, tfs)
+                dec[t] = (docs, tfs, dls, poss)
+            return dec[t]
 
-            for q in queries:
-                terms = list(dict.fromkeys(q["terms"]))
-                present = [
-                    t for t in terms if t in by_term and cf_t.get(t, 0) > 0
-                ]
-                if not present:
+        for q in queries:
+            terms = list(dict.fromkeys(q["terms"]))
+            present = [
+                t for t in terms if t in by_term and cf_t.get(t, 0) > 0
+            ]
+            if not present:
+                continue
+            # attribute filters / '-term' negation / tombstone
+            # deletes compose exactly as in the phrase kernel:
+            # include/exclude sets gate the CANDIDATES before any
+            # feature work (bucket-local by the doc-range layout).
+            # Collection stats stay corpus-level — the Lucene
+            # stale-stats convention the deletes layer pins.
+            include = _bucket_inclusion(
+                by_term, q.get("filter", []), fx_cache
+            )
+            if include is not None and include.size == 0:
+                continue
+            exclude = _bucket_exclusion(
+                by_term, q.get("negated", []), fx_cache
+            )
+            parts = [decoded(t) for t in present]
+            cand = parts[0][0] if len(parts) == 1 else np.unique(
+                np.concatenate([p[0] for p in parts])
+            )
+            if include is not None:
+                cand = cand[_in_sorted(include, cand)]
+            if exclude is not None and exclude.size:
+                cand = cand[~_in_sorted(exclude, cand)]
+            if cand.size == 0:
+                continue
+            dl = np.zeros(cand.size, np.float64)
+            for docs, tfs, dls, _ in parts:
+                m = np.isin(docs, cand)
+                dl[np.searchsorted(cand, docs[m])] = dls[m]
+            denom = np.log(dl + mu)
+            score = np.zeros(cand.size, np.float64)
+            # unigram features — EVERY query term occurrence in the
+            # ordered query scores (duplicates score twice), absent
+            # or cf=0 terms contribute their background probability
+            for t in q["terms"]:
+                cf = float(cf_t.get(t, 0))
+                if cf <= 0:
                     continue
-                # attribute filters / '-term' negation / tombstone
-                # deletes compose exactly as in the phrase kernel:
-                # include/exclude sets gate the CANDIDATES before any
-                # feature work (bucket-local by the doc-range layout).
-                # Collection stats stay corpus-level — the Lucene
-                # stale-stats convention the deletes layer pins.
-                include = _bucket_inclusion(
-                    by_term, q.get("filter", []), fx_cache
-                )
-                if include is not None and include.size == 0:
-                    continue
-                exclude = _bucket_exclusion(
-                    by_term, q.get("negated", []), fx_cache
-                )
-                parts = [decoded(t) for t in present]
-                cand = parts[0][0] if len(parts) == 1 else np.unique(
-                    np.concatenate([p[0] for p in parts])
-                )
-                if include is not None:
-                    cand = cand[_in_sorted(include, cand)]
-                if exclude is not None and exclude.size:
-                    cand = cand[~_in_sorted(exclude, cand)]
-                if cand.size == 0:
-                    continue
-                dl = np.zeros(cand.size, np.float64)
-                for docs, tfs, dls, _ in parts:
+                tf = np.zeros(cand.size, np.float64)
+                if t in by_term:
+                    docs, tfs, _, _ = decoded(t)
                     m = np.isin(docs, cand)
-                    dl[np.searchsorted(cand, docs[m])] = dls[m]
-                denom = np.log(dl + mu)
-                score = np.zeros(cand.size, np.float64)
-                # unigram features — EVERY query term occurrence in the
-                # ordered query scores (duplicates score twice), absent
-                # or cf=0 terms contribute their background probability
-                for t in q["terms"]:
-                    cf = float(cf_t.get(t, 0))
+                    tf[np.searchsorted(cand, docs[m])] = tfs[m]
+                score += l_t * (np.log(tf + mu * cf / total_cf) - denom)
+            # window features over adjacent pairs — per query
+            # POSITION like the unigrams (a repeated bigram scores
+            # twice); zero-cf pairs contribute nothing anywhere,
+            # by convention
+            pair_cache: dict = {}
+            for a, b in zip(q["terms"], q["terms"][1:]):
+                key = f"{a}|{b}"
+                for cf_map, lam, which in (
+                    (cf_o, l_o, "o"),
+                    (cf_u, l_u, "u"),
+                ):
+                    cf = float(cf_map.get(key, 0))
                     if cf <= 0:
                         continue
-                    tf = np.zeros(cand.size, np.float64)
-                    if t in by_term:
-                        docs, tfs, _, _ = decoded(t)
-                        m = np.isin(docs, cand)
-                        tf[np.searchsorted(cand, docs[m])] = tfs[m]
-                    score += l_t * (np.log(tf + mu * cf / total_cf) - denom)
-                # window features over adjacent pairs — per query
-                # POSITION like the unigrams (a repeated bigram scores
-                # twice); zero-cf pairs contribute nothing anywhere,
-                # by convention
-                pair_cache: dict = {}
-                for a, b in zip(q["terms"], q["terms"][1:]):
-                    key = f"{a}|{b}"
-                    for cf_map, lam, which in (
-                        (cf_o, l_o, "o"),
-                        (cf_u, l_u, "u"),
-                    ):
-                        cf = float(cf_map.get(key, 0))
-                        if cf <= 0:
-                            continue
-                        x = np.zeros(cand.size, np.float64)
-                        if a in by_term and b in by_term:
-                            if (a, b) not in pair_cache:
-                                da = decoded(a)
-                                db = decoded(b)
-                                ka = _occ_keys(da[0], da[1], da[3], cand)
-                                kb = (
-                                    ka
-                                    if a == b
-                                    else _occ_keys(db[0], db[1], db[3], cand)
-                                )
-                                pair_cache[(a, b)] = _pair_counts(
-                                    ka, kb, a == b, window
-                                )
-                            do, co, du, cu = pair_cache[(a, b)]
-                            if which == "o":
-                                x[do] = co
-                            else:
-                                x[du] = cu
-                        score += lam * (
-                            np.log(x + mu * cf / total_cf) - denom
-                        )
-                # tie-safe bucket top-k: (score DESC, doc_id ASC) so a
-                # boundary tie never keeps the larger doc_id that the
-                # global window would rank below a dropped equal-score
-                # candidate
-                idx = np.lexsort((cand, -score))[:k]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(
-                                idx.size, q["query_id"], np.int32
-                            ),
-                            "doc_id": cand[idx],
-                            "score": score[idx],
-                        }
+                    x = np.zeros(cand.size, np.float64)
+                    if a in by_term and b in by_term:
+                        if (a, b) not in pair_cache:
+                            da = decoded(a)
+                            db = decoded(b)
+                            ka = _occ_keys(da[0], da[1], da[3], cand)
+                            kb = (
+                                ka
+                                if a == b
+                                else _occ_keys(db[0], db[1], db[3], cand)
+                            )
+                            pair_cache[(a, b)] = _pair_counts(
+                                ka, kb, a == b, window
+                            )
+                        do, co, du, cu = pair_cache[(a, b)]
+                        if which == "o":
+                            x[do] = co
+                        else:
+                            x[du] = cu
+                    score += lam * (
+                        np.log(x + mu * cf / total_cf) - denom
                     )
-                )
-        if out:
-            yield pd.concat(out, ignore_index=True)
-        else:
-            yield pd.DataFrame(_EMPTY_TOPK_FRAME)
+            # tie-safe bucket top-k: (score DESC, doc_id ASC) so a
+            # boundary tie never keeps the larger doc_id that the
+            # global window would rank below a dropped equal-score
+            # candidate
+            idx = np.lexsort((cand, -score))[:k]
+            yield q["query_id"], cand[idx], score[idx]
 
-    return kernel
+    return bucket_kernel(score_bucket)
 
 
 def sdm_collection_stats(
-    postings: DataFrame, queries: list[dict], window: int = WINDOW
+    postings: DataFrame,
+    queries: list[dict],
+    window: int = WINDOW,
+    term_dfs: dict[str, int] | None = None,
+    pre_arranged: bool = False,
 ) -> dict:
     """Corpus-wide SDM statistics for ``queries``: {'cf': {term: cf},
     'o': {'a|b': cf}, 'u': {'a|b': cf}} — one term-pruned decode pass,
     partial-aggregated per bucket (|terms| + 2*|pairs| rows cross the
-    wire per bucket, never postings)."""
+    wire per bucket, never postings). term_dfs / pre_arranged size and
+    arrange the pass as in every top-k driver; without dfs it runs one
+    partition per core."""
     all_terms = sorted({t for q in queries for t in q["terms"]})
-    arranged, _ = _arrange_pruned(postings, all_terms, {}, False)
+    arranged, _ = _arrange_pruned(
+        postings, all_terms, term_dfs or {}, pre_arranged
+    )
     rows = (
         arranged.mapInPandas(
             _stats_kernel(queries, window), schema=_STATS_SCHEMA
@@ -342,23 +323,23 @@ def sdm_topk(
     lambdas: tuple[float, float, float] = LAMBDAS,
     window: int = WINDOW,
     stats: dict | None = None,
+    term_dfs: dict[str, int] | None = None,
+    pre_arranged: bool = False,
 ) -> DataFrame:
     """SDM top-k over the positional index. queries: [{query_id,
     terms: [ordered tokens]}]; total_cf = |C| (collection token
     count). Returns (query_id, rank, doc_id, score), ties
-    (score DESC, doc_id ASC)."""
+    (score DESC, doc_id ASC). term_dfs / pre_arranged: as in
+    bm25_topk_wand; SDM scores from its own collection stats, so
+    without dfs both passes run one partition per core instead of
+    paying a df aggregate."""
     if stats is None:
-        stats = sdm_collection_stats(postings, queries, window)
-    all_terms = sorted(
-        {t for q in queries for t in q["terms"]}
-        | {t for q in queries for t in q.get("negated", [])}
-        | {t for q in queries for t in _flat_filters(q)}
-    )
-    arranged, _ = _arrange_pruned(postings, all_terms, {}, False)
-    partial = arranged.mapInPandas(
-        _score_kernel(
+        stats = sdm_collection_stats(
+            postings, queries, window, term_dfs, pre_arranged
+        )
+    return kernel_topk(
+        postings, queries, k, term_dfs or {}, pre_arranged,
+        lambda _: _score_kernel(
             queries, stats, float(total_cf), k, float(mu), lambdas, window
         ),
-        schema=TOPK_RESULT_SCHEMA,
     )
-    return topk_window(partial, k)

@@ -21,6 +21,39 @@ def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
 
 
+# The MinHash/LSH tests share their relations: each is computed once
+# per module (MD5 signatures, the LSH self-join, the all-pairs exact
+# Jaccard) instead of once per reference.
+@pytest.fixture(scope="module")
+def sigs(docs):
+    rel = minhash_signatures(docs).cache()
+    yield rel
+    rel.unpersist()
+
+
+@pytest.fixture(scope="module")
+def cands(sigs):
+    rel = minhash_lsh_candidates(sigs).cache()
+    rel.count()  # materialized once: later plans reference it repeatedly
+    yield rel
+    rel.unpersist()
+
+
+@pytest.fixture(scope="module")
+def exact_pairs(docs):
+    """All-pairs exact Jaccard >= 0.3. ngram_jaccard_pairs applies its
+    threshold as the final filter, so a higher threshold's relation is
+    this one filtered (high_pairs)."""
+    rel = ngram_jaccard_pairs(docs, threshold=0.3).cache()
+    yield rel
+    rel.unpersist()
+
+
+@pytest.fixture(scope="module")
+def high_pairs(exact_pairs):
+    return exact_pairs.filter(F.col("jaccard") >= 0.9)
+
+
 def test_exact_dedup_finds_planted_dups(spark, docs):
     d = docs.select("doc_id", "text")
     dup = d.union(d.select((F.col("doc_id") + 10000).alias("doc_id"), "text"))
@@ -34,9 +67,7 @@ def test_exact_dedup_finds_planted_dups(spark, docs):
     assert kept.filter(F.col("doc_id") >= 10000).count() == 0
 
 
-def test_minhash_estimates_track_true_jaccard(docs):
-    sigs = minhash_signatures(docs)
-    cands = minhash_lsh_candidates(sigs)
+def test_minhash_estimates_track_true_jaccard(docs, cands):
     true = ngram_jaccard_pairs(docs, threshold=0.0, candidates=cands)
     joined = cands.join(true, ["doc_a", "doc_b"]).collect()
     assert joined, "LSH found no candidates on the synthetic corpus"
@@ -45,13 +76,11 @@ def test_minhash_estimates_track_true_jaccard(docs):
         assert abs(r["est_jaccard"] - r["jaccard"]) < 0.35, r
 
 
-def test_lsh_candidates_include_high_jaccard_pairs(docs):
+def test_lsh_candidates_include_high_jaccard_pairs(high_pairs, cands):
     """Recall property: pairs with very high true jaccard should be
     LSH candidates (4 bands x 4 rows: P(detect) = 1-(1-j^4)^4 -> ~1 for
     j >= 0.9)."""
-    high = ngram_jaccard_pairs(docs, threshold=0.9)
-    cands = minhash_lsh_candidates(minhash_signatures(docs))
-    missed = high.join(cands, ["doc_a", "doc_b"], "left_anti").count()
+    missed = high_pairs.join(cands, ["doc_a", "doc_b"], "left_anti").count()
     assert missed == 0
 
 
@@ -161,21 +190,20 @@ def test_embedding_lsh_pairs_subset_with_recall(spark, sf_dir):
     assert n_lsh / n_exact >= 0.3, (n_lsh, n_exact)
 
 
-def test_near_duplicate_pairs_one_call(docs):
+def test_near_duplicate_pairs_one_call(docs, exact_pairs, high_pairs):
     """Composed text near-dup: subset of the exact all-pairs answer
     with exact jaccard values; high-jaccard pairs always recalled
     (1-(1-j^4)^4 ~ 1 at j >= 0.9 for 4x4 banding)."""
     from pisa_spark.dedup.dedup import near_duplicate_pairs
 
     composed = near_duplicate_pairs(docs, threshold=0.3).cache()
-    exact = ngram_jaccard_pairs(docs, threshold=0.3).cache()
+    exact = exact_pairs
     assert composed.join(exact, ["doc_a", "doc_b"], "left_anti").count() == 0
     joined = composed.join(
         exact.withColumnRenamed("jaccard", "jx"), ["doc_a", "doc_b"]
     )
     assert joined.filter(F.abs(F.col("jaccard") - F.col("jx")) > 1e-9).count() == 0
-    high = ngram_jaccard_pairs(docs, threshold=0.9)
-    assert high.join(composed, ["doc_a", "doc_b"], "left_anti").count() == 0
+    assert high_pairs.join(composed, ["doc_a", "doc_b"], "left_anti").count() == 0
 
 
 def test_embedding_near_pairs_empty_relation_requires_dim(spark):

@@ -227,6 +227,32 @@ def test_small_query_runs_one_job_of_one_task(spark, eng, oracle):
     ]
 
 
+def test_small_scored_query_runs_one_job_of_one_task(spark, eng, monkeypatch):
+    """search_scored sizes its kernel stage from the term stats it
+    already holds: a warm small query runs one Spark job of one task,
+    with the rows of the one-partition-per-core plan."""
+    from pisa_spark.query import bm25
+
+    loaded = SearchEngine.load(spark, eng._index_root)
+
+    def run():
+        return sorted(
+            tuple(r)
+            for r in loaded.search_scored("data join", scorer="qld").collect()
+        )
+
+    run()  # the serving cache and the term stats are filled
+    rows, jobs = _job_ids(spark, "one-task-scored", run)
+    assert len(jobs) == 1, jobs
+    tracker = spark.sparkContext.statusTracker()
+    stages = [
+        tracker.getStageInfo(s) for s in tracker.getJobInfo(jobs[0]).stageIds
+    ]
+    assert sum(s.numCompletedTasks for s in stages if s) == 1
+    monkeypatch.setattr(bm25, "POSTINGS_PER_TASK", 1)
+    assert rows and run() == rows
+
+
 def test_big_query_runs_one_partition_per_core(spark, eng, monkeypatch):
     """Above POSTINGS_PER_TASK postings per task the kernel stage takes
     one partition per core, on the cached (coalesced) and the

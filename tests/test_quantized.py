@@ -110,7 +110,6 @@ def test_block_payloads_round_trip(toks, stats):
     ).toPandas()
     want = {(r.term, int(r.doc_id), int(r.imp)) for r in want_df.itertuples()}
     assert set(got) == want and len(got) == len(want)
-    assert blocks["imp_max"].between(0, IMPACT_SCALE - 1).all()
 
 
 @pytest.mark.parametrize(

@@ -232,3 +232,32 @@ def test_engine_sdm_routing_and_deletes(spark, tmp_path):
     )
     with pytest.raises(ValueError):
         plain.search_sdm("data join")
+
+
+def test_loaded_engine_sdm_needs_no_bucket_shuffle(spark, tmp_path):
+    """A load()ed engine's serving relation is already bucket-arranged
+    (here the stored one-file-per-bucket layout, so the scan itself
+    holds no exchange): search_sdm plans no hashpartitioning(bucket)
+    exchange, and its rows equal the brute-force replay."""
+    from pisa_spark.engine import SearchEngine
+
+    root = str(tmp_path / "sdmload")
+    SearchEngine.build(
+        spark, SF, root, n_buckets=8, wave_size=8, with_positions=True
+    )
+    eng = SearchEngine.load(spark, root, cache=False)
+    assert eng._pre_arranged
+    got = eng.search_sdm("data join", k=10)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(bucket" not in plan, plan
+    toks = spark.read.parquet(f"{SF}/documents.parquet").select(
+        "doc_id", tokens_col(F.col("text")).alias("tokens")
+    )
+    tok_rows = {
+        row["doc_id"]: list(row["tokens"]) for row in toks.collect()
+    }
+    total = sum(len(t) for t in tok_rows.values())
+    exp = _brute(tok_rows, ["data", "join"], total)
+    g = got.toPandas().sort_values("rank")
+    assert [int(x) for x in g.doc_id] == [d for d, _ in exp]
+    assert np.allclose(g.score.to_numpy(), [s for _, s in exp], atol=1e-9)
