@@ -141,6 +141,20 @@ def stem_s(token: Column) -> Column:
     )
 
 
+def stem_s_py(token: str) -> str:
+    """stem_s for one Python string, rule for rule — the driver-side
+    twin for term sets already held in the driver (the engine's
+    lexicon, a query's terms), where a Spark job per call would cost
+    more than the stemming (tests/test_stemmer.py pins the two equal)."""
+    if token.endswith("ies"):
+        return token[:-3] + "y" if token[-4:-3] not in ("", "a", "e") else token
+    if token.endswith("es"):
+        return token[:-1] if token[-3:-2] not in ("", "a", "e", "o") else token
+    if token.endswith("s"):
+        return token[:-1] if token[-2:-1] not in ("", "u", "s") else token
+    return token
+
+
 def stemmed_tokens_col(text: Column) -> Column:
     """tokens_col with S-stemming applied per token — the stemmed
     tokenizer variant for recall-over-precision index builds ("queries"

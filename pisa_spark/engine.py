@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pisa_spark.corpus import parse_query
+from pisa_spark.corpus import parse_query, stem_s, stem_s_py
 from pisa_spark.index.lineage import build_index_resumable, load_index
 from pisa_spark.query.bm25 import bm25_topk_wand, bucket_arranged
 from pisa_spark.session import local_frame
@@ -86,6 +86,11 @@ class SearchEngine:
         # cannot drift under it.
         self._lexicon: dict[str, int] | None = None
         self._df_cache: dict[str, int] = {}
+        # S-stem classes of two or more vocabulary terms, for
+        # search_synonyms, taken on its first call: stem -> terms from
+        # the lexicon, or without one a cached (stem, term) relation
+        self._stem_classes: dict[str, list[str]] | None = None
+        self._stem_class_df: DataFrame | None = None
         # term -> (df, cf) for the alternative-scorer kernel (QLD/PL2/
         # DPH need collection frequency); same snapshot-lifetime rule
         self._term_stats_cache: dict[str, tuple[int, int]] = {}
@@ -1003,13 +1008,13 @@ class SearchEngine:
         wildcards ('*tion', 's*t') with a pushed In(gram, ...) lookup
         instead of a per-query-batch vocabulary explode
         (query/kgram.py). Vocabulary-derived and static per index
-        generation — the stem_mates/term_thresholds artifact idiom;
-        persist=True commits it under the index root as the
-        ``kgram_index`` catalog table so future load()s pick it up
-        automatically on the first wildcard query, until a build
-        publishes new corpus stats (the table would miss new terms). A
-        purely physical
-        hint: expansion results are identical either way. Gram length
+        generation — the term_thresholds artifact idiom; persist=True
+        commits it under the index root as the ``kgram_index`` catalog
+        table so future load()s pick it up automatically on the first
+        wildcard query, until a build publishes new corpus stats (the
+        table would miss new terms; a build that changed nothing
+        publishes none). A purely physical hint: expansion results are
+        identical either way. Gram length
         is pinned to the serving default (kgram.KGRAM_K) so stored
         grams always match the patterns' query-side grams."""
         from pisa_spark.index.deletes import DELETED_TERM
@@ -1642,22 +1647,13 @@ class SearchEngine:
         expanded term set (term-literal filter below the decode,
         PushedFilters reaches the scan — the search_rm3 pass-2 shape).
 
-        The stem-mate lookup reads the ``stem_mates`` catalog table the
-        BUILD committed (index/lineage.py — the dictionary is corpus-
-        derived and static per generation, so it is built once at index
-        time, never per query): a pushed In(stem,…) scan bounded by the
-        query's stem classes, no join, no job over the postings
-        relation. Engines constructed directly from a relation (no
-        index root / pre-table index) fall back to deriving mates from
-        the postings term dictionary. The dictionary is read at the
-        CURRENT generation even on a time-travel load: an expansion
-        term absent from the served snapshot simply prunes away (its
-        df and postings come from the snapshot itself)."""
-        from pisa_spark.corpus import stem_s
-        from pisa_spark.index.lineage import SYNONYMS_TABLE
+        Stem mates are the other terms of the query terms' S-stem
+        classes in this engine's own vocabulary (_mates_for_stems): classes
+        of two or more terms, filter pseudo-terms never included. On a
+        time-travel load they come from the as-of vocabulary the engine
+        serves."""
         from pisa_spark.query.feedback import weighted_bm25_topk
         from pisa_spark.query.scorers import postings_to_tf
-        from pisa_spark.sources import catalog
 
         raw = parse_query(query) if isinstance(query, str) else dict(query)
         if raw.get("phrases"):
@@ -1680,39 +1676,7 @@ class SearchEngine:
             )
         q = self._normalize([raw])[0]
         terms = sorted(set(q["terms"]))
-        qstems = {
-            r["stem"]: r["term"]
-            for r in self.spark.createDataFrame(
-                [(t,) for t in terms], "term string"
-            )
-            .select("term", stem_s(F.col("term")).alias("stem"))
-            .collect()
-        }
-        if self._index_root is not None and catalog.table_exists(
-            self._index_root, SYNONYMS_TABLE
-        ):
-            mate_rows = (
-                catalog.read_table(
-                    self.spark, self._index_root, SYNONYMS_TABLE
-                )
-                .filter(F.col("stem").isin(sorted(qstems)))
-                .select("term")
-                .collect()
-            )
-            mates = {r["term"] for r in mate_rows} - set(terms)
-        else:
-            vocab = self.postings.select("term").distinct().select(
-                F.col("term").alias("synonym")
-            ).withColumn("vstem", stem_s(F.col("synonym")))
-            mates = {
-                r["synonym"]
-                for r in vocab.filter(
-                    F.col("vstem").isin(sorted(qstems))
-                    & ~F.col("synonym").isin(terms)
-                )
-                .select("synonym")
-                .collect()
-            }
+        mates = self._mates_for_stems({stem_s_py(t) for t in terms})
         v_rows = [(q["query_id"], t, 1.0) for t in terms] + [
             (q["query_id"], s, float(weight))
             for s in sorted(mates - set(terms))
@@ -1735,6 +1699,46 @@ class SearchEngine:
             # could silently return)
             exclude_ids=self._tombstone_ids,
         )
+
+    def _mates_for_stems(self, stems: set[str]) -> set[str]:
+        """Vocabulary terms whose S-stem is in ``stems``, over classes
+        of two or more terms without filter pseudo-terms (':'). The
+        classes are derived once per engine: in the driver from the
+        lexicon (corpus.stem_s_py), or, without one, as a cached
+        relation over the postings vocabulary that each call filters
+        to its stems."""
+        if self._lexicon is not None:
+            if self._stem_classes is None:
+                classes: dict[str, list[str]] = {}
+                for t in self._lexicon:
+                    if ":" not in t:
+                        classes.setdefault(stem_s_py(t), []).append(t)
+                self._stem_classes = {
+                    s: ts for s, ts in classes.items() if len(ts) >= 2
+                }
+            return {t for s in stems for t in self._stem_classes.get(s, ())}
+        if self._stem_class_df is None:
+            vocab = (
+                self.postings.select("term")
+                .filter(~F.col("term").contains(":"))
+                .distinct()
+                .withColumn("stem", stem_s(F.col("term")))
+            )
+            classes = (
+                vocab.groupBy("stem")
+                .agg(F.count(F.lit(1)).alias("n_mates"))
+                .filter(F.col("n_mates") >= 2)
+                .select("stem")
+            )
+            self._stem_class_df = vocab.join(classes, "stem").cache()
+        return {
+            r["term"]
+            for r in self._stem_class_df.filter(
+                F.col("stem").isin(sorted(stems))
+            )
+            .select("term")
+            .collect()
+        }
 
     def search_quantized(self, queries, k: int = 10) -> DataFrame:
         """Serve from the 8-bit quantized impact twin of the loaded

@@ -41,7 +41,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pisa_spark.corpus import stem_s, tokens_col
+from pisa_spark.corpus import tokens_col
 from pisa_spark.index.build import BLOCK_SIZE, build_postings, build_stats
 from pisa_spark.session import local_frame
 from pisa_spark.sources import catalog
@@ -55,7 +55,6 @@ STATS_SCHEMA = "n_docs long, avgdl double, total_terms long, span long"
 POSTINGS_TABLE = "postings"
 LINEAGE_TABLE = "lineage"
 STATS_TABLE = "corpus_stats"
-SYNONYMS_TABLE = "stem_mates"
 
 
 def latest_lineage_df(spark: SparkSession, index_root: str) -> DataFrame | None:
@@ -246,12 +245,16 @@ def build_index_resumable(
     commits only AFTER the last wave, so global stats never run AHEAD
     of data. A reader of a mid-upgrade index scores new+old buckets
     with the previous (still mutually consistent) n_docs/avgdl — a
-    bounded-staleness snapshot, never a torn one.
+    bounded-staleness snapshot, never a torn one. A build that changed
+    nothing commits nothing, corpus_stats included.
 
     fail_after_waves: test hook — raise after N waves to simulate a
     mid-build crash (the kill/rerun test of SURVEY §5.2 item 4).
 
-    Returns summary metrics {docs, postings, waves_run, buckets_done}.
+    Returns what the build already holds: {docs, waves_run, n_docs,
+    avgdl}, with docs == n_docs (the corpus this build indexed). The
+    per-bucket counts (postings, blocks, bytes_out) live in the lineage
+    table (latest_lineage).
     """
     if docs_df is None:
         # catalog read: a manifest-committed corpus (e.g. the streaming
@@ -460,58 +463,29 @@ def build_index_resumable(
             waves_run += 1
             if fail_after_waves is not None and waves_run >= fail_after_waves:
                 raise RuntimeError(f"simulated crash after wave {waves_run}")
-        # stem-mate dictionary for synonym expansion
-        # (engine.search_synonyms): corpus-derived and static per
-        # generation, so it commits at BUILD time — query time then does
-        # a pushed In(stem,…) lookup against it instead of a
-        # vocabulary-wide postings distinct per query (r4 verdict #4).
-        # Only stem classes with >=2 members are kept (the only rows
-        # expansion can use). Sized by the distinct VOCABULARY, not the
-        # postings — head-term skew is irrelevant here — and filter
-        # pseudo-terms (':' separator) never enter the dictionary.
-        vocab = (
-            toks.select(F.explode("tokens").alias("term"))
-            .filter(~F.col("term").contains(":"))
-            .distinct()
-            .withColumn("stem", stem_s(F.col("term")))
-        )
-        classes = (
-            vocab.groupBy("stem")
-            .agg(F.count(F.lit(1)).alias("n_mates"))
-            .filter(F.col("n_mates") >= 2)
-            .drop("n_mates")
-        )
-        catalog.write_table(
-            vocab.join(classes, "stem").select("stem", "term"),
-            index_root,
-            SYNONYMS_TABLE,
-        )
         # stats commit LAST: readers never see new global stats paired
-        # with buckets an interrupted run did not finish
-        catalog.write_table(
-            local_frame(
-                spark,
-                [(n_docs, avgdl, int(stats_row["total_terms"]), int(span))],
-                STATS_SCHEMA,
-            ),
-            index_root,
-            STATS_TABLE,
-        )
-        # summarize from latest-per-bucket rows (append-only table may
-        # hold superseded rows after incremental growth rebuilds),
-        # aggregated in Spark — no full-table collect
-        final = latest_lineage_df(spark, index_root).filter(
-            F.col("status") == "committed"
-        )
-        srow = final.agg(
-            F.sum("docs").alias("docs"),
-            F.sum("postings").alias("postings"),
-            F.count(F.lit(1)).alias("buckets"),
-        ).collect()[0]
+        # with buckets an interrupted run did not finish. A build that
+        # changed nothing publishes nothing: when the row equals the one
+        # the current snapshot published and no postings commit (wave
+        # or stale-bucket prune, from this run or a crashed earlier
+        # one) landed since, the snapshot stays, and so do the
+        # artifacts derived from it (term_thresholds, kgram_index,
+        # stopwords). The check reads two manifests, no Spark job; any
+        # mismatch, float noise in avgdl included, simply commits.
+        row = (n_docs, avgdl, int(stats_row["total_terms"]), int(span))
+        published = {
+            "row": list(row),
+            "postings_seq": catalog.current_seq(index_root, POSTINGS_TABLE),
+        }
+        if catalog.table_meta(index_root, STATS_TABLE) != published:
+            catalog.write_table(
+                local_frame(spark, [row], STATS_SCHEMA),
+                index_root,
+                STATS_TABLE,
+                meta=published,
+            )
         return {
-            "docs": int(srow["docs"] or 0),
-            "postings": int(srow["postings"] or 0),
-            "buckets_done": int(srow["buckets"]),
+            "docs": n_docs,
             "waves_run": waves_run,
             "n_docs": n_docs,
             "avgdl": avgdl,

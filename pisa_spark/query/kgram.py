@@ -100,8 +100,8 @@ def expand_patterns(
     ``kgram_index`` catalog table, engine.precompute_kgrams). When
     given, gram-bearing patterns read it with a pushed In(gram, ...)
     filter — only the patterns' gram rows leave storage, the per-query
-    vocabulary explode disappears entirely (the stem_mates /
-    term_thresholds serving idiom). vocab may then be None as long as
+    vocabulary explode disappears entirely (the term_thresholds
+    serving idiom). vocab may then be None as long as
     every pattern has grams."""
     from pyspark.sql import Window
 

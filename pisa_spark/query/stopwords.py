@@ -22,7 +22,7 @@ left join). Negation and attribute filters pass through untouched.
 Scale shape: the list is a block-METADATA aggregate (term, sum(n)) —
 never a decode — with output bounded by the df cut (hundreds of terms
 at any corpus size, Zipf); committed once per index generation as the
-``stopwords`` catalog table (the stem_mates/term_thresholds idiom) and
+``stopwords`` catalog table (the term_thresholds artifact idiom) and
 collected to the driver for O(1) per-query stripping.
 """
 

@@ -31,7 +31,11 @@ def worker() -> None:
     from pyspark.sql import functions as F
 
     from pisa_spark.corpus import tokens_col
-    from pisa_spark.index.lineage import build_index_resumable, load_index
+    from pisa_spark.index.lineage import (
+        build_index_resumable,
+        latest_lineage,
+        load_index,
+    )
     from pisa_spark.query.bm25f_quant import (
         bm25f_quantized_topk,
         build_bm25f_quantized,
@@ -73,7 +77,10 @@ def worker() -> None:
             docs_per_bucket=docs_per_bucket, wave_size=256,
         )
         out["docs"] = summary["docs"]
-        out["postings"] = summary["postings"]
+        out["postings"] = sum(
+            r["postings"] for r in latest_lineage(spark, root).values()
+            if r["status"] == "committed"
+        )
         out["build_s"] = round(time.perf_counter() - t0, 1)
 
         postings, stats = load_index(spark, root)

@@ -28,7 +28,11 @@ def worker() -> None:
     """Runs inside the taskset-pinned subprocess."""
     from pyspark.sql import functions as F
 
-    from pisa_spark.index.lineage import build_index_resumable, load_index
+    from pisa_spark.index.lineage import (
+        build_index_resumable,
+        latest_lineage,
+        load_index,
+    )
     from pisa_spark.query.bm25 import bm25_topk_maxscore, bm25_topk_wand
     from pisa_spark.session import get_spark
     from pisa_spark.sources import catalog
@@ -59,6 +63,10 @@ def worker() -> None:
             docs_per_bucket=docs_per_bucket, wave_size=256,
         )
         build_s = time.perf_counter() - t0
+        n_postings = sum(
+            r["postings"] for r in latest_lineage(spark, root).values()
+            if r["status"] == "committed"
+        )
 
         lin = catalog.read_table(spark, root, "lineage").filter(
             F.col("status") == "committed"
@@ -102,11 +110,11 @@ def worker() -> None:
         print(json.dumps({
             "cores": cores,
             "docs": summary["docs"],
-            "postings": summary["postings"],
+            "postings": n_postings,
             "buckets": int(bstats["buckets"]),
             "build_s": round(build_s, 1),
             "docs_per_s": round(summary["docs"] / build_s, 1),
-            "postings_per_s": round(summary["postings"] / build_s, 1),
+            "postings_per_s": round(n_postings / build_s, 1),
             "batch64_s": round(batch_s, 2),
             "batch64_qps": round(64 / batch_s, 1),
             "batch64_maxscore_s": round(batchms_s, 2),

@@ -60,7 +60,11 @@ def test_pages_to_index_end_to_end(spark, sf_dir, tmp_path):
     (doc ids live in url order, so compare score multisets per query,
     which are id-space independent)."""
     from pisa_spark.corpus import build_docs_from_pages, pages_from_documents
-    from pisa_spark.index.lineage import build_index_resumable, load_index
+    from pisa_spark.index.lineage import (
+        build_index_resumable,
+        latest_lineage,
+        load_index,
+    )
     from pisa_spark.query.bm25 import bm25_topk_wand
 
     pages = pages_from_documents(spark, sf_dir)
@@ -70,6 +74,10 @@ def test_pages_to_index_end_to_end(spark, sf_dir, tmp_path):
         spark, None, root, n_buckets=8, wave_size=8, docs_df=docs
     )
     assert s["docs"] == 500
+    assert sum(
+        r["docs"] for r in latest_lineage(spark, root).values()
+        if r["status"] == "committed"
+    ) == 500
 
     postings, stats = load_index(spark, root)
     q = [{"query_id": 0, "terms": ["data", "join"], "conjunctive": False}]

@@ -9,6 +9,7 @@ from pisa_spark.index.build import build_index_dataframes
 from pisa_spark.index.lineage import (
     build_index_resumable,
     committed_buckets,
+    latest_lineage,
     load_index,
 )
 from pisa_spark.query.bm25 import bm25_topk_wand
@@ -31,7 +32,7 @@ def test_kill_and_resume_identical(spark, sf_dir, tmp_path):
     # resume: only pending buckets are built
     summary = build_index_resumable(spark, sf_dir, root_a, n_buckets=8, wave_size=4)
     assert summary["waves_run"] == 1
-    assert summary["buckets_done"] == 8
+    assert len(committed_buckets(spark, root_a)) == 8
 
     # clean single-shot build for comparison
     build_index_resumable(spark, sf_dir, root_b, n_buckets=8, wave_size=8)
@@ -47,6 +48,54 @@ def test_kill_and_resume_identical(spark, sf_dir, tmp_path):
     # metrics are populated
     agg = lin.agg(F.sum("docs"), F.sum("postings"), F.sum("bytes_out")).collect()[0]
     assert agg[0] == 500 and agg[1] > 0 and agg[2] > 0
+
+
+def test_rerun_after_crash_on_last_wave_publishes_stats(
+    spark, sf_dir, tmp_path
+):
+    """A crash after the last wave leaves new postings under the old
+    corpus_stats; the rerun runs no wave but still publishes the stats
+    row, even when that row equals the old one. A rerun with nothing
+    new publishes nothing."""
+    corpus = str(tmp_path / "corpus_last")
+    idx = str(tmp_path / "idx_last")
+    full = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    full.filter(F.col("doc_id") < 448).write.parquet(
+        corpus + "/documents.parquet"
+    )
+    kw = dict(wave_size=8, docs_per_bucket=64)
+    build_index_resumable(spark, corpus, idx, **kw)
+    seq = catalog.current_seq(idx, "corpus_stats")
+    assert build_index_resumable(spark, corpus, idx, **kw)["waves_run"] == 0
+    assert catalog.current_seq(idx, "corpus_stats") == seq
+
+    # growth: one wave (bucket 7), crash after it, stats stay at 448
+    full.write.mode("overwrite").parquet(corpus + "/documents.parquet")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        build_index_resumable(spark, corpus, idx, fail_after_waves=1, **kw)
+    assert load_index(spark, idx)[1]["n_docs"] == 448
+    s = build_index_resumable(spark, corpus, idx, **kw)
+    assert s["waves_run"] == 0
+    stats = load_index(spark, idx)[1]
+    assert stats["n_docs"] == 500
+    seq = catalog.current_seq(idx, "corpus_stats")
+
+    # an edit that keeps every stat ('data' -> 'zzzz', same length):
+    # the crashed wave changed postings, so the rerun still commits
+    edited = full.withColumn(
+        "text",
+        F.when(
+            F.col("doc_id") == 10, F.regexp_replace("text", "data", "zzzz")
+        ).otherwise(F.col("text")),
+    )
+    edited.write.mode("overwrite").parquet(corpus + "/documents.parquet")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        build_index_resumable(spark, corpus, idx, fail_after_waves=1, **kw)
+    assert catalog.current_seq(idx, "corpus_stats") == seq
+    s = build_index_resumable(spark, corpus, idx, **kw)
+    assert s["waves_run"] == 0
+    assert catalog.current_seq(idx, "corpus_stats") > seq
+    assert load_index(spark, idx)[1] == stats
 
 
 def test_rerun_noop_and_loaded_index_queryable(spark, sf_dir, tmp_path):
@@ -146,7 +195,7 @@ def test_incremental_growth_appends_buckets(spark, sf_dir, tmp_path):
     s1 = build_index_resumable(
         spark, corpus, idx, wave_size=4, docs_per_bucket=64
     )
-    assert s1["docs"] == 300
+    assert s1["docs"] == 300 == _lineage_docs(spark, idx)
 
     # stage 2: full corpus lands (doc ids 0..499); the last prefix
     # bucket (doc range 256-319) changed and buckets 5..7 are new
@@ -154,7 +203,7 @@ def test_incremental_growth_appends_buckets(spark, sf_dir, tmp_path):
     s2 = build_index_resumable(
         spark, corpus, idx, wave_size=4, docs_per_bucket=64
     )
-    assert s2["docs"] == 500
+    assert s2["docs"] == 500 == _lineage_docs(spark, idx)
     # only the changed bucket (4: range 256-319) + new buckets rebuilt
     assert s2["waves_run"] == 1, s2
 
@@ -174,6 +223,14 @@ def test_incremental_growth_appends_buckets(spark, sf_dir, tmp_path):
         mem_postings, q, mem_stats["n_docs"], mem_stats["avgdl"], k=10
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, expect))
+
+
+def _lineage_docs(spark, root):
+    """Docs summed over the latest committed lineage row per bucket."""
+    return sum(
+        r["docs"] for r in latest_lineage(spark, root).values()
+        if r["status"] == "committed"
+    )
 
 
 def test_torn_first_write_invisible(spark, tmp_path):
@@ -496,12 +553,13 @@ def _build_jobs(spark, group, **kw):
 
 # Spark jobs of a refresh on the 500-doc fixture, measured on local[4]
 # and local[8]: change detection is one classification pass, global
-# stats one aggregate, and driver-made rows run no job of their own.
-# Re-adding a bookkeeping pass (a second detection stream, a per-wave
-# state aggregate, a split stats aggregate) pushes a count over its
-# bound.
-NOOP_REFRESH_JOBS = 19
-ONE_BUCKET_REFRESH_JOBS = 29
+# stats one aggregate, driver-made rows run no job of their own, a
+# build writes only the index (no synonym table, no summary re-read)
+# and a no-op rerun commits nothing. Re-adding a bookkeeping pass (a
+# second detection stream, a per-wave state aggregate, a split stats
+# aggregate, a vocabulary pass) pushes a count over its bound.
+NOOP_REFRESH_JOBS = 9
+ONE_BUCKET_REFRESH_JOBS = 20
 
 
 def test_refresh_job_counts_and_one_file_commits(spark, sf_dir, tmp_path):
@@ -525,6 +583,7 @@ def test_refresh_job_counts_and_one_file_commits(spark, sf_dir, tmp_path):
     full.write.mode("overwrite").parquet(corpus + "/documents.parquet")
     s, jobs = _build_jobs(spark, "pisa-refresh-append", **kw)
     assert s["waves_run"] == 1 and s["docs"] == 500
+    assert _lineage_docs(spark, idx) == 500
     assert jobs <= ONE_BUCKET_REFRESH_JOBS, jobs
     lin = catalog.read_table(spark, idx, "lineage")
     assert lin.filter(F.col("bucket") == 7).count() == 1

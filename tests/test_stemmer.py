@@ -4,7 +4,7 @@ stemmed index build where plural and singular share a posting list."""
 import pytest
 from pyspark.sql import functions as F
 
-from pisa_spark.corpus import stem_s, stemmed_tokens_col
+from pisa_spark.corpus import stem_s, stem_s_py, stemmed_tokens_col, tokens_col
 from pisa_spark.index.build import build_postings, term_frequencies
 
 
@@ -37,6 +37,32 @@ def test_stem_s_cases(spark):
     }
     for w, want in CASES:
         assert got[w] == want, (w, got[w], want)
+
+
+def test_stem_s_py_equals_column_stem_s(spark, sf_dir):
+    """The driver-side twin stems exactly like the column expression,
+    on the rule cases and on every term of the fixture corpus, each
+    also with every suffix the rules test appended."""
+    vocab = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select(F.explode(tokens_col(F.col("text"))).alias("w"))
+        .distinct()
+    )
+    suffixed = vocab.select(
+        F.explode(
+            F.array(*[F.concat("w", F.lit(x)) for x in ("", "s", "es", "ies")])
+        ).alias("w")
+    )
+    cases = spark.createDataFrame([(w,) for w, _ in CASES], "w string")
+    rows = (
+        suffixed.unionByName(cases)
+        .select("w", stem_s(F.col("w")).alias("s"))
+        .collect()
+    )
+    assert len(rows) == 4 * vocab.count() + len(CASES)
+    bad = [(r["w"], r["s"], stem_s_py(r["w"])) for r in rows
+           if stem_s_py(r["w"]) != r["s"]]
+    assert bad == []
 
 
 def test_stemmed_tokens_col(spark):

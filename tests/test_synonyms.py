@@ -95,33 +95,80 @@ def test_facade_matches_relation_path(spark, sf_dir, tmp_path_factory):
     with pytest.raises(ValueError, match="phrase"):
         eng.search_synonyms('"data table" fast')
 
-def test_stem_mates_table_committed_and_fallback_parity(
+def test_lexicon_stem_mates_and_fallback_parity(
     spark, sf_dir, tmp_path_factory
 ):
-    """The build commits the stem_mates dictionary (classes >= 2, no
-    pseudo-terms) and the engine serves synonym expansion from it;
-    an engine without an index root falls back to the postings-derived
-    vocabulary with identical results."""
+    """A loaded engine takes stem mates from its lexicon (classes >= 2,
+    no filter pseudo-terms); an engine without a lexicon derives them
+    from the postings vocabulary, with identical results."""
     from pisa_spark.engine import SearchEngine
-    from pisa_spark.index.lineage import SYNONYMS_TABLE
-    from pisa_spark.sources import catalog
 
-    root = str(tmp_path_factory.mktemp("synidx") / "idx")
-    eng = SearchEngine.build(spark, sf_dir, root, n_buckets=8, wave_size=8)
-    assert catalog.table_exists(root, SYNONYMS_TABLE)
-    dict_df = catalog.read_table(spark, root, SYNONYMS_TABLE)
-    assert sorted(dict_df.columns) == ["stem", "term"]
-    assert dict_df.filter(F.col("term").contains(":")).count() == 0
-    assert (
-        dict_df.groupBy("stem").count().filter("count < 2").count() == 0
+    # the fixture vocabulary holds no plurals: two docs gain 'tables'
+    # so 'table' has a mate, and two get lang values whose pseudo-
+    # terms share an S-stem ('lang:cats' -> 'lang:cat'), a class that
+    # must never serve
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .withColumn(
+            "text",
+            F.when(
+                F.col("doc_id").isin(5, 6),
+                F.concat(F.col("text"), F.lit(" tables")),
+            ).otherwise(F.col("text")),
+        )
+        .withColumn(
+            "lang",
+            F.when(F.col("doc_id") == 0, F.lit("cats"))
+            .when(F.col("doc_id") == 1, F.lit("cat"))
+            .otherwise(F.col("lang")),
+        )
     )
+    root = str(tmp_path_factory.mktemp("synidx") / "idx")
+    eng = SearchEngine.build(
+        spark, sf_dir, root, docs_df=docs, n_buckets=8, wave_size=8,
+        attribute_cols=["lang"],
+    )
+    assert {"lang:cat", "lang:cats"} <= set(eng._lexicon)
+    pseudo_stems = {"lang:cat", "lang:en", "lang:e"}
 
     def norm(rows):
         return sorted(
             (r["rank"], r["doc_id"], round(r["score"], 9)) for r in rows
         )
 
-    via_table = norm(eng.search_synonyms("data table", k=10).collect())
-    eng._index_root = None  # force the relation-vocabulary fallback
+    via_lexicon = norm(eng.search_synonyms("data table", k=10).collect())
+    plural = norm(eng.search_synonyms("tables", k=1000).collect())
+    assert len(plural) > 2  # 'tables' reaches the 'table' docs
+    assert eng._stem_classes and all(
+        len(ts) >= 2 and not any(":" in t for t in ts)
+        for ts in eng._stem_classes.values()
+    )
+    assert eng._mates_for_stems(pseudo_stems) == set()
+    assert eng._mates_for_stems({"table"}) == {"table", "tables"}
+    eng._lexicon = None  # force the postings-vocabulary fallback
     via_fallback = norm(eng.search_synonyms("data table", k=10).collect())
-    assert via_table == via_fallback
+    assert via_lexicon == via_fallback
+    assert norm(eng.search_synonyms("tables", k=1000).collect()) == plural
+    assert eng._stem_class_df is not None
+    assert eng._mates_for_stems(pseudo_stems) == set()
+    assert eng._mates_for_stems({"table"}) == {"table", "tables"}
+
+
+def test_loaded_synonyms_launch_no_job_before_collect(
+    spark, sf_dir, tmp_path_factory
+):
+    """On a load()ed engine, stem mates and the query's stems come from
+    the driver: planning a synonym search runs no Spark job."""
+    from pisa_spark.engine import SearchEngine
+
+    root = str(tmp_path_factory.mktemp("synjobs") / "idx")
+    eng = SearchEngine.build(spark, sf_dir, root, n_buckets=8, wave_size=8)
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-synonyms", "plan-synonyms")
+    try:
+        df = eng.search_synonyms("data tables", k=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("plan-synonyms") == []
+    assert df.collect()

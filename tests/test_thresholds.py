@@ -279,3 +279,24 @@ def test_stale_thresholds_after_growth_serve_unprimed(spark, tmp_path):
     grown.precompute_thresholds(k=5)
     fresh = SearchEngine.load(spark, root)
     assert _rows(fresh.search_batch(query, k=5, primed=True)) == base
+
+
+def test_noop_rebuild_keeps_thresholds_primed(spark, tmp_path):
+    """A rebuild that changes nothing publishes no new corpus stats, so
+    the threshold table derived from them still primes after a fresh
+    load, with the unprimed answer."""
+    from pisa_spark.index.lineage import STATS_TABLE
+    from pisa_spark.sources import catalog
+
+    root = str(tmp_path / "idx_noop")
+    eng = SearchEngine.build(spark, SF, root, n_buckets=8, wave_size=8)
+    eng.precompute_thresholds(k=10)
+    seq = catalog.current_seq(root, STATS_TABLE)
+    queries = ["dup", "dup data", "the"]
+    base = _rows(eng.search_batch(queries, k=10))
+    again = SearchEngine.build(spark, SF, root, n_buckets=8, wave_size=8)
+    assert catalog.current_seq(root, STATS_TABLE) == seq
+    normalized = again._normalize(queries)
+    dfs = again._term_dfs({t for q in normalized for t in q["terms"]})
+    assert again._primed_thresholds(normalized, 10, dfs)
+    assert _rows(again.search_batch(queries, k=10, primed=True)) == base
